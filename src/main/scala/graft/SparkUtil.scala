@@ -34,21 +34,21 @@ object SparkUtil {
     * profiling measured `ResolveDataSource` (directory listing + parquet
     * footer schema read) at ~80 ms per `spark.read.parquet` call — paid
     * by every query on every bench pass, ~60% of the per-query driver
-    * floor. Re-resolving an immutable path returns the same schema every
-    * time, so one resolution per session is the catalog-table semantics a
-    * production deployment gets anyway (resolve once, plan many). Only
-    * METADATA is memoized — every execution still scans the parquet
-    * bytes; Bench's per-pass clearCache() discipline is untouched. The
-    * same DataFrame instance serving several relations in one query is
-    * ordinary Spark usage (DeduplicateRelations re-aliases self-joins). */
-  private val tableMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * floor. Only METADATA is memoized — every execution still scans the
+    * parquet bytes; Bench's per-pass clearCache() discipline is untouched.
+    * The same DataFrame instance serving several relations in one query is
+    * ordinary Spark usage (DeduplicateRelations re-aliases self-joins).
+    *
+    * Only IMMUTABLE directories may be read through here: the memoized
+    * relation keeps the file listing and schema of its first read, so a
+    * directory rewritten mid-session would be served stale (read a
+    * mutable store with `spark.read.parquet` directly). The
+    * [[graft.queries.SessionMemo]] bounds the memo at 256 entries (FIFO)
+    * and drops a context's entries when it ends. */
+  private[graft] val tableMemo = new graft.queries.SessionMemo[DataFrame](256)
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // bound the memo: sessions minted and discarded mid-application
-    // (tests) would otherwise accumulate entries forever
-    if (tableMemo.size > 256) tableMemo.clear()
-    tableMemo.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      key => key._1.read.parquet(key._2))
+    val path = s"$dir/$name.parquet"
+    tableMemo.getOrBuild(spark, path)(spark.read.parquet(path))
   }
 }

@@ -121,9 +121,16 @@ object StreamBench {
       mod("erasure", erasePer, s""","compact":${fmt(eraseCompact)}""") +
       "}}"
     println(json)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/STREAMBENCH.json"), json + "\n")
-    catch { case _: Throwable => () }
+    // the checkout named by SPARK_GRAFT_REPO (graft.Bench's artifact
+    // variable), else the working directory: `sbt runMain` forks in the
+    // project base directory. A failed write warns instead of going stale.
+    val out = sys.env.getOrElse("SPARK_GRAFT_REPO", ".") + "/STREAMBENCH.json"
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
+    catch {
+      case t: Throwable =>
+        System.err.println(s"graft.StreamBench: WARNING could not write $out: " +
+          s"${t.getClass.getSimpleName}: ${t.getMessage}")
+    }
     spark.stop()
   }
 }

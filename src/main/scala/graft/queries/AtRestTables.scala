@@ -12,48 +12,63 @@ import org.apache.spark.sql.SparkSession
   * (one bucketed write) and the serving path (co-located / bucket-pruned
   * reads, zero Exchange).
   *
-  * Lifecycle, inherited from the q78 machinery it generalizes:
-  *   - keyed by the session OBJECT (identity), not a derived hash string
-  *     — identity hashes can collide across sessions;
-  *   - a context-end listener drops the ending context's entries and
-  *     their temp dirs, so a stopped context pins nothing;
-  *   - a FIFO size bound reclaims entries of sessions minted and
-  *     discarded mid-application (newSession() churn). Eviction only
-  *     UNREGISTERS — a concurrently-running query of the same JVM may
-  *     still be executing a plan that reads the evicted files, so the
-  *     physical delete is deferred to the owning context's end listener,
-  *     when no query of that context can be live.
+  * Lifecycle: a [[SessionMemo]] keyed by the session OBJECT. When a
+  * context ends, its entries' temp dirs are deleted. Its FIFO bound
+  * reclaims entries of sessions minted and discarded mid-application
+  * (newSession() churn). Eviction only UNREGISTERS — a
+  * concurrently-running query of the same JVM may still be executing a
+  * plan that reads the evicted files, so the physical delete is deferred
+  * to the owning context's end, when no query of that context can be
+  * live.
   */
 private[graft] object AtRestTables {
 
-  /** Bound on memoized (session, key) entries: sessions minted via
-    * newSession() and discarded mid-application would otherwise pin
-    * their temp tables (and the session objects) until context stop.
-    * Must comfortably exceed the number of DISTINCT at-rest keys one
-    * (session, sf dir) uses — 26 as of q310 (q78 / ivfidx / ivfincr /
-    * srcfmt / orcfmt / evpart / factbkt / aggmv / evrange / invidx /
-    * invpos / binfiles / upsert / zorder / hllmv / mvsnap / schevo /
-    * gdpr / docbloom / mmidx / mmgen / erasetxt / eraseann / eraseann2 /
-    * erasecmp / erasemm) — or a single Verify/Bench run FIFO-churns: the
-    * (MaxEntries+1)th insert evicts the 1st key's tables and the next
-    * query that needs them pays a full rebuild, every pass. Raised
-    * 32 → 48 in r16 when the erasure arc brought the census to 26 —
-    * the bound must stay comfortably ahead of the census, not within
-    * one arc of it. */
-  private val MaxEntries = 48
-
-  // (session, key) -> (registered table names, temp base dir)
-  private val once = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[String], String)]()
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[
-    (SparkSession, String)]()
-  private val hookedContexts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** (session, key) -> (registered table names, temp base dir).
+    *
+    * The FIFO bound (48) must comfortably exceed the number of DISTINCT
+    * at-rest keys one (session, sf dir) uses — 26 as of q310 (q78 /
+    * ivfidx / ivfincr / srcfmt / orcfmt / evpart / factbkt / aggmv /
+    * evrange / invidx / invpos / binfiles / upsert / zorder / hllmv /
+    * mvsnap / schevo / gdpr / docbloom / mmidx / mmgen / erasetxt /
+    * eraseann / eraseann2 / erasecmp / erasemm) — or a single
+    * Verify/Bench run FIFO-churns: the 49th insert evicts the 1st key's
+    * tables and the next query that needs them pays a full rebuild, every
+    * pass. Raised 32 → 48 in r16 when the erasure arc brought the census
+    * to 26 — the bound must stay comfortably ahead of the census, not
+    * within one arc of it. */
+  // evicted base dirs awaiting their context's end
   private val pendingDelete = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.ConcurrentLinkedQueue[String]]()
-  // per-(session, key) build locks — see the re-entrancy note in get()
-  private val buildLocks = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Object]()
+    org.apache.spark.SparkContext, java.util.Set[String]]()
+  private[graft] val memo = new SessionMemo[(Seq[String], String)](48,
+    onEvict = unregister,
+    onContextEnd = (ctx, dropped) => {
+      dropped.foreach(e => deleteRecursively(e._2))
+      val pend = pendingDelete.remove(ctx)
+      if (pend != null) pend.forEach(d => deleteRecursively(d))
+    })
+
+  /** The FIFO-eviction step: drop the entry's tables from the catalog and
+    * defer the physical delete of its base dir to its context's end
+    * (another thread of that context may still be mid-query against the
+    * files; unregistering is catalog-only). Table names are
+    * per-key-content (dataset-suffixed), so another live (session, key)
+    * entry can reference the same registrations — reclaim only when this
+    * was the last referent (otherwise leak conservatively; the survivor's
+    * own eviction or context end reclaims). A [[getPath]] entry registers
+    * no tables, so its dir is always its own. */
+  private def unregister(owner: SparkSession, dropped: (Seq[String], String)): Unit =
+    if (dropped._1.isEmpty || !memo.values.exists(_._1 == dropped._1)) {
+      // the catalog is context-scoped: a stopped owner's context already
+      // took its registrations with it
+      if (!owner.sparkContext.isStopped)
+        dropped._1.foreach { t =>
+          try owner.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () }
+        }
+      pendingDelete
+        .computeIfAbsent(owner.sparkContext,
+          _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
+        .add(dropped._2)
+    }
 
   /** Test-only fault seam: the real build closures call [[faultPoint]]
     * between their table writes (the hook is a no-op in production), so
@@ -111,91 +126,11 @@ private[graft] object AtRestTables {
     * absent. `build` receives a fresh temp base dir and must
     * `saveAsTable` each table it returns (option("path", s"$base/...")
     * so the files land under the reclaimable dir). */
-  def get(spark: SparkSession, key: String)(build: String => Seq[String]): Seq[String] = {
-    if (hookedContexts.add(spark.sparkContext.applicationId)) {
-      // the listener is registered on THIS context, so when it fires it
-      // is this context ending: drop only the entries whose session it
-      // owns (their table registrations die with it) and reclaim their
-      // temp dirs — entries of any other live context stay untouched
-      val ctx = spark.sparkContext
-      ctx.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            val it = once.entrySet().iterator()
-            while (it.hasNext) {
-              val e2 = it.next()
-              if (e2.getKey._1.sparkContext eq ctx) {
-                deleteRecursively(e2.getValue._2)
-                order.remove(e2.getKey)
-                it.remove()
-              }
-            }
-            buildLocks.keySet().removeIf(k => k._1.sparkContext eq ctx)
-            val pend = pendingDelete.remove(ctx.applicationId)
-            if (pend != null) {
-              var d = pend.poll()
-              while (d != null) { deleteRecursively(d); d = pend.poll() }
-            }
-            hookedContexts.remove(ctx.applicationId)
-          }
-        })
-    }
-    // NOT computeIfAbsent: builders legitimately re-enter this registry
-    // for their prerequisite layouts (q161's purge builds ON the q134
-    // partitioned table), and a nested computeIfAbsent on the same
-    // ConcurrentHashMap throws IllegalStateException("Recursive update")
-    // whenever the two keys land in the same bin — a hash-layout
-    // coincidence, so it fires order-dependently. Memoize with a
-    // per-key lock instead; nesting acquires a DIFFERENT key's lock and
-    // the prerequisite graph is acyclic, so no deadlock.
-    val kp = (spark, key)
-    val names = {
-      val hit = once.get(kp)
-      if (hit != null) hit._1
-      else buildLocks.computeIfAbsent(kp, _ => new Object).synchronized {
-        val again = once.get(kp)
-        if (again != null) again._1
-        else {
-          val base = java.nio.file.Files.createTempDirectory("graft-atrest-").toString
-          val built = timedBuild(key)(build(base))
-          once.put(kp, (built, base))
-          order.add(kp)
-          built
-        }
-      }
-    }
-    while (once.size > MaxEntries) {
-      val old = order.poll()
-      if (old == null) return names
-      val dropped = once.remove(old)
-      if (dropped != null) {
-        // table names are per-key-content (dataset-suffixed), so another
-        // live (session, key) entry can reference the same registrations
-        // — reclaim only when this was the last referent (otherwise leak
-        // conservatively; the survivor's own eviction/listener reclaims)
-        import scala.jdk.CollectionConverters._
-        val shared = once.values().asScala.exists(_._1 == dropped._1)
-        if (!shared) {
-          // unregister via the evicting caller's session when the entry
-          // shares its context (the catalog is context-scoped); otherwise
-          // the foreign context's own end listener reclaims it
-          if (old._1.sparkContext eq spark.sparkContext)
-            dropped._1.foreach { t =>
-              try spark.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () }
-            }
-          // deferred: another thread of the owning context may still be
-          // mid-query against these files — the context-end listener does
-          // the physical delete (unregistering above is catalog-only)
-          pendingDelete
-            .computeIfAbsent(old._1.sparkContext.applicationId,
-              _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
-            .add(dropped._2)
-        }
-      }
-    }
-    names
-  }
+  def get(spark: SparkSession, key: String)(build: String => Seq[String]): Seq[String] =
+    memo.getOrBuild(spark, key) {
+      val base = java.nio.file.Files.createTempDirectory("graft-atrest-").toString
+      (timedBuild(key)(build(base)), base)
+    }._1
 
   /** Path-only variant of [[get]] for at-rest artifacts that are plain
     * directories rather than catalog tables (q263's binary-blob store):
@@ -207,9 +142,8 @@ private[graft] object AtRestTables {
     while (true) {
       get(spark, key) { base => build(base); Seq.empty }
       // re-read the entry for its base dir; a FIFO eviction racing in
-      // between (MaxEntries churn) just means one more build pass
-      val hit = once.get((spark, key))
-      if (hit != null) return hit._2
+      // between (FIFO churn) just means one more build pass
+      memo.get(spark, key).foreach(hit => return hit._2)
     }
     throw new IllegalStateException("unreachable")
   }

@@ -389,83 +389,29 @@ object DedupQueries {
     * materialization below runs once, not once per consuming query.
     *
     * Lifecycle: entries keep the cached edge frame alongside the labels so
-    * [[invalidateComponentMemo]] can unpersist it. The key holds the
-    * SparkSession OBJECT (identity equality — SparkSession doesn't override
-    * equals), never a derived hash: identity hash codes aren't unique, so a
-    * hash-string key could serve one session a DataFrame bound to another
-    * (or to a GC'd session that happened to share the hash). The strong
-    * session reference is bounded THREE ways: the owning context's end
-    * listener drops its entries (so a stopped context's cached RDDs and
-    * sessions are never pinned by a long-lived JVM), a FIFO size bound of
-    * [[MemoMax]] unpersists the oldest entry when sessions are minted via
-    * newSession() and discarded mid-application, and a caller that
-    * rewrites the data under `dir` mid-session invalidates explicitly
-    * (Bench does, so each timed run measures the full pipeline standalone
-    * and per-query numbers stay order-independent). */
-  private final case class ComponentEntry(labels: DataFrame, edges: DataFrame)
-  private val componentMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), ComponentEntry]()
-  private val memoHookedContexts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val MemoMax = 8
-  private val memoOrder = new java.util.concurrent.ConcurrentLinkedQueue[
-    (org.apache.spark.sql.SparkSession, String)]()
+    * eviction and [[invalidateComponentMemo]] can unpersist it. The
+    * [[SessionMemo]] drops a stopped context's entries (their RDD caches
+    * die with it), its FIFO bound of 8 unpersists the oldest entry when
+    * sessions are minted via newSession() and discarded mid-application,
+    * and a caller that rewrites the data under `dir` mid-session
+    * invalidates explicitly (Bench does, so each timed run measures the
+    * full pipeline standalone and per-query numbers stay
+    * order-independent). */
+  private[graft] final case class ComponentEntry(labels: DataFrame, edges: DataFrame)
+  private[graft] val componentMemo = new SessionMemo[ComponentEntry](8,
+    onEvict = (_, e) => unpersistEdges(e))
+
+  private def unpersistEdges(e: ComponentEntry): Unit =
+    try e.edges.unpersist() catch { case _: Throwable => () }
 
   /** Drop all memoized component frames, unpersisting their edge caches. */
-  def invalidateComponentMemo(): Unit = {
-    val it = componentMemo.values().iterator()
-    while (it.hasNext) {
-      try it.next().edges.unpersist() catch { case _: Throwable => () }
-    }
-    componentMemo.clear()
-    memoOrder.clear()
-  }
+  def invalidateComponentMemo(): Unit =
+    componentMemo.clear().foreach(unpersistEdges)
 
-  private def componentLabels(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val key = (spark, dir)
-    val hit = componentMemo.get(key)
-    if (hit != null) return hit.labels
-    // Build (and run the eager count) OUTSIDE any map lock — it is a full
-    // Spark job, and holding a ConcurrentHashMap bin lock for its duration
-    // would serialize unrelated insertions behind it.
-    val entry = buildComponentEntry(spark, dir)
-    val raced = componentMemo.putIfAbsent(key, entry)
-    if (raced != null) { // another thread won; drop our duplicate cache
-      try entry.edges.unpersist() catch { case _: Throwable => () }
-      raced.labels
-    } else {
-      memoOrder.add(key)
-      // FIFO bound: discarded-session churn must not accumulate cached
-      // edge frames until context stop — unpersist the oldest past MemoMax
-      while (componentMemo.size > MemoMax) {
-        val old = memoOrder.poll()
-        if (old != null) {
-          val dropped = componentMemo.remove(old)
-          if (dropped != null)
-            try dropped.edges.unpersist() catch { case _: Throwable => () }
-        }
-      }
-      if (memoHookedContexts.add(spark.sparkContext.applicationId)) {
-        // the listener is registered on THIS context, so when it fires it
-        // is this context ending: drop only the entries whose session it
-        // owns (their RDD caches die with it) — another live context's
-        // memoized frames stay valid (multi-context JVMs are exotic, but
-        // a global clear would serve them dangling registrations)
-        val ctx = spark.sparkContext
-        ctx.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-              componentMemo.keySet().removeIf(k => k._1.sparkContext eq ctx)
-              memoOrder.removeIf(k => k._1.sparkContext eq ctx)
-              memoHookedContexts.remove(ctx.applicationId)
-            }
-          })
-      }
-      entry.labels
-    }
-  }
+  // the build (and its eager count, a full Spark job) runs under the
+  // memo's per-key lock, never a map bin lock
+  private def componentLabels(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    componentMemo.getOrBuild(spark, dir)(buildComponentEntry(spark, dir)).labels
 
   private def buildComponentEntry(s: org.apache.spark.sql.SparkSession,
                                   d: String): ComponentEntry = {

@@ -85,20 +85,18 @@ object QueryBase {
     * Bench/Verify holds at most one storage entry per site instead of
     * accumulating one per run. Unpersisting a superseded frame is always
     * correctness-safe (Spark recomputes from lineage — unlike at-rest
-    * FILES, nothing can dangle), a context-end listener drops the ending
-    * context's entries, and a FIFO bound reclaims entries of sessions
-    * minted via newSession() and discarded mid-application. */
-  private val tcacheMap = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val tcacheOrder = new java.util.concurrent.ConcurrentLinkedQueue[
-    (SparkSession, String)]()
-  private val tcacheHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val TcacheMax = 64
+    * FILES, nothing can dangle). The [[SessionMemo]] drops an ending
+    * context's entries (their cached RDDs die with it) and its FIFO bound
+    * unpersists entries of sessions minted via newSession() and
+    * discarded mid-application. */
+  private[graft] val tcacheMemo = new SessionMemo[DataFrame](64,
+    onEvict = (_, df) => unpersistQuietly(df))
+
+  private def unpersistQuietly(df: DataFrame): Unit =
+    try df.unpersist() catch { case _: Throwable => () }
 
   def tcache(df: DataFrame, site: String): DataFrame = {
     val spark = df.sparkSession
-    val key = (spark, site)
     // TRUE MEMO HIT: when the site re-derives the SAME logical plan (the
     // 8-query recall ladder re-building the identical exact-truth frame,
     // a re-probed band frame, …), return the EXISTING frame instead of
@@ -109,7 +107,7 @@ object QueryBase {
     // when a clearCache() dropped it (Bench's standalone-timing
     // discipline is unchanged: it clears between queries, so a memo hit
     // still recomputes inside the timed query exactly as before).
-    val hit = tcacheMap.get(key)
+    val hit = tcacheMemo.get(spark, site).orNull
     if (hit != null && ((hit eq df) ||
         hit.queryExecution.analyzed.sameResult(df.queryExecution.analyzed))) {
       // re-register only when a clearCache() actually dropped it — an
@@ -125,37 +123,8 @@ object QueryBase {
     // the old object after cache() would remove the entry the new cache()
     // call just created (or no-opped onto), leaving the site uncached on
     // every run but the first.
-    val prev = tcacheMap.put(key, df)
-    if (prev != null && (prev ne df))
-      try prev.unpersist() catch { case _: Throwable => () }
-    val cached = df.cache()
-    if (prev == null) {
-      tcacheOrder.add(key)
-      while (tcacheMap.size > TcacheMax) {
-        val old = tcacheOrder.poll()
-        if (old != null) {
-          val dropped = tcacheMap.remove(old)
-          if (dropped != null)
-            try dropped.unpersist() catch { case _: Throwable => () }
-        }
-      }
-    }
-    if (tcacheHooked.add(spark.sparkContext.applicationId)) {
-      // registered on THIS context — when it fires, this context is
-      // ending and its cached RDDs die with it; other live contexts'
-      // entries stay (the componentMemo/AtRestTables discipline)
-      val ctx = spark.sparkContext
-      ctx.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            tcacheMap.keySet().removeIf(k => k._1.sparkContext eq ctx)
-            tcacheOrder.removeIf(k => k._1.sparkContext eq ctx)
-            tcacheHooked.remove(ctx.applicationId)
-          }
-        })
-    }
-    cached
+    tcacheMemo.put(spark, site, df).filter(_ ne df).foreach(unpersistQuietly)
+    df.cache()
   }
 
   /** Drop a [[tcache]] site eagerly: unpersist the frame and free its
@@ -165,13 +134,8 @@ object QueryBase {
     * its working frames should not sit in the 64-slot registry holding
     * memory until FIFO eviction. Safe at any time — a later tcache on the
     * same site just re-caches. */
-  def tcacheDrop(spark: SparkSession, site: String): Unit = {
-    val key = (spark, site)
-    val dropped = tcacheMap.remove(key)
-    tcacheOrder.remove(key)
-    if (dropped != null)
-      try dropped.unpersist() catch { case _: Throwable => () }
-  }
+  def tcacheDrop(spark: SparkSession, site: String): Unit =
+    tcacheMemo.remove(spark, site).foreach(unpersistQuietly)
 
   /** Repartition a small single-file table before UDF-heavy work: the
     * testdata tables are one parquet file each, so Spark plans ONE input

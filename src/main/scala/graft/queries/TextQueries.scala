@@ -1534,10 +1534,11 @@ object TextQueries {
       val declared = EstateLedgerClasses.map(_._1).toSet
       // the inventory is STRUCTURAL: a declared class with no measure (or
       // a measure no class) must fail the build, not shrink the census
-      require(measured == declared &&
-          rowMeasures.keySet.intersect(aggMeasures.keySet).isEmpty,
+      val both = rowMeasures.keySet.intersect(aggMeasures.keySet)
+      require(measured == declared && both.isEmpty,
         s"estate ledger drift — unmeasured: ${(declared -- measured).toSeq.sorted}; " +
-          s"undeclared: ${(measured -- declared).toSeq.sorted}")
+          s"undeclared: ${(measured -- declared).toSeq.sorted}; " +
+          s"measured twice (row and agg): ${both.toSeq.sorted}")
       // ONE count aggregation for every row-measured class (r19): each
       // branch contributes its leaked rows tagged with the class label,
       // the union aggregates once (partial counts fold map-side inside

@@ -11,7 +11,7 @@ import QueryBase._
   * brute-force cosine top-k as the exact baseline, and a random-hyperplane
   * (sign-projection) LSH bucketing as the scale path.
   *
-  * Cosine is computed in DOUBLE in ascending index order on both sides â
+  * Cosine is computed in DOUBLE in ascending index order on both sides —
   * DuckDB's builtin list_cosine_similarity accumulates in float and does
   * NOT match; the oracle uses an explicit list_transform formulation that
   * is bit-identical to the Scala loop.
@@ -25,11 +25,11 @@ import QueryBase._
   */
 object VectorQueries {
 
-  /** Deterministic Â±1 hyperplane signs (4 tables Ã 8 planes Ã 64 dims)
-    * from a fixed LCG â embedded into the oracle SQL from these same
+  /** Deterministic ±1 hyperplane signs (4 tables × 8 planes × 64 dims)
+    * from a fixed LCG — embedded into the oracle SQL from these same
     * values. Multi-table LSH: each table is an independent 8-bit bucket
     * function; a pair is a candidate if ANY table buckets them together,
-    * trading a constant factor of work for ~NumTablesÃ recall. The banks
+    * trading a constant factor of work for ~NumTables× recall. The banks
     * live in [[graft.functions.VectorCodegenOps]] next to the native
     * bucket kernel; these aliases keep the oracle-SQL embedding reading
     * from the same arrays. */
@@ -41,7 +41,7 @@ object VectorQueries {
   /** Near-dup (q44) plane-count derivation: buckets must GROW with the
     * corpus or in-bucket pair counts grow quadratically. Base 8 bits up to
     * [[PlanesBaseCap]] vectors, +1 bit per corpus doubling, capped at
-    * [[MaxPlanes]] â an exact integer threshold ladder so Spark and the
+    * [[MaxPlanes]] — an exact integer threshold ladder so Spark and the
     * oracle SQL derive bit-identical counts (float log2 would not be
     * portable). ~64-vector average buckets at every scale. */
   val MaxPlanes: Int = graft.functions.VectorCodegenOps.MaxPlanes
@@ -59,12 +59,12 @@ object VectorQueries {
     }.mkString(" ")
     s"(CASE $whens ELSE $MaxPlanes END)"
   }
-  /** Sign bank for the derived-plane near-dup hash â sized for the cap,
+  /** Sign bank for the derived-plane near-dup hash — sized for the cap,
     * distinct seed so the fixed-plane probe tables (q41/q42) keep their
     * round-1 hash functions. */
   val SignsX: Array[Array[Double]] = graft.functions.VectorCodegenOps.SignsX
 
-  /** Native codegen cosine (graft.functions.CosineSimExpr) â the identical
+  /** Native codegen cosine (graft.functions.CosineSimExpr) — the identical
     * double-accumulation loop the original UDF ran, minus the per-row
     * Seq[Float] boxing and UDF invocation; candidate scoring stays inside
     * WholeStageCodegen. */
@@ -75,7 +75,7 @@ object VectorQueries {
   /** Native codegen bucket keys (graft.functions.LshBucketsExpr): all
     * NumTables keys, table id encoded in the high bits so keys from
     * different tables never join. The identical double-accumulation loop
-    * the former Scala UDFs ran, minus the per-row Seq[Float] boxing â
+    * the former Scala UDFs ran, minus the per-row Seq[Float] boxing —
     * corpus hashing stays inside WholeStageCodegen. */
   private def bucketsCol(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     graft.functions.VectorFunctions.lsh_buckets(e, 0, NumPlanes, NumPlanes)
@@ -89,7 +89,7 @@ object VectorQueries {
   private val QueryCount = 10 // vec_id < 10 are the query vectors
 
   /** q302 hybrid-retrieval geometry: query docs (ids shared between the
-    * documents and embeddings tables â the q98 correspondence), per-query
+    * documents and embeddings tables — the q98 correspondence), per-query
     * term count, per-list candidate depth, and the RRF constant (60 is
     * the published default). ONE place, embedded into the oracle SQL. */
   private val HybridQueries = 3L
@@ -98,7 +98,7 @@ object VectorQueries {
   private val RrfC = 60
 
   /** Per-query top-[[HybridDepth]] with EXACT rank values and no
-    * corpus-sized window task â [[QueryBase.saltedTopK]] on a (query_id,
+    * corpus-sized window task — [[QueryBase.saltedTopK]] on a (query_id,
     * doc_id, sc) frame; rank values are bit-identical to the direct
     * window the oracle replays. */
   private def hybridTopK(scored: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
@@ -114,7 +114,7 @@ object VectorQueries {
   private val RerankC = 50
 
   /** k-means / semantic-dedup clustering constants (q65/q66): K fixed seed
-    * centroids (the first K vectors â deterministic "init"), a bounded
+    * centroids (the first K vectors — deterministic "init"), a bounded
     * SemDeDup comparison window, and the near-dup cosine floor (shared
     * with the oracle via dlit). */
   private val KmeansK = 8
@@ -125,10 +125,10 @@ object VectorQueries {
     * centroid inside ONE projection (`transform` + `array_max` over
     * struct(ccos, -cent_id)) so the assignment never leaves the scan
     * stage. The former formulation joined the corpus against the centroid
-    * ROWS and ranked with a window â a shuffle of nÂ·K rows each carrying
+    * ROWS and ranked with a window — a shuffle of n·K rows each carrying
     * the full embedding, 8-32 corpus copies through the exchange at scale.
     * Struct max is lexicographic, so max(ccos, -cent_id) = highest rounded
-    * cosine, ties toward the LOWEST centroid id â the exact ordering of
+    * cosine, ties toward the LOWEST centroid id — the exact ordering of
     * the old `ORDER BY ccos DESC, cent_id` rank (and of the unchanged
     * oracle SQL). */
   private def assignNearest(emb: org.apache.spark.sql.DataFrame,
@@ -146,7 +146,7 @@ object VectorQueries {
   }
 
   /** Shared q65/q66 cluster assignment: nearest of the K seed centroids by
-    * rounded cosine, ties toward the lowest centroid id â via the map-side
+    * rounded cosine, ties toward the lowest centroid id — via the map-side
     * [[assignNearest]] argmax (no shuffle between the embeddings scan and
     * the assignment; `KmeansAssignPlanSpec` pins the plan shape). */
   private[queries] def kmeansAssign(spark: org.apache.spark.sql.SparkSession,
@@ -159,8 +159,8 @@ object VectorQueries {
 
   /** IVF coarse-quantizer budget: the centroid COUNT is fixed (stride =
     * corpus_count / budget, deterministic "training" by id sampling), so
-    * assignment work is O(nÂ·budget) at every scale. A stride constant
-    * would make |centroids| â n and assignment quadratic â the round-1
+    * assignment work is O(n·budget) at every scale. A stride constant
+    * would make |centroids| ∝ n and assignment quadratic — the round-1
     * design flaw this replaces. */
   private[queries] val CentroidBudget = 32L
 
@@ -168,19 +168,19 @@ object VectorQueries {
     * q104/q105): Dim split into [[PqM]] subspaces of [[PqSubDim]] dims;
     * per-subspace codebook TRAINED by [[PqIters]] deterministic Lloyd
     * iterations from seed centroids (the subvectors of the first [[PqK]]
-    * corpus vectors â q65's seed-init discipline), so the oracle can
+    * corpus vectors — q65's seed-init discipline), so the oracle can
     * replay the identical iterations. Raw embeddings have per-8-dim-block
     * structure the OPQ permutation exploits, so this family keeps the
     * coarse m=8 grid its measured OPQ gains were established on. The
     * residual path uses its own finer [[ResidPqM]] geometry below. PqK
-    * must stay â¤ the smallest test corpus (50 vectors at sf0.001) so the
+    * must stay ≤ the smallest test corpus (50 vectors at sf0.001) so the
     * seed set is always full. */
   private val PqM = 8
   private val PqSubDim = Dim / PqM // 8
   private val PqK = 32
   private val PqIters = 2
 
-  /** Residual-path PQ geometry (q94/q99-q101, q127-q129) â per-INDEX
+  /** Residual-path PQ geometry (q94/q99-q101, q127-q129) — per-INDEX
     * geometry, the FAISS discipline: the residual cloud after coarse
     * quantization is near-isotropic with little per-subspace structure,
     * so finer subspaces (m=32, 2 dims each) cut quantization error where
@@ -188,15 +188,15 @@ object VectorQueries {
     * sf0.01 by the driver-side replicate-then-scan probe (r10): at
     * nprobe=3, m=8 reads 0.20 while (k=48, iters=3, k=64-equivalent)
     * all read 0.16-0.20; m=32 reads 0.24 (np1 0.10, np5 0.32) against
-    * the 0.16/0.30/0.44 routing ceilings â quantization now costs 0.06
+    * the 0.16/0.30/0.44 routing ceilings — quantization now costs 0.06
     * of the 0.30 np3 ceiling instead of 0.10. m=64 reads 0.26 but
     * SubDim=1 degenerates PQ into scalar quantization (q112's SQ8
     * already covers that point). The non-residual family (q89/q90/
-    * q104/q105) keeps [[PqM]]=8 â its measured OPQ facts depend on it. */
+    * q104/q105) keeps [[PqM]]=8 — its measured OPQ facts depend on it. */
   private val ResidPqM = 32
   private val ResidSubDim = Dim / ResidPqM // 2
 
-  /** Rounded squared-L2 between two vector slices â double accumulation in
+  /** Rounded squared-L2 between two vector slices — double accumulation in
     * ascending index order (the same sequential fold DuckDB's list_sum
     * runs, see cosSql). */
   private def pqDist(a: org.apache.spark.sql.Column,
@@ -207,7 +207,7 @@ object VectorQueries {
       lit(0.0), (acc, v) => acc + v), 6)
 
   /** Every (vector, subspace) slice: (vec_id, [extra...], s, sv). The
-    * slice geometry lives ONLY here â q94 threads its IVF cell through as
+    * slice geometry lives ONLY here — q94 threads its IVF cell through as
     * an extra column rather than re-implementing the explode. */
   private def pqSub(m: Int)(emb: org.apache.spark.sql.DataFrame,
                     extra: String*): org.apache.spark.sql.DataFrame = {
@@ -220,16 +220,16 @@ object VectorQueries {
   }
 
   /** Per-subspace argmin code against a packed 1-row codebook broadcast:
-    * lexicographic struct-min over (rounded distance, centroid id) â the
+    * lexicographic struct-min over (rounded distance, centroid id) — the
     * assignNearest discipline, ties toward the lowest centroid id, and the
     * exact ordering of the oracle's `ORDER BY dist, cent_id` rank. */
   private def pqAssign(sub: org.apache.spark.sql.DataFrame,
                        cb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // pack the codebook PER SUBSPACE and broadcast-join on s, so each
-    // (vector, subspace) row scans only its own k centroids â the former
-    // one-row pack re-filtered all mÂ·k entries per row, which at the
-    // residual geometry (m=32 â 1024 entries) multiplied assignment work
-    // 32Ã for no reason
+    // (vector, subspace) row scans only its own k centroids — the former
+    // one-row pack re-filtered all m·k entries per row, which at the
+    // residual geometry (m=32 → 1024 entries) multiplied assignment work
+    // 32× for no reason
     val packed = cb.groupBy("s")
       .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cbs"))
     // preserve the caller's columns (q94 threads the IVF cell through the
@@ -245,11 +245,11 @@ object VectorQueries {
     * deterministic Lloyd iterations per subspace. Seeds = the subvectors
     * of the first [[PqK]] corpus vectors; each iteration's assignment =
     * [[pqAssign]] against the broadcast previous codebook; update = the
-    * per-(subspace, cell, dim) combinable mean of the q65 k-means step â
+    * per-(subspace, cell, dim) combinable mean of the q65 k-means step —
     * partial sums combine map-side, so each update shuffle carries at
-    * most PqMÂ·PqKÂ·PqSubDim rows at any corpus size. A cell left empty by
+    * most PqM·PqK·PqSubDim rows at any corpus size. A cell left empty by
     * an assignment keeps its PREVIOUS centroid (LEFT-join coalesce), so
-    * the codebook always has PqMÂ·PqK entries. All arithmetic is
+    * the codebook always has PqM·PqK entries. All arithmetic is
     * pround/xsum-quantized so the oracle replays the iterations
     * bit-for-bit (PqTrainingSpec cross-checks the means brute-force). */
   private[queries] def pqCodebook(spark: org.apache.spark.sql.SparkSession,
@@ -257,33 +257,33 @@ object VectorQueries {
     pqCodebookFrom(spread(table(spark, dir, "embeddings")))
 
   /** [[pqCodebook]] generalized over its training input: any frame with
-    * (vec_id, embedding) â q94/q100 train a codebook on IVF RESIDUALS
+    * (vec_id, embedding) — q94/q100 train a codebook on IVF RESIDUALS
     * (embedding: array<double>) through the identical Lloyd iterations.
     * Extra caller columns (the IVF cell) are dropped by [[pqSub]]'s
     * projection, so the training pass never shuffles them. */
   private def pqCodebookFrom(src: org.apache.spark.sql.DataFrame, m: Int = PqM)
       : org.apache.spark.sql.DataFrame = {
     val spark = src.sparkSession
-    // Lloyd state lives on the DRIVER between iterations â the MLlib
+    // Lloyd state lives on the DRIVER between iterations — the MLlib
     // KMeans shape, and the r18 optimization of the former single-lineage
-    // formulation: the codebook is â¤ mÂ·[[PqK]] rows BY CONSTRUCTION at
+    // formulation: the codebook is ≤ m·[[PqK]] rows BY CONSTRUCTION at
     // any corpus size (m, k are geometry constants), so collecting it is
     // bounded, and re-literalizing it per round keeps every iteration's
-    // plan SHALLOW â one aggregate over the cached subvector frame
+    // plan SHALLOW — one aggregate over the cached subvector frame
     // against a broadcast literal codebook. The lazy formulation nested
     // each round's assignment inside the next round's plan: q94's r18
     // capture measured a 2,728-operator plan with 296 Exchanges whose
     // corpus-side subtree (IVF residuals included) replayed once per
-    // round. Arithmetic is UNCHANGED â the same pqAssign / pround / xsum
+    // round. Arithmetic is UNCHANGED — the same pqAssign / pround / xsum
     // expressions produce the means, doubles round-trip collect exactly,
     // and empty cells keep their previous centroid exactly as the old
-    // left-join coalesce did â so the oracle still replays the
+    // left-join coalesce did — so the oracle still replays the
     // iterations bit-for-bit (PqTrainingSpec's driver-side recompute
     // pins the values).
     // site key carries the geometry: the m=PqM (embeddings) and
     // m=ResidPqM (residuals) callers alternate in the recall ladder, and
     // a shared site made each switch evict the other's cached subvector
-    // frame (tcache replaces on plan mismatch) â r18 ADVICE
+    // frame (tcache replaces on plan mismatch) — r18 ADVICE
     val sub = tcache(pqSub(m)(src), s"vq:subtrain:$m")
     def literal(rows: Array[(Int, Long, Seq[Double])]) = {
       import spark.implicits._
@@ -296,13 +296,13 @@ object VectorQueries {
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
     // per-dim means in ONE aggregation per round (the subspace dim is a
     // geometry constant, so the agg is sd columns wide instead of
-    // posexplode-fanning nÂ·m rows to nÂ·mÂ·sd and paying a second
-    // per-(s, cent) exchange to re-pack them) â same xsum/count/pround
+    // posexplode-fanning n·m rows to n·m·sd and paying a second
+    // per-(s, cent) exchange to re-pack them) — same xsum/count/pround
     // ops per (group, dim) value multiset, so the means are bit-identical
     val sd = cb.headOption.map(_._3.length).getOrElse(0)
     // the wide per-dim mean divides by count(lit(1)), which is only the
     // old posexplode form's divisor when EVERY subvector has exactly sd
-    // elements â a ragged embedding would silently drift the mean (or
+    // elements — a ragged embedding would silently drift the mean (or
     // NPE opaquely on an all-null dim). Guard folded into the SAME
     // aggregate (two extra tiny columns, no extra job): min/max subvector
     // size per group, checked loud at the collect. r18 ADVICE.
@@ -317,7 +317,7 @@ object VectorQueries {
         .agg(dimAggs.head, dimAggs.tail: _*)
         .collect().map { r =>
           require(r.getInt(2 + sd) == sd && r.getInt(3 + sd) == sd,
-            s"pqCodebookFrom: ragged subvector in subspace ${r.getInt(0)} â " +
+            s"pqCodebookFrom: ragged subvector in subspace ${r.getInt(0)} — " +
               s"sizes ${r.getInt(2 + sd)}..${r.getInt(3 + sd)}, expected $sd " +
               "(every training embedding must have the declared geometry)")
           (r.getInt(0), r.getLong(1)) -> (0 until sd).map(i => r.getDouble(2 + i))
@@ -332,22 +332,22 @@ object VectorQueries {
   }
 
   /** Production IVF probe width (q100/q101): each query probes its
-    * [[NProbe]] nearest coarse cells instead of 1 â the latency/recall
+    * [[NProbe]] nearest coarse cells instead of 1 — the latency/recall
     * knob FAISS exposes as nprobe. ONE constant shared with the oracle
     * (`rn <= NProbe` in the ranked-cells CTE). */
   private val NProbe = 3
 
   /** The wide end of the latency/recall knob (q133): probing 5 of the ~32
     * coarse cells. Measured ladder at sf0.01: 0.10 (np1) < 0.24 (np3) <
-    * 0.32 (np5) against routing ceilings 0.16/0.30/0.44 â each
+    * 0.32 (np5) against routing ceilings 0.16/0.30/0.44 — each
     * increment buys recall linearly in probed-cell count while the
     * corpus-side work stays proportional to the probed cells' population
     * (the knob a serving deployment turns per latency budget). */
   private val NProbeWide = 5
 
-  /** IVF residual per corpus vector: `x â centroid(cell)`, computed
-    * map-side against the broadcast â¤[[CentroidBudget]]-row centroid
-    * table. floatâdouble widening is exact and double subtraction is
+  /** IVF residual per corpus vector: `x − centroid(cell)`, computed
+    * map-side against the broadcast ≤[[CentroidBudget]]-row centroid
+    * table. float→double widening is exact and double subtraction is
     * IEEE-deterministic, so the oracle's `list_transform` replays it
     * bit-for-bit with NO rounding step. Output (vec_id, cell,
     * embedding: array<double>) feeds [[pqCodebookFrom]] / [[pqSub]]
@@ -362,7 +362,7 @@ object VectorQueries {
 
   /** Top-[[NProbe]]-cells routing for the query side: rank the broadcast
     * centroid array by (rounded cosine DESC, cent_id) INSIDE one
-    * projection (array_sort over (-ccos, cent_id) structs â ascending
+    * projection (array_sort over (-ccos, cent_id) structs — ascending
     * lexicographic struct order IS that ranking) and explode the first
     * `nprobe`. The fan-out lives entirely on the broadcast/query side,
     * the q53 multi-probe discipline: the corpus is untouched, and
@@ -381,24 +381,24 @@ object VectorQueries {
       .select(col("vec_id"), col("embedding"), col("pr.cent_id").as("cell"))
   }
 
-  /** True IVFADC (JÃ©gou et al.'s IVF + PQ serving layout, both realism
-    * knobs in): coarse-quantize, PQ-encode the RESIDUAL `x â
+  /** True IVFADC (Jégou et al.'s IVF + PQ serving layout, both realism
+    * knobs in): coarse-quantize, PQ-encode the RESIDUAL `x −
     * centroid(cell)` with a codebook TRAINED on residuals, and probe the
     * `nprobe` nearest cells per query with a per-(query, probed-cell)
-    * residual LUT â within a cell, `(qâc) â code(xâc)` approximates
-    * `qâx`, which is what makes coarse+fine quantization compose at high
+    * residual LUT — within a cell, `(q−c) − code(x−c)` approximates
+    * `q−x`, which is what makes coarse+fine quantization compose at high
     * recall. Scale shape unchanged from the non-residual version: the
     * residual subtraction and both encodes are map-side against broadcast
     * tables, corpus rows reach the probe join as (vec_id, cell, s, code)
-    * â one scan, zero corpus-side shuffles before the final per-candidate
-    * sum; the LUT is â¤ queriesÂ·nprobeÂ·PqMÂ·PqK rows, broadcast. A corpus
+    * — one scan, zero corpus-side shuffles before the final per-candidate
+    * sum; the LUT is ≤ queries·nprobe·PqM·PqK rows, broadcast. A corpus
     * vector lives in exactly ONE inverted list and the probed cells are
     * distinct, so no candidate dedup is needed. */
-  /** The IVFADC build artifacts as live frames â coarse centroids
-    * (â¤[[CentroidBudget]] rows), the residual PQ codebook (PqMÂ·PqK rows),
+  /** The IVFADC build artifacts as live frames — coarse centroids
+    * (≤[[CentroidBudget]] rows), the residual PQ codebook (PqM·PqK rows),
     * and the per-vector PQ codes (vec_id, cell, s, code). `corpusPred`
     * restricts the TRAINING corpus (q129's incremental variant trains on
-    * the pre-batch corpus only); everything â stride, centroids, seeds â
+    * the pre-batch corpus only); everything — stride, centroids, seeds —
     * derives from the restricted view so the oracle replays it with one
     * WHERE. */
   private def ivfBuildFrames(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -415,8 +415,8 @@ object VectorQueries {
       .select(col("vec_id"), col("embedding"), col("cell"))
     // deliberately NOT cached: the residual frame is recomputed by each
     // Lloyd assignment, but measured at sf0.1 a .cache() here is a net
-    // LOSS (~+0.4 s on q94) â the recompute is one scan + broadcast
-    // argmax, cheaper than materializing nÃ64 doubles and breaking the
+    // LOSS (~+0.4 s on q94) — the recompute is one scan + broadcast
+    // argmax, cheaper than materializing n×64 doubles and breaking the
     // codegen pipeline around them. At cluster scale the BUILD job
     // persists residuals once to disk instead (the q127 table write).
     val resid = residuals(withCell, cents)
@@ -429,7 +429,7 @@ object VectorQueries {
     * frames for q94/q100, persisted tables for q128): route each query to
     * its `nprobe` nearest cells, build the per-(query, probed-cell)
     * residual LUT against the broadcast codebook, and scan the code
-    * tuples via the broadcast-LUT equi-join â the code side never
+    * tuples via the broadcast-LUT equi-join — the code side never
     * shuffles before the final bounded per-candidate sum. */
   private def ivfProbe(queries: org.apache.spark.sql.DataFrame,
                        cents: org.apache.spark.sql.DataFrame,
@@ -458,24 +458,24 @@ object VectorQueries {
   private def ivfAdcResidual(spark: org.apache.spark.sql.SparkSession,
                              dir: String, nprobe: Int): org.apache.spark.sql.DataFrame = {
     val (cents, cb, codes) = ivfBuildFrames(spark, dir)
-    // â¤ QueryCount query rows: no corpus spread on the broadcast side
+    // ≤ QueryCount query rows: no corpus spread on the broadcast side
     val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
     ivfProbe(q, cents, cb, codes, nprobe)
   }
 
   /** [[ivfAdcResidual]]'s workload served from the PERSISTED q127 index at
-    * any probe width â zero training stages in the plan. The probed cells
-    * are collected driver-side first (â¤ QueryCountÂ·nprobe ids, the bounded
+    * any probe width — zero training stages in the plan. The probed cells
+    * are collected driver-side first (≤ QueryCount·nprobe ids, the bounded
     * q05 AQE-style discipline) so the `cell IN (...)` filter is LITERAL and
     * the bucketed code scan prunes to the probed cells' buckets.
     * Bit-identical to the live-trained pipeline (IvfIndexPlanSpec pins it),
-    * so q128 and the recall ladder q99/q101/q133 all serve from here â at
+    * so q128 and the recall ladder q99/q101/q133 all serve from here — at
     * 100 TB the recall monitor probes the nightly index like any other
     * query batch; only q94/q100 keep the one-shot train+serve shape (they
     * ARE the live-pipeline measurement). */
   /** The two deliberate one-shot train+serve measurements' SERVE-ONLY
     * twins (q94 at nprobe=1, q100 at [[NProbe]]), probing the persisted
-    * q127 index â [[graft.Bench]] times these beside the full queries so
+    * q127 index — [[graft.Bench]] times these beside the full queries so
     * the committed artifact separates designed training cost from serve
     * regressions (the r16 verdict's #8). Not registry queries: their
     * correctness surface is q94/q100/q128's. */
@@ -492,7 +492,7 @@ object VectorQueries {
     val (centT, cbT, codesT) = ivfIndexTables(spark, dir)
     val cents = spark.table(centT)
     val cb = spark.table(cbT)
-    // â¤ queryCount rows after the pushed filter: spreading them cost a
+    // ≤ queryCount rows after the pushed filter: spreading them cost a
     // 32-partition exchange in BOTH the eager cell-collect job and the
     // main probe plan (r19 floor audit)
     val q = table(spark, dir, "embeddings").where(col("vec_id") < queryCount)
@@ -502,17 +502,17 @@ object VectorQueries {
     ivfProbe(q, cents, cb, codes, nprobe, k)
   }
 
-  /** Bucket count for the at-rest code table â fixed so the layout's
+  /** Bucket count for the at-rest code table — fixed so the layout's
     * hash partitioning is stable across writers (at 100 TB you'd size it
     * to the cell count, e.g. one bucket per few cells). */
   private val CellBuckets = 8
 
-  /** The q127/q128 PERSISTED index â the q78 at-rest discipline applied
+  /** The q127/q128 PERSISTED index — the q78 at-rest discipline applied
     * to vectors: centroids + residual codebook + cell-bucketed PQ codes
     * written once per (session, dataset) via [[AtRestTables]], probed by
     * every later serving query with zero training stages in its plan.
     * This is the boundary a production pipeline draws (build once, serve
-    * many) â the round-9 verdict's top gap. */
+    * many) — the round-9 verdict's top gap. */
   private[queries] def ivfIndexTables(spark: org.apache.spark.sql.SparkSession,
                              dir: String): (String, String, String) = {
     val names = AtRestTables.get(spark, s"ivfidx|$dir") { base =>
@@ -532,11 +532,11 @@ object VectorQueries {
     (names(0), names(1), names(2))
   }
 
-  /** q305's at-rest ANN-erasure tombstones â the GDPR delete carried into
+  /** q305's at-rest ANN-erasure tombstones — the GDPR delete carried into
     * the q127 IVF-PQ index (q304's theorem for vectors): (cell, vec_id)
     * rows for the erased cohort, located by joining the erased ids
     * against the index's OWN persisted codes (the routing the serve path
-    * trusts â recomputing cells from raw embeddings could disagree with
+    * trusts — recomputing cells from raw embeddings could disagree with
     * what's actually stored). Written cell-bucketed with the SAME
     * [[CellBuckets]] geometry as the code table, so even a
     * corpus-proportional tombstone set applies as a co-located anti join
@@ -545,7 +545,7 @@ object VectorQueries {
     * bounded tombstone slice instead. Centroids and the codebook stay:
     * they are cluster REPRESENTATIVES, and retained vectors' codes are
     * untouched, so tombstoned-serve == erased-candidate rebuild is EXACT
-    * â full forgetting of the erased vectors' training influence is the
+    * — full forgetting of the erased vectors' training influence is the
     * next q303 blue/green generation, which trains on the retained
     * corpus by construction. */
   private[queries] def annTombstoneTable(spark: org.apache.spark.sql.SparkSession,
@@ -565,7 +565,7 @@ object VectorQueries {
       Seq(tombT)
     }.head
 
-  /** q307's GREEN generation â the full-forget half of the erasure
+  /** q307's GREEN generation — the full-forget half of the erasure
     * lifecycle that q305's tombstones only defer: centroids, codebook and
     * codes ALL retrained on the retained corpus (the erased vectors'
     * influence on the quantizers is gone, not just their candidacy),
@@ -619,7 +619,7 @@ object VectorQueries {
   }
 
   /** Encode one batch of (vec_id, embedding) rows against a persisted
-    * index's centroids + residual codebook â cell assignment, residual,
+    * index's centroids + residual codebook — cell assignment, residual,
     * PQ codes, all map-side against the broadcast index tables, no
     * training stage anywhere in the plan. ONE definition shared by
     * q129's batch delta and [[graft.streaming.StreamingIvfEncode]]'s
@@ -637,7 +637,7 @@ object VectorQueries {
 
   /** The q89/q104 pure-ADC serving pipeline over any (vec_id, embedding)
     * source: train the codebook, encode the corpus to PqM codes, compute
-    * each query's PqMÂ·PqK-entry LUT, scan codes via the broadcast LUT
+    * each query's PqM·PqK-entry LUT, scan codes via the broadcast LUT
     * equi-join, top-5 per query by summed approximate distance. */
   private def pqAdcPipeline(src: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sub = pqSub(PqM)(src)
@@ -653,7 +653,7 @@ object VectorQueries {
           codes("vec_id") =!= lut("query_id"))
       .groupBy(col("query_id"), codes("vec_id").as("vec_id"))
       .agg(xsum(col("d"), 6).as("adc"))
-    // the pure-ADC scan scores the WHOLE corpus per query â the exact
+    // the pure-ADC scan scores the WHOLE corpus per query — the exact
     // frame shape the salted two-phase exists for (r15 verdict weak #1)
     saltedTopK(scored, Seq("query_id"), Seq(col("adc"), col("vec_id")),
         col("vec_id"), 5)
@@ -661,8 +661,8 @@ object VectorQueries {
   }
 
   /** q104's fixed dimension permutation: output slot (s, j) takes input
-    * dim s + jÂ·PqM, i.e. subspace s gets dims {s, s+PqM, s+2Â·PqM, â¦} â
-    * the transpose of the PqMÃPqSubDim index grid (an involution).
+    * dim s + j·PqM, i.e. subspace s gets dims {s, s+PqM, s+2·PqM, …} —
+    * the transpose of the PqM×PqSubDim index grid (an involution).
     * Permutations preserve L2 exactly, so ADC over permuted vectors
     * approximates the SAME distances with different (here: lower, q105)
     * quantization error. ONE definition, embedded into the oracle SQL. */
@@ -673,12 +673,12 @@ object VectorQueries {
     emb.select(col("vec_id"),
       array(OpqPerm.map(i => col("embedding").getItem(i)): _*).as("embedding"))
 
-  /** SQ8 symmetric int8 quantization of every vector â q59's arithmetic
+  /** SQ8 symmetric int8 quantization of every vector — q59's arithmetic
     * (scale = 127/max|x| with the 1e-12 floor, half-up integer codes)
     * kept as a LONG code array plus the per-vector scale. One map-side
     * projection, no shuffle; the SAME formulation is embedded into the
     * q112/q113 oracle SQL via [[sq8Ctes]], so the codes are
-    * bit-identical on both engines (floor(xÂ·scale + 0.5) is exact IEEE
+    * bit-identical on both engines (floor(x·scale + 0.5) is exact IEEE
     * on both; the products and sums downstream are pure BIGINT). */
   private def sq8Codes(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     emb.select(col("vec_id"),
@@ -688,13 +688,13 @@ object VectorQueries {
         transform(col("embedding"), x =>
           floor(x.cast("double") * (lit(127.0) / col("mx")) + lit(0.5))).as("qs"))
 
-  /** Exact BIGINT inner product of two SQ8 code arrays â deterministic on
+  /** Exact BIGINT inner product of two SQ8 code arrays — deterministic on
     * any engine (no floating accumulation anywhere). */
   private def sq8Dot(qq: org.apache.spark.sql.Column,
                      cs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     aggregate(zip_with(qq, cs, (a, b) => a * b), lit(0L), (acc, x) => acc + x)
 
-  /** recall@5 of an approximate top-5 against the exact q40 scan â the
+  /** recall@5 of an approximate top-5 against the exact q40 scan — the
     * shared q90/q99/q101 harness (q49's evaluation discipline). The truth
     * frame feeds BOTH the hit join and the query-id universe, so it is
     * cached for the execution; the tcache registry bounds the pin for
@@ -712,12 +712,12 @@ object VectorQueries {
            pround(sum(col("hits")).cast("double") / (count(lit(1)) * 5), 6).as("recall_at_5"))
   }
 
-  /** q254's per-(label, half, dim) integer component-sum frame â the
+  /** q254's per-(label, half, dim) integer component-sum frame — the
     * drift monitor's only data-sized aggregation, factored out because
     * its (count, sum) state merges under (+, +): the SAME definition runs
     * batch, feeds the oracle arithmetic, and is maintained LIVE by
     * [[graft.streaming.SketchStreaming.centroidSums]] (Complete-mode
-    * state = this bounded |labels|Â·2Â·dim table). */
+    * state = this bounded |labels|·2·dim table). */
   private[graft] def centroidSums(vecs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     vecs.select(col("label"), (col("vec_id") % 2).as("half"),
         posexplode(col("embedding")))
@@ -728,18 +728,18 @@ object VectorQueries {
           .cast("long")).as("s"))
 
   val defs: Map[String, QFn] = Map(
-    // EMBEDDING DRIFT MONITOR â the vector-space sibling of q184's PSI:
+    // EMBEDDING DRIFT MONITOR — the vector-space sibling of q184's PSI:
     // per label, the cosine between the centroids of two deterministic
-    // corpus halves (vec_id parity â in production, two snapshot dates).
+    // corpus halves (vec_id parity — in production, two snapshot dates).
     // A drop below ~1 flags embedding-space drift between snapshots. The
     // arithmetic is drift-proof itself: per-(label, half, dim) component
     // sums are INTEGER (float32 components widen exactly, quantized to
     // 1e-6ths), the per-dim mean divides integers once, the three dot
-    // products quantize per dim to integer 1e-9ths and sum as longs â
+    // products quantize per dim to integer 1e-9ths and sum as longs —
     // the only non-integer ops are two IEEE-exact sqrts and one final
     // division, identical on both engines. One combinable aggregation
     // over the exploded components is the data-sized work; everything
-    // after is |labels|Â·64 rows.
+    // after is |labels|·64 rows.
     "q254_embedding_drift" -> ((spark, dir) => {
       val means = centroidSums(spread(table(spark, dir, "embeddings")))
         .withColumn("m",
@@ -768,12 +768,12 @@ object VectorQueries {
     // raw floats) and queries scan codes with a precomputed lookup table
     // instead of touching any embedding. Codebook: per-subspace k-means
     // centroids from PqIters deterministic Lloyd iterations (pqCodebook).
-    // Encode: per (vector, subspace) argmin over the BROADCAST codebook â
+    // Encode: per (vector, subspace) argmin over the BROADCAST codebook —
     // map-side, lexicographic struct-min tie-break toward the lowest
     // centroid id (the assignNearest discipline). ADC: each query's
-    // PqMÂ·PqK-entry (subspace, centroid) distance table is computed once
-    // and broadcast; the scan is a codesâLUT equi-join + an exact
-    // integer-scaled sum â the corpus-side rows carry (vec_id, s, code),
+    // PqM·PqK-entry (subspace, centroid) distance table is computed once
+    // and broadcast; the scan is a codes⋈LUT equi-join + an exact
+    // integer-scaled sum — the corpus-side rows carry (vec_id, s, code),
     // never floats. Top-5 per query by approximate distance, ties to the
     // lowest vec_id. q90 below measures this layout's recall against the
     // exact scan.
@@ -785,7 +785,7 @@ object VectorQueries {
     // which both engines replay exactly): dims interleave so every
     // subspace sees a spread of the embedding's coordinate structure
     // instead of one contiguous block. Permutations preserve L2, so the
-    // codes approximate the SAME distances â only the quantization error
+    // codes approximate the SAME distances — only the quantization error
     // changes, and q105 measures the gain against q90 (0.30 vs 0.24
     // recall@5 at sf0.01). The permutation is one map-side projection;
     // everything downstream is exactly the q89 plan.
@@ -793,35 +793,35 @@ object VectorQueries {
       pqAdcPipeline(opqPermute(spread(table(spark, dir, "embeddings"))))),
 
     // ADC recall harness: recall@5 of the PQ approximate top-5 against the
-    // exact brute-force baseline â the q49 evaluation discipline applied
+    // exact brute-force baseline — the q49 evaluation discipline applied
     // to q89, closing the quality loop on the trained codebook (a serving
     // layout is only as good as the recall a pipeline measures for it).
     // The embeddings are unit-norm, so q40's cosine ranking IS the L2
-    // ranking ADC approximates (squared-L2 = 2 - 2Â·cos on unit vectors).
+    // ranking ADC approximates (squared-L2 = 2 - 2·cos on unit vectors).
     "q90_pq_recall" -> ((spark, dir) =>
       recallHarness(defs("q40_ann_brute")(spark, dir),
         defs("q89_pq_adc")(spark, dir))),
 
-    // recall@5 of the OPQ-permuted layout â measured next to q90, this IS
+    // recall@5 of the OPQ-permuted layout — measured next to q90, this IS
     // the evidence the permutation pays for itself: same geometry, same
     // truth, higher recall purely from dispersing correlated dims.
     "q105_opq_recall" -> ((spark, dir) =>
       recallHarness(defs("q40_ann_brute")(spark, dir),
         defs("q104_opq_adc")(spark, dir))),
 
-    // IVF + ADC â the two serving layouts composed, now the TRUE IVFADC
+    // IVF + ADC — the two serving layouts composed, now the TRUE IVFADC
     // shape (residual encoding in): the coarse quantizer (q46's stride
     // centroids) routes each query to ONE inverted list, and within that
-    // list distances come from PQ codes of the RESIDUAL x â centroid(cell)
+    // list distances come from PQ codes of the RESIDUAL x − centroid(cell)
     // (codebook trained on residuals) via the broadcast per-(query, cell)
-    // residual LUT â so a query scans |cell| code tuples, not the corpus,
+    // residual LUT — so a query scans |cell| code tuples, not the corpus,
     // and never touches a raw embedding at probe time. See
     // [[ivfAdcResidual]] for the plan shape (one corpus scan, zero
     // corpus-side shuffles before the final sum). q100 is this layout
     // with the production nprobe=3 probe width; q99/q101 measure both.
     "q94_ivf_adc" -> ((spark, dir) => ivfAdcResidual(spark, dir, 1)),
 
-    // IVFADC with multi-cell probing (nprobe=3): the production IVF knob â
+    // IVFADC with multi-cell probing (nprobe=3): the production IVF knob —
     // each query probes its NProbe nearest cells and unions the inverted
     // lists, trading a bounded constant factor of probe work (broadcast-
     // side fan-out only, q53's discipline) for the recall q101 measures
@@ -830,7 +830,7 @@ object VectorQueries {
 
     // the index BUILD step, made first-class: write centroids + residual
     // codebook + cell-bucketed PQ codes at rest (ivfIndexTables), then
-    // emit the per-cell manifest FROM THE PERSISTED TABLE â (cell,
+    // emit the per-cell manifest FROM THE PERSISTED TABLE — (cell,
     // n_codes, code_sum) pins every code tuple the build wrote, so the
     // oracle's full training replay gate-checks the artifact, not a live
     // recomputation. At 100 TB this is the nightly pipeline's output: one
@@ -846,9 +846,9 @@ object VectorQueries {
     // the SERVING query over the q127 at-rest index: q100's exact
     // workload (nprobe=3 residual IVFADC) answered from the persisted
     // tables with ZERO training stages in the plan. The probed cells are
-    // collected driver-side first (â¤ QueryCountÂ·NProbe ids, the bounded
+    // collected driver-side first (≤ QueryCount·NProbe ids, the bounded
     // q05 AQE-style discipline) so the `cell IN (...)` filter is LITERAL
-    // and the bucketed code scan prunes to the probed cells' buckets â
+    // and the bucketed code scan prunes to the probed cells' buckets —
     // the plan a 100 TB deployment wants: the index is files, a query
     // batch reads only the buckets it routes to. IvfIndexPlanSpec pins
     // the shape (one embeddings scan, SelectedBucketsCount, no SMJ/SHJ).
@@ -856,7 +856,7 @@ object VectorQueries {
 
     // incremental index maintenance (the q62 batch-vs-corpus shape for
     // vectors): encode the NEW batch (vec_id % IncrMod == IncrMod-1)
-    // against the PRE-BATCH persisted centroids + codebook â cell
+    // against the PRE-BATCH persisted centroids + codebook — cell
     // assignment, residual, PQ codes, all map-side against the broadcast
     // index tables, NO training stage anywhere in the plan. The oracle
     // retrains from the filtered corpus and replays the assignment, so a
@@ -870,10 +870,10 @@ object VectorQueries {
 
     // the RAG serving join: ANN retrieval (the q46 IVF cell probe)
     // fetches its top-3 documents per query from the DOCUMENT STORE by id
-    // â the cross-modal indexâstore join every retrieval pipeline ends
-    // with. The probe result (â¤ queriesÂ·k rows, constant-bounded) is
+    // — the cross-modal index→store join every retrieval pipeline ends
+    // with. The probe result (≤ queries·k rows, constant-bounded) is
     // broadcast into the documents fetch, so the store side is one scan
-    // with the join key pushed â the store is never shuffled and never
+    // with the join key pushed — the store is never shuffled and never
     // scanned per query. Re-ranking the probe's top-5 prefix by the same
     // (cos desc, vec_id) key yields ranks identical to ranking the full
     // cell, so the oracle can rank either side.
@@ -889,25 +889,25 @@ object VectorQueries {
           col("lang"), col("snippet"))
     }),
 
-    // HYBRID SERVE â reciprocal-rank fusion answered ENTIRELY from the
+    // HYBRID SERVE — reciprocal-rank fusion answered ENTIRELY from the
     // persisted serving layouts (q176 is this operator's live/brute
     // form; this is what production actually runs): the DENSE list is
     // the q127/q128 at-rest IVF-PQ index's nprobe ADC
     // top-[[HybridDepth]], the SPARSE list is BM25 over the q148 at-rest
     // inverted index (bucket-pruned postings for the query's
     // [[HybridQTerms]] terms + the lexicon's df + the persisted doc-length
-    // table), and rrf = Î£ 1/([[RrfC]] + rank) fuses the two rank lists.
-    // The only corpus-shaped work is the two bucket-pruned index scans â
+    // table), and rrf = Σ 1/([[RrfC]] + rank) fuses the two rank lists.
+    // The only corpus-shaped work is the two bucket-pruned index scans —
     // no extraction, no training, no tokenization of the corpus, no
     // documents scan beyond the 3 query docs (plan-pinned). Ranks are
     // integers, each reciprocal one exact IEEE division in a FIXED
-    // two-term expression â deterministic on both engines; the oracle
+    // two-term expression — deterministic on both engines; the oracle
     // replays both pipelines from the raw tables, so a green row ALSO
     // proves persisted-serve == full rebuild across both indexes at
     // once.
     "q302_hybrid_serve" -> ((spark, dir) => {
       import TextQueries.{K1, B, K1p1, OneMinusB}
-      // dense: ADC ranks from the persisted IVF index (â¤ depth rows per
+      // dense: ADC ranks from the persisted IVF index (≤ depth rows per
       // query out of the probe, so the re-rank window is bounded)
       val wd = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
       val dense = ivfAdcFromIndex(spark, dir, NProbe, HybridQueries, HybridDepth)
@@ -915,7 +915,7 @@ object VectorQueries {
         .select(col("query_id"), col("vec_id").as("doc_id"), col("dr"))
       // sparse: BM25 served from the persisted postings/lexicon/doclen.
       // Query terms tokenize ONLY the query docs (filter pushed to the
-      // documents scan); the â¤ queriesÂ·terms term strings collect
+      // documents scan); the ≤ queries·terms term strings collect
       // driver-side (the q148 literal idiom) so the posting and lexicon
       // scans bucket-prune.
       val toksC = toksCol
@@ -943,8 +943,8 @@ object VectorQueries {
       val tnorm = (col("tf").cast("double") * lit(K1p1)) /
         (col("tf").cast("double") +
           lit(K1) * (lit(OneMinusB) + lit(B) * (col("dl").cast("double") / avgdl)))
-      // candidate posting rows: Î£ df over the â¤ queriesÂ·terms probed
-      // terms â bounded by the probed lists, never the corpus (a serve
+      // candidate posting rows: Σ df over the ≤ queries·terms probed
+      // terms — bounded by the probed lists, never the corpus (a serve
       // stack caps per-term traversal before this ever outgrows a
       // broadcast). The docs-sized dl table is the big side of its join,
       // so broadcast the candidates EXPLICITLY instead of leaving AQE to
@@ -958,7 +958,7 @@ object VectorQueries {
           .select(col("query_id"), col("doc_id"), pround(idfR * tnorm, 6).as("s"))
           .groupBy("query_id", "doc_id").agg(xsum(col("s"), 6).as("sc")))
         .withColumnRenamed("rnk", "sr")
-      // rank-space fusion + the final bounded (â¤ 2Â·depth rows/query) rank
+      // rank-space fusion + the final bounded (≤ 2·depth rows/query) rank
       def recip(r: org.apache.spark.sql.Column) =
         coalesce(lit(1.0) / (lit(RrfC) + r).cast("double"), lit(0.0))
       val fused = dense.join(sparse, Seq("query_id", "doc_id"), "full")
@@ -969,12 +969,12 @@ object VectorQueries {
         .select("query_id", "doc_id", "rrf")
     }),
 
-    // recall@5 of the composed IVFADC layout against the exact scan â
+    // recall@5 of the composed IVFADC layout against the exact scan —
     // the evaluation story: q49 measures LSH, q90 measures pure ADC, this
     // measures the residual composition at nprobe=1 (where recall still
     // pays for single-cell routing), and q101 measures what nprobe=3 buys
     // back. Same harness shape. The ladder SERVES FROM THE q127 AT-REST
-    // INDEX (ivfAdcFromIndex â bit-identical to the live-trained pipeline,
+    // INDEX (ivfAdcFromIndex — bit-identical to the live-trained pipeline,
     // IvfIndexPlanSpec pins it): a recall monitor probes the nightly index;
     // re-running Lloyd per evaluation point would triple-pay a training
     // stage the engine has already persisted.
@@ -982,10 +982,10 @@ object VectorQueries {
       recallHarness(defs("q40_ann_brute")(spark, dir),
         ivfAdcFromIndex(spark, dir, 1))),
 
-    // recall@5 of the nprobe=3 IVFADC â the number the nprobe knob is
+    // recall@5 of the nprobe=3 IVFADC — the number the nprobe knob is
     // tuned against: q99 (nprobe=1) vs this quantifies exactly the
     // routing recall the extra probes recover.
-    // the wide end of the nprobe ladder: same pipeline at nprobe=5 â
+    // the wide end of the nprobe ladder: same pipeline at nprobe=5 —
     // with q99 (np1) and q101 (np3) this measures the knob's full curve
     // in-engine, each point against the same exact-truth harness
     "q133_ivfadc_np5_recall" -> ((spark, dir) =>
@@ -998,16 +998,16 @@ object VectorQueries {
 
     // exact ANN baseline: brute-force cosine top-5 per query vector.
     // Plans as BroadcastNestedLoopJoin with the 10-row query side broadcast
-    // â the correct physical shape for deliberate all-pairs scoring (the
+    // — the correct physical shape for deliberate all-pairs scoring (the
     // corpus streams once; no shuffle). The LSH variant below is the
     // sub-linear path.
     "q40_ann_brute" -> ((spark, dir) => {
       val emb = spread(table(spark, dir, "embeddings"))
-      // the â¤ QueryCount broadcast side reads the raw table WITHOUT the
-      // corpus spread: the pushed-down filter leaves â¤ 10 rows, and
+      // the ≤ QueryCount broadcast side reads the raw table WITHOUT the
+      // corpus spread: the pushed-down filter leaves ≤ 10 rows, and
       // deriving it from the spread frame planned a second scan + a
       // 32-partition round-robin exchange (one full AQE stage job) under
-      // the broadcast â r19 floor audit
+      // the broadcast — r19 floor audit
       val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val scored = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -1045,8 +1045,8 @@ object VectorQueries {
 
     // multi-probe LSH: each query probes its own bucket PLUS every 1-bit-
     // flip neighbor bucket in each table (NumPlanes probes/table). The
-    // standard recall booster â neighbors most likely to hold near misses
-    // are the ones differing by a single hyperplane sign â and it costs
+    // standard recall booster — neighbors most likely to hold near misses
+    // are the ones differing by a single hyperplane sign — and it costs
     // extra PROBE keys (broadcast side), not extra index tables, so the
     // corpus is still hashed/shuffled exactly once per table. Bucket keys
     // are integers, so probing is exact integer arithmetic on both engines.
@@ -1055,7 +1055,7 @@ object VectorQueries {
         .select(col("vec_id"), col("embedding"), explode(bucketsCol(col("embedding"))).as("bucket"))
       // flipping a low bit (< NumPlanes) of the encoded key flips one
       // bucket bit and leaves the table id in the high bits intact
-      // (query side off the raw table â the q40 no-spread rationale)
+      // (query side off the raw table — the q40 no-spread rationale)
       val probes = table(spark, dir, "embeddings")
         .where(col("vec_id") < QueryCount)
         .select(col("vec_id"), col("embedding"),
@@ -1072,7 +1072,7 @@ object VectorQueries {
     }),
 
     // embedding-cosine near-duplicate detection: all same-bucket pairs
-    // (not just query probes) verified by exact cosine â the vector
+    // (not just query probes) verified by exact cosine — the vector
     // analogue of MinHash near-dup. The plane count DERIVES from the
     // corpus count (planesFor ladder: +1 bit per doubling past the base
     // cap), so bucket count grows with the corpus and in-bucket pair
@@ -1093,7 +1093,7 @@ object VectorQueries {
 
     // IVF-style ANN: assign every vector to its nearest centroid (coarse
     // quantization -> inverted lists), then probe each query against ONLY
-    // its own cell â the classic sub-linear index layout. Centroids are
+    // its own cell — the classic sub-linear index layout. Centroids are
     // broadcast for assignment; the probe is an equi-join on cell id.
     "q46_ann_ivf" -> ((spark, dir) => {
       val emb = spread(table(spark, dir, "embeddings"))
@@ -1101,12 +1101,12 @@ object VectorQueries {
       val cents = emb.where(col("vec_id") % stride === 0)
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       // nearest centroid per vector: map-side argmax over the broadcast
-      // centroid array (max (rounded cos, -cent_id) â deterministic
+      // centroid array (max (rounded cos, -cent_id) — deterministic
       // tie-break toward the lowest centroid id), no window shuffle
       val assigned = assignNearest(emb, cents)
         .select(col("vec_id"), col("embedding"), col("cell"))
       // query side assigned from the raw table (assignNearest is a
-      // per-row broadcast argmax, so filter-first is row-identical) â
+      // per-row broadcast argmax, so filter-first is row-identical) —
       // no corpus spread under the broadcast, the q40 rationale
       val q = assignNearest(
           table(spark, dir, "embeddings").where(col("vec_id") < QueryCount), cents)
@@ -1121,7 +1121,7 @@ object VectorQueries {
         .select("query_id", "vec_id", "cos")
     }),
 
-    // exact-scoring IVF with nprobe=3 â q46's probe widened to the
+    // exact-scoring IVF with nprobe=3 — q46's probe widened to the
     // NProbe nearest cells (same broadcast-side-only fan-out as
     // q100's ADC variant; the corpus still shuffles zero times for the
     // probe). Scoring candidates with EXACT cosine makes q111's recall
@@ -1135,7 +1135,7 @@ object VectorQueries {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
       val assigned = assignNearest(emb, cents)
         .select(col("vec_id"), col("embedding"), col("cell"))
-      // query side probed from the raw table (per-row routing) â no
+      // query side probed from the raw table (per-row routing) — no
       // corpus spread under the broadcast, the q40 rationale
       val q = probeCells(
           table(spark, dir, "embeddings").where(col("vec_id") < QueryCount),
@@ -1151,7 +1151,7 @@ object VectorQueries {
         .select("query_id", "vec_id", "cos")
     }),
 
-    // recall@5 of the exact nprobe=3 probe â BY CONSTRUCTION the routing
+    // recall@5 of the exact nprobe=3 probe — BY CONSTRUCTION the routing
     // ceiling at this probe width (exact scoring inside the probed cells
     // can only miss what routing missed), closing the evaluation chain:
     // q111 is the ceiling, q101 what ADC achieves under it, q99 the
@@ -1162,15 +1162,15 @@ object VectorQueries {
 
     // SQ8 scalar-quantization ANN: corpus AND queries stored as int8
     // codes (q59's symmetric per-vector scale), scored by the EXACT
-    // BIGINT dot product Î£ qqÂ·cs rescaled once by 1/(qscaleÂ·cscale) â
+    // BIGINT dot product Σ qq·cs rescaled once by 1/(qscale·cscale) —
     // the int8-GEMM serving shape. 64 bytes/vector vs q89's 8 PQ codes:
     // the other end of the compression/recall trade, and q113 measures
     // it. The inner product never touches a float (deterministic on any
-    // engine); quantization is map-side, the query side broadcasts â the
+    // engine); quantization is map-side, the query side broadcasts — the
     // corpus never shuffles.
     "q112_sq8_ann" -> ((spark, dir) => {
       val q8 = sq8Codes(spread(table(spark, dir, "embeddings")))
-      // query side quantized off the raw table (sq8Codes is per-row) â
+      // query side quantized off the raw table (sq8Codes is per-row) —
       // no corpus spread under the broadcast, the q40 rationale
       val qry = sq8Codes(
           table(spark, dir, "embeddings").where(col("vec_id") < QueryCount))
@@ -1183,27 +1183,27 @@ object VectorQueries {
         .select("query_id", "vec_id", "cos8")
     }),
 
-    // recall@5 of the SQ8 scan â slots into the measured compression
-    // ladder next to q90 (PQ 0.24) and q105 (OPQ 0.30): 8Ã the bytes
+    // recall@5 of the SQ8 scan — slots into the measured compression
+    // ladder next to q90 (PQ 0.24) and q105 (OPQ 0.30): 8× the bytes
     // buys near-exact ranking, which is precisely the number a storage
     // planner needs beside the PQ family's.
     "q113_sq8_recall" -> ((spark, dir) =>
       recallHarness(defs("q40_ann_brute")(spark, dir),
         defs("q112_sq8_ann")(spark, dir))),
 
-    // truncated-dim retrieve â exact rerank (the Matryoshka / two-stage
+    // truncated-dim retrieve → exact rerank (the Matryoshka / two-stage
     // cascade every production retrieval stack runs): stage 1 scores the
-    // FIRST TruncDim dims only (at rest that prefix is its own column â
+    // FIRST TruncDim dims only (at rest that prefix is its own column —
     // a quarter of the scan bytes and dot-product work) and keeps top
     // RerankC candidates; stage 2 rescores ONLY those with the exact
-    // full-dim cosine. The rerank join broadcasts the â¤ queriesÂ·RerankC
-    // candidate list into the corpus fetch (the q98 discipline) â the
+    // full-dim cosine. The rerank join broadcasts the ≤ queries·RerankC
+    // candidate list into the corpus fetch (the q98 discipline) — the
     // corpus never shuffles; stage 1's window moves slim (query_id,
     // vec_id, pcos) rows only. q117 measures what the cascade keeps.
     "q116_trunc_rerank" -> ((spark, dir) => {
       val emb = spread(table(spark, dir, "embeddings"))
       val pre = emb.select(col("vec_id"), slice(col("embedding"), 1, TruncDim).as("pe"))
-      // query side off the raw table â no corpus spread under the
+      // query side off the raw table — no corpus spread under the
       // broadcast, the q40 rationale
       val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
         .select(col("vec_id").as("query_id"),
@@ -1213,7 +1213,7 @@ object VectorQueries {
         .select(col("query_id"), col("vec_id"),
           pround(cosUdf(col("qp"), col("pe")), 6).as("pcos"))
       // stage 1 scores the whole corpus per query: salted two-phase cut
-      // (the stage-2 rerank window below stays direct â â¤ RerankC
+      // (the stage-2 rerank window below stays direct — ≤ RerankC
       // candidate rows per query by construction)
       val cand = saltedTopK(preScored, Seq("query_id"),
           Seq(desc("pcos"), col("vec_id")), col("vec_id"), RerankC)
@@ -1228,11 +1228,11 @@ object VectorQueries {
         .select("query_id", "vec_id", "cos")
     }),
 
-    // recall@5 of the cascade â how much of the exact top-5 a 4Ã-cheaper
+    // recall@5 of the cascade — how much of the exact top-5 a 4×-cheaper
     // first stage keeps when the rerank budget is RerankC. Unlike the
     // code ladders (PQ/SQ8 approximate the SCORE), the cascade's only
     // loss is routing: stage 2 scoring is exact, so every miss is a
-    // stage-1 candidate-set miss â the number that sizes RerankC.
+    // stage-1 candidate-set miss — the number that sizes RerankC.
     "q117_trunc_rerank_recall" -> ((spark, dir) =>
       recallHarness(defs("q40_ann_brute")(spark, dir),
         defs("q116_trunc_rerank")(spark, dir))),
@@ -1240,9 +1240,9 @@ object VectorQueries {
     // k-means update step (one Lloyd iteration over fixed seed centroids):
     // assign via the broadcast K-row centroid table, then recompute every
     // centroid component as the per-(cell, dimension) mean. The update is
-    // ONE map-side-combinable aggregation after a posexplode â per-dim
-    // partial sums combine locally, so the shuffle carries KÂ·dim rows no
-    // matter the corpus size. Emitting all KÂ·dim means oracle-checks the
+    // ONE map-side-combinable aggregation after a posexplode — per-dim
+    // partial sums combine locally, so the shuffle carries K·dim rows no
+    // matter the corpus size. Emitting all K·dim means oracle-checks the
     // entire update bit-for-bit.
     "q65_kmeans_step" -> ((spark, dir) =>
       kmeansAssign(spark, dir)
@@ -1256,12 +1256,12 @@ object VectorQueries {
     // closeness to the centroid and compare each member against only its
     // next SemWindow neighbors in that ranking (near-identical vectors
     // land adjacent because they share the centroid cosine). The pairing
-    // is lead() columns over ONE per-cell window sort â no self-join, no
+    // is lead() columns over ONE per-cell window sort — no self-join, no
     // quadratic in-cluster blowup; per-vector work is O(SemWindow) at any
     // corpus size. Dropped vectors attribute to their best-ranked keeper.
     // The per-cell sort's parallelism knob is K itself: real SemDeDup
-    // sizes K proportional to the corpus (n/10Â³-ish), keeping every cell
-    // frame bounded â KmeansK=8 is this fixture's demo size, not the
+    // sizes K proportional to the corpus (n/10³-ish), keeping every cell
+    // frame bounded — KmeansK=8 is this fixture's demo size, not the
     // scale design (assignment is map-side at any K, see assignNearest).
     "q66_semantic_dedup" -> ((spark, dir) => {
       val byCell = Window.partitionBy("cell").orderBy(desc("ccos"), col("vec_id"))
@@ -1274,7 +1274,7 @@ object VectorQueries {
           col("rnk").as("keep_rnk"), col("embedding"),
           // strip the null leads INSIDE the array (rows at the tail of a
           // cell have fewer than SemWindow successors) so the generator
-          // never emits them â a post-explode null filter can be reordered
+          // never emits them — a post-explode null filter can be reordered
           // after the cosine UDF by the optimizer
           explode(filter(array((1 to SemWindow).map(j =>
             struct(col(s"nid_$j").as("nid"), col(s"ne_$j").as("ne"))): _*),
@@ -1290,9 +1290,9 @@ object VectorQueries {
     }),
 
     // ANN evaluation: recall@5 of the LSH probe against brute-force
-    // ground truth â the metric operator an ANN pipeline tunes against
+    // ground truth — the metric operator an ANN pipeline tunes against
     "q49_ann_recall" -> ((spark, dir) => {
-      // truth feeds BOTH the hit join and the query-id universe below â
+      // truth feeds BOTH the hit join and the query-id universe below —
       // cache it so the brute-force scoring pass runs once per execution
       val truth = tcache(defs("q40_ann_brute")(spark, dir)
         .select(col("query_id"), col("vec_id")), "q49:truth")
@@ -1307,7 +1307,7 @@ object VectorQueries {
              pround(sum(col("hits")).cast("double") / (count(lit(1)) * 5), 6).as("recall_at_5"))
     }),
 
-    // int8 quantization: per-vector symmetric scale to [-127, 127] â the
+    // int8 quantization: per-vector symmetric scale to [-127, 127] — the
     // storage/serving compression step of an embedding pipeline. Pure
     // map-side arithmetic (no shuffle); the checksum is position-weighted
     // so the oracle verifies every quantized value, not just the multiset.
@@ -1328,17 +1328,17 @@ object VectorQueries {
         .select(col("label"), col("n"), pround(col("s") / col("n"), 6).as("avg_norm"))
     }),
 
-    // HYBRID RETRIEVAL â Reciprocal Rank Fusion of a lexical and a
-    // vector ranking, the shape modern search serves (BM25 âª ANN â
+    // HYBRID RETRIEVAL — Reciprocal Rank Fusion of a lexical and a
+    // vector ranking, the shape modern search serves (BM25 ∪ ANN →
     // fuse): each query document's top-2 tokens drive a per-query BM25
     // ranking (q51's exact scoring constants, ONE source), the same
     // query's embedding drives the exact cosine ranking (q40's shape),
-    // and rrf = Î£ 1/([[RrfK]] + rank) over the two top-[[RrfDepth]]
-    // lists merges them â rank-based, so the two incomparable score
+    // and rrf = Σ 1/([[RrfK]] + rank) over the two top-[[RrfDepth]]
+    // lists merges them — rank-based, so the two incomparable score
     // scales never meet. Work: both sides are broadcast-query fan-outs
     // over the corpus (the corpus never self-joins or shuffles per
-    // query); the fusion joins two rank lists of â¤ queriesÂ·depth rows.
-    // RRF uses only integer ranks â the doubles are 1/(k+r) for small
+    // query); the fusion joins two rank lists of ≤ queries·depth rows.
+    // RRF uses only integer ranks → the doubles are 1/(k+r) for small
     // ints, identical IEEE on both engines.
     "q176_hybrid_rrf" -> ((spark, dir) => {
       val toks = toksCol
@@ -1353,7 +1353,7 @@ object VectorQueries {
       val qterms = tf.where(col("doc_id") < QueryCount)
         .withColumn("rn", row_number().over(wq)).where(col("rn") <= 2)
         .select(col("doc_id").as("query_id"), col("token"))
-      // vocabulary-sized dfreq cut to the |q|Â·2 query-term rows FIRST â
+      // vocabulary-sized dfreq cut to the |q|·2 query-term rows FIRST —
       // that frame is the broadcast side (the q51 discipline)
       val qtd = dfreq.join(broadcast(qterms), Seq("token"))
       val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
@@ -1376,7 +1376,7 @@ object VectorQueries {
           Seq(desc("bm25"), col("doc_id")), col("doc_id"), RrfDepth, "t_rank")
         .select("query_id", "doc_id", "t_rank")
       val emb = spread(table(spark, dir, "embeddings"))
-      // query side off the raw table â the q40 no-spread rationale
+      // query side off the raw table — the q40 no-spread rationale
       val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val vscored = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -1396,13 +1396,13 @@ object VectorQueries {
         .select("query_id", "doc_id", "t_rank", "v_rank", "rrf")
     }),
 
-    // EMBEDDING PEAKINESS OUTLIERS â the vector-health gate every
-    // embedding pipeline runs before indexing: per label, Î¼/Ï of each
-    // vector's max |component| (its "peakiness" â a near-one-hot vector
+    // EMBEDDING PEAKINESS OUTLIERS — the vector-health gate every
+    // embedding pipeline runs before indexing: per label, μ/σ of each
+    // vector's max |component| (its "peakiness" — a near-one-hot vector
     // is a degenerate embedding; the corpus is unit-normalized, so the
     // L2 norm itself carries no signal) from BIGINT-exact quantized
     // moments, vectors with |z| > 2 flagged. The moments frame is
-    // |labels|-sized and broadcasts back â two scans, no data-sized
+    // |labels|-sized and broadcasts back — two scans, no data-sized
     // shuffle, the q219 discipline on the vector table.
     "q223_emb_peakiness" -> ((spark, dir) => {
       val e = spread(table(spark, dir, "embeddings"))
@@ -1429,12 +1429,12 @@ object VectorQueries {
           max(abs(col("z"))).as("max_abs_z"))
     }),
 
-    // ADC + EXACT REFINE â the standard two-stage serving cascade the
+    // ADC + EXACT REFINE — the standard two-stage serving cascade the
     // pure-ADC probes (q94/q128) stop short of: the at-rest index's
     // compressed-domain scan shortlists [[RefineK]] candidates per query
     // (cheap, reads 8-byte codes), then ONE bounded gather join fetches
     // the true vectors for exact cosine re-scoring of just those
-    // queriesÃRefineK rows â full-precision top-5 at compressed-scan
+    // queries×RefineK rows — full-precision top-5 at compressed-scan
     // cost. The refine side is broadcast (constant-bounded), the vector
     // fetch is one scan with the join key pushed, zero training stages
     // anywhere (serves from the q127 index).
@@ -1460,17 +1460,17 @@ object VectorQueries {
         .select("query_id", "vec_id", "adc", "cos")
     }),
 
-    // RETRIEVAL MRR â Mean Reciprocal Rank of the LSH probe against the
+    // RETRIEVAL MRR — Mean Reciprocal Rank of the LSH probe against the
     // brute-force truth: where the recall harnesses (q49/q99/...) ask
     // "did the true neighbor appear in top-k", MRR asks "at WHICH RANK"
-    // â the ordering-quality metric retrieval evals report beside recall.
+    // — the ordering-quality metric retrieval evals report beside recall.
     // Truth = exact top-1 per query; candidate ranking = the q42 probe
     // ordered by exact cosine; a miss contributes 0. Same scale shape as
     // the ladder: queries broadcast, corpus never shuffles, reciprocal
     // ranks quantized before the order-independent sum.
     "q215_retrieval_mrr" -> ((spark, dir) => {
       val emb = spread(table(spark, dir, "embeddings"))
-      // query side off the raw table â the q40 no-spread rationale
+      // query side off the raw table — the q40 no-spread rationale
       val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val tscored = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -1488,7 +1488,7 @@ object VectorQueries {
       val truth = truthRows.toDF("tq", "true_nn")
       val embB = emb.select(col("vec_id"), col("embedding"),
         explode(bucketsCol(col("embedding"))).as("bucket"))
-      // bucketed query side off the raw table (bucketsCol is per-row) â
+      // bucketed query side off the raw table (bucketsCol is per-row) —
       // the q40 no-spread rationale
       val qb = table(spark, dir, "embeddings")
         .where(col("vec_id") < QueryCount)
@@ -1496,7 +1496,7 @@ object VectorQueries {
           explode(bucketsCol(col("embedding"))).as("bucket"))
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("bucket"))
       // the scored candidate set feeds both the hit lookup and the
-      // better-count â tcache so the one corpus-proportional pass pays once
+      // better-count — tcache so the one corpus-proportional pass pays once
       val cands = tcache(embB.join(broadcast(qb), Seq("bucket"))
         .where(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("qe"), col("vec_id"), col("embedding"))
@@ -1505,7 +1505,7 @@ object VectorQueries {
           pround(cosUdf(col("qe"), col("embedding")), 6).as("cos")), "q215:cands")
       // MRR needs only the TRUE hit's rank, so never rank the whole
       // candidate list: under the total order (cos DESC, vec_id),
-      // row_number(t) = 1 + |{strictly better candidates}| â one
+      // row_number(t) = 1 + |{strictly better candidates}| — one
       // broadcast join with the <= |q|-row hit frame plus a count
       // aggregation replaces the corpus-proportional per-query rank
       // window, bit-identically
@@ -1530,18 +1530,18 @@ object VectorQueries {
           pround(col("rr_sum") / col("n_queries").cast("double"), 9).as("mrr"))
     }),
 
-    // k-NN CLASSIFICATION â the label-propagation eval every embedding
+    // k-NN CLASSIFICATION — the label-propagation eval every embedding
     // pipeline runs: hold out every 10th vector, predict its label by
     // majority vote over its 5 nearest training neighbors (exact cosine),
     // report per-label accuracy. The query set broadcasts (it is the
-    // holdout, corpus/10 â at larger fan-outs it becomes the q46/q128
+    // holdout, corpus/10 — at larger fan-outs it becomes the q46/q128
     // inverted-list probe instead of brute force); the corpus never
     // shuffles for the scoring join, the per-query top-5 window runs over
     // bounded candidates, and the vote tiebreak (count DESC, label) is
     // deterministic. Integer votes + one pround division per label row.
     "q199_knn_classify" -> ((spark, dir) => {
       val emb = spread(table(spark, dir, "embeddings"))
-      // held-out query side off the raw table â the q40 no-spread rationale
+      // held-out query side off the raw table — the q40 no-spread rationale
       val q = table(spark, dir, "embeddings")
         .where(col("vec_id") % KnnHoldEvery === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -1565,20 +1565,20 @@ object VectorQueries {
           pround(col("n_correct").cast("double") / col("n").cast("double"), 6))
     }),
 
-    // NDCG@10 â completes the retrieval-metric trio beside q49/q101
+    // NDCG@10 — completes the retrieval-metric trio beside q49/q101
     // recall and q215 MRR: graded list quality of the SAME LSH-bucketed
     // retrieval q215 measures, with label agreement as binary relevance.
     // Position discounts 1/log2(rank+1) are quantized ONCE to integer
     // micros ([[NdcgWMicros]]) and the per-query ideal is the prefix sum
-    // at min(R, 10) â R from the broadcast label-count frame, so a query
+    // at min(R, 10) — R from the broadcast label-count frame, so a query
     // whose class has < 10 members (the sf0.001 regime) is normalized
     // honestly, not against an unreachable ideal. DCG and IDCG are exact
     // BIGINTs; one division per query, then the q215-shaped mean. The
-    // corpus fans out only through the bounded LSH bucket join â never
-    // all-pairs â and the label-count frame is |labels|-sized.
+    // corpus fans out only through the bounded LSH bucket join — never
+    // all-pairs — and the label-count frame is |labels|-sized.
     "q260_retrieval_ndcg" -> ((spark, dir) => {
       val emb = spread(table(spark, dir, "embeddings"))
-      // query sides off the raw table â the q40 no-spread rationale
+      // query sides off the raw table — the q40 no-spread rationale
       val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
         .select(col("vec_id").as("query_id"), col("label").as("qlabel"))
       val labelCnt = emb.groupBy(col("label").as("cl"))
@@ -1627,39 +1627,39 @@ object VectorQueries {
           pround(col("ndcg_sum") / col("n_queries").cast("double"), 9).as("mean_ndcg"))
     }),
 
-    // NEAREST-CENTROID CONFUSION MATRIX â the labeled-corpus eval every
+    // NEAREST-CENTROID CONFUSION MATRIX — the labeled-corpus eval every
     // embedding pipeline runs before trusting its vectors: per-label
     // centroids (reusing q254's integer component sums, halves merged
     // under their (+,+) state), every vector scored against every
-    // centroid (dimÂ·|labels| fan-out per vector against a BROADCAST
-    // |labels|Â·dim table â the bounded-codebook scan shape, never
-    // corpusÃcorpus), argmax by exact-long-derived score with a label
-    // tie-break, then |labels|Â² confusion counts. Per-dim products
+    // centroid (dim·|labels| fan-out per vector against a BROADCAST
+    // |labels|·dim table — the bounded-codebook scan shape, never
+    // corpus×corpus), argmax by exact-long-derived score with a label
+    // tie-break, then |labels|² confusion counts. Per-dim products
     // quantize to integer 1e-9ths (the q254 discipline) so dot and
     // centroid norm are BIGINT-exact; the only doubles are one IEEE
     // sqrt + division per (vector, label).
     "q268_centroid_confusion" -> ((spark, dir) => centroidConfusion(spark, dir)),
 
-    // COHEN'S KAPPA + accuracy off the q268 confusion counts â agreement
-    // corrected for chance: po = Î£diag/N, pe = Î£(rowÂ·col)/NÂ², kappa =
-    // (NÂ·Î£diag â Î£rc)/(NÂ² â Î£rc), every term a BIGINT product of exact
+    // COHEN'S KAPPA + accuracy off the q268 confusion counts — agreement
+    // corrected for chance: po = Σdiag/N, pe = Σ(row·col)/N², kappa =
+    // (N·Σdiag − Σrc)/(N² − Σrc), every term a BIGINT product of exact
     // counts with ONE terminal division. The confusion frame is
-    // |labels|Â² rows, so everything here is constant-sized.
+    // |labels|² rows, so everything here is constant-sized.
     "q269_classifier_kappa" ->
       ((spark, dir) => kappaOf(centroidConfusion(spark, dir))),
 
-    // MEAN AVERAGE PRECISION @10 â completes the retrieval-metric
+    // MEAN AVERAGE PRECISION @10 — completes the retrieval-metric
     // quartet (q49 recall, q215 MRR, q260 NDCG, this): order-sensitive
     // list quality of the SAME LSH-bucketed retrieval, binary label
     // relevance. Each hit's precision@k term is the exact rational
-    // cumrel/k carried as integer NANOS via one BIGINT `div` â per-query
+    // cumrel/k carried as integer NANOS via one BIGINT `div` — per-query
     // AP sums whole numbers (no float accumulation at all until the
     // final mean), normalized by min(R, 10) from the broadcast
     // label-count frame, q260's honest-ideal discipline. Corpus fan-out
     // is only the bounded bucket join.
     "q282_average_precision" -> ((spark, dir) => {
       val emb = spread(table(spark, dir, "embeddings"))
-      // query sides off the raw table â the q40 no-spread rationale
+      // query sides off the raw table — the q40 no-spread rationale
       val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
         .select(col("vec_id").as("query_id"), col("label").as("qlabel"))
       val labelCnt = emb.groupBy(col("label").as("cl"))
@@ -1711,28 +1711,28 @@ object VectorQueries {
           pround(col("ap_sum") / col("n_queries").cast("double"), 9).as("map"))
     }),
 
-    // SIMPLIFIED SILHOUETTE â cluster cohesion/separation of the label
+    // SIMPLIFIED SILHOUETTE — cluster cohesion/separation of the label
     // clustering, the quality readout to run before trusting q268's
     // centroid classifier: per vector, a = distance to OWN label
-    // centroid, b = nearest OTHER centroid, s = (b â a)/max(a, b).
-    // Distances derive from the shared [[centroidDistances]] frame â
-    // squared L2 as the exact BIGINT xÂ² â 2Â·xÂ·c + |c|Â² in 1e-9ths (the
+    // centroid, b = nearest OTHER centroid, s = (b − a)/max(a, b).
+    // Distances derive from the shared [[centroidDistances]] frame —
+    // squared L2 as the exact BIGINT x² − 2·x·c + |c|² in 1e-9ths (the
     // q268 quantization), so a/b selection is integer-exact and the
     // scale factor cancels inside s (computed on IEEE sqrts of the raw
-    // quantized integers). True all-pairs silhouette is O(nÂ²); the
-    // simplified (centroid) form is the one that scales â |labels|
+    // quantized integers). True all-pairs silhouette is O(n²); the
+    // simplified (centroid) form is the one that scales — |labels|
     // distances per vector against a broadcast centroid table.
     "q283_silhouette" -> ((spark, dir) =>
       silhouetteOf(tcache(
         centroidDistances(spread(table(spark, dir, "embeddings"))),
         "q283:d2"))),
 
-    // CALINSKIâHARABASZ â the variance-ratio cluster validity index on
-    // the same label clustering: SSB from |labels|Â·dim centroid-vs-grand
+    // CALINSKI–HARABASZ — the variance-ratio cluster validity index on
+    // the same label clustering: SSB from |labels|·dim centroid-vs-grand
     // deviations (aggregation-sized), SSW as the BIGINT sum of every
     // vector's own-centroid squared distance from the shared
     // [[centroidDistances]] frame. Both sums are exact integers in
-    // 1e-9ths; CH = (SSB/(kâ1))/(SSW/(Nâk)) is two divisions at the
+    // 1e-9ths; CH = (SSB/(k−1))/(SSW/(N−k)) is two divisions at the
     // end. One corpus-sized aggregation total (shared with q283 via the
     // tcache).
     "q284_calinski_harabasz" -> ((spark, dir) => {
@@ -1740,31 +1740,31 @@ object VectorQueries {
       calinskiHarabaszOf(emb, tcache(centroidDistances(emb), "q283:d2"))
     }),
 
-    // COVARIANCE SPECTRUM â the top principal eigenvalue of the
+    // COVARIANCE SPECTRUM — the top principal eigenvalue of the
     // embedding covariance by THREE deterministic power iterations (the
-    // PCA-health readout: Î»â/trace is the anisotropy share, a collapsed
+    // PCA-health readout: λ₁/trace is the anisotropy share, a collapsed
     // embedding space shows one dominant direction). The ONLY
-    // corpus-sized work is the dimÂ² covariance accumulation: centered
+    // corpus-sized work is the dim² covariance accumulation: centered
     // components quantize to integer 1e-6ths at birth (one exact IEEE
     // subtraction against the 6-decimal grand mean), so every C_jk sum
-    // is BIGINT-exact and combinable; the normalized dimÂ²-row matrix
+    // is BIGINT-exact and combinable; the normalized dim²-row matrix
     // then iterates entirely on aggregation-sized frames, every
-    // matrixÂ·vector row and every norm folding in sorted index order
+    // matrix·vector row and every norm folding in sorted index order
     // (the q273 discipline) so chained double sums are deterministic on
     // both engines. v is re-quantized to 9 decimals each iteration so
-    // drift cannot accumulate. At 100 TB: one map-side dimÂ²-fan-out
+    // drift cannot accumulate. At 100 TB: one map-side dim²-fan-out
     // aggregation, then constant-size algebra.
     "q286_covariance_spectrum" -> ((spark, dir) =>
       covarianceSpectrumOf(spread(table(spark, dir, "embeddings")))),
 
-    // ERASURE-PROPAGATED ANN SERVE â the q128 nprobe ADC workload kept
+    // ERASURE-PROPAGATED ANN SERVE — the q128 nprobe ADC workload kept
     // running AFTER a GDPR purge, answered from the FULL persisted q127
     // index with the q305 tombstones anti-joined in (merge-on-read for
     // vectors): both the code and tombstone reads prune to the probed
     // cells' buckets via the same literal IN, the anti join drops erased
     // candidates BEFORE any scoring work, and nothing retrains. The
     // oracle replays the full-corpus-trained index's ADC with the erased
-    // cohort excluded from candidacy â equality proves the tombstoned
+    // cohort excluded from candidacy — equality proves the tombstoned
     // index serves exactly what a read-time-filtered rebuild would, at
     // O(|erased|) maintenance cost. (The erased vectors' influence on
     // centroids/codebook is a TRAINING artifact; purging that is the
@@ -1773,13 +1773,13 @@ object VectorQueries {
       tombstonedAnnServe(spark, dir,
         spark.table(annTombstoneTable(spark, dir)))),
 
-    // FULL-FORGET REBUILD â the green generation of the erasure story:
+    // FULL-FORGET REBUILD — the green generation of the erasure story:
     // q305 keeps serving NOW by tombstoning the blue index; this is the
     // nightly rebuild whose quantizers never saw the erased vectors
     // (centroids stride-sampled from the retained corpus, codebook
     // trained on retained residuals, codes for retained vectors only),
     // persisted in the q127 layout and probed identically. The oracle
-    // retrains the whole chain on the retained corpus â a green row
+    // retrains the whole chain on the retained corpus — a green row
     // proves the persisted green generation IS the from-scratch retained
     // index, so after the blue/green swap (q303's mechanism) the
     // cohort's tombstones can retire. Results differ from q305's by
@@ -1789,24 +1789,24 @@ object VectorQueries {
     "q307_erasure_forget_rebuild" -> ((spark, dir) =>
       retainedAnnServe(spark, dir)),
 
-    // THE GENERATION SWAP, END TO END â the arrow q307's scaladoc only
+    // THE GENERATION SWAP, END TO END — the arrow q307's scaladoc only
     // asserted, now gate-checked (the r16 verdict's #2): after the green
     // (retained-trained) generation commits, the at-rest generation
     // POINTER flips (the q303 blue/green mechanism driven by a purge
     // instead of an arrival batch), and the two readers a mid-swap
     // production system actually has serve side by side in one frame:
-    //   gen='blue_pinned'  â a reader pinned to the pre-swap generation
+    //   gen='blue_pinned'  — a reader pinned to the pre-swap generation
     //     still gets the EXACT tombstoned answer (q305's serve, the
     //     merge-on-read guarantee holding mid-transition);
-    //   gen='green_active' â the unpinned reader resolves the pointer
+    //   gen='green_active' — the unpinned reader resolves the pointer
     //     and serves the green generation with the tombstone set RETIRED
-    //     (no tombstone table, no anti join anywhere in that branch â
+    //     (no tombstone table, no anti join anywhere in that branch —
     //     PlanShapeSpec pins it): the erased cohort is absent from the
     //     green codes by construction, so retirement loses nothing,
     //     which ErasureRetirementSpec proves as frame equality
     //     (green+tombstones == green alone).
     // The oracle replays both truths independently (the q305 exclusion
-    // replay and the q307 retained-chain replay) â ONE green row proves
+    // replay and the q307 retained-chain replay) — ONE green row proves
     // the pinned reader's answer, the swapped reader's answer, and that
     // the pointer-resolved serve IS the retained rebuild.
     "q312_erasure_generation_swap" -> ((spark, dir) => {
@@ -1822,7 +1822,7 @@ object VectorQueries {
   )
 
   /** q307's serve: the green (retained-trained) generation probed with
-    * NO tombstone table anywhere in the plan â the post-swap serving
+    * NO tombstone table anywhere in the plan — the post-swap serving
     * path. ONE definition shared by q307, q312's green branch, and
     * ErasureRetirementSpec's equivalence proof. */
   private[graft] def retainedAnnServe(spark: org.apache.spark.sql.SparkSession,
@@ -1837,7 +1837,7 @@ object VectorQueries {
     ivfProbe(q, cents, spark.table(cbT), codes, NProbe)
   }
 
-  /** The green generation's codes with q305's tombstones STILL applied â
+  /** The green generation's codes with q305's tombstones STILL applied —
     * only ErasureRetirementSpec uses this: proving it equal to
     * [[retainedAnnServe]] is the retirement theorem (the tombstoned
     * cohort is absent from the green codes by construction, so dropping
@@ -1858,7 +1858,7 @@ object VectorQueries {
     ivfProbe(q, cents, spark.table(cbT), live, NProbe)
   }
 
-  /** The at-rest GENERATION POINTER for the erasure lifecycle â the tiny
+  /** The at-rest GENERATION POINTER for the erasure lifecycle — the tiny
     * control-plane table a blue/green swap actually flips: written (and
     * flipped to `green`) only AFTER the green generation's three tables
     * commit, so a reader can never resolve a generation that does not
@@ -1876,11 +1876,11 @@ object VectorQueries {
       Seq(t)
     }.head
 
-  /** The serve for a GIVEN generation state â green with tombstones
+  /** The serve for a GIVEN generation state — green with tombstones
     * retired (no anti join), anything else blue WITH tombstones. Split
     * from [[swappedAnnServe]] so ErasureRetirementSpec can prove BOTH
     * resolver branches (the pre-swap blue path must serve exactly q305's
-    * tombstoned answer â a rollback flips the pointer back and readers
+    * tombstoned answer — a rollback flips the pointer back and readers
     * must land here). */
   private[graft] def servedGeneration(spark: org.apache.spark.sql.SparkSession,
       dir: String, active: String): org.apache.spark.sql.DataFrame =
@@ -1899,7 +1899,7 @@ object VectorQueries {
   }
 
   /** The q305 tombstoned-ADC serve over a caller-supplied (cell, vec_id)
-    * tombstone frame â ONE definition shared by the q305 at-rest path
+    * tombstone frame — ONE definition shared by the q305 at-rest path
     * and [[graft.streaming.StreamingIndexErasure]]'s replay proof (the
     * erasedBm25Serve discipline applied to the vector index), so the
     * stream-maintained tombstone store cannot drift from the batch
@@ -1922,7 +1922,7 @@ object VectorQueries {
   }
 
   /** q286's whole derivation on a caller-supplied (vec_id, label,
-    * embedding) frame â factored so the spec can drive planted diagonal
+    * embedding) frame — factored so the spec can drive planted diagonal
     * covariances with exactly-known spectra through the production
     * algebra. */
   private[graft] def covarianceSpectrumOf(
@@ -1941,7 +1941,7 @@ object VectorQueries {
       val nF = emb.agg(count(lit(1)).as("nv"))
       // loud dim guard: a vector shorter/longer than the corpus mean array
       // zip_with-pads with nulls, which would otherwise die as an opaque
-      // encoder NPE inside the aggregator â fail with the contract
+      // encoder NPE inside the aggregator — fail with the contract
       // instead. Guarding on size() is O(1) per row (an element scan
       // would also force the zip_with to evaluate twice on the one
       // corpus-sized stage), and length mismatch is the only way padding
@@ -1954,13 +1954,13 @@ object VectorQueries {
           when(size(col("embedding")) =!= size(col("marr")),
             raise_error(concat(lit("graft q286: embedding dim mismatch at vec_id="),
               col("vec_id").cast("string"),
-              lit(" â GramAggregator requires every vector to carry the corpus dim"))))
+              lit(" — GramAggregator requires every vector to carry the corpus dim"))))
             .otherwise(csCol).as("cs"))
       // the ONE corpus-sized stage: a per-partition partial-Gram fold
-      // ([[GramAggregator]] â dimÂ² BIGINT cells per task, |corpus| input
+      // ([[GramAggregator]] — dim² BIGINT cells per task, |corpus| input
       // rows, no generator fan-out), then the flat matrix explodes into
       // (j, k) cells on the 1-row aggregate. Cell sums are bit-identical
-      // to the former posexplodeÂ² formulation (exact integer addition),
+      // to the former posexplode² formulation (exact integer addition),
       // and j/k keep their INT pos type so the output schema is stable.
       val ddF = marrF.select(size(col("marr")).as("dim"))
       val gramSum = udaf(new GramAggregator(),
@@ -1979,14 +1979,14 @@ object VectorQueries {
           .groupBy("j")
           .agg(expr("aggregate(sort_array(collect_list(struct(k, term)))," +
             " cast(0.0 as double), (acc, x) -> acc + x.term)").as("w"))
-      // The iteration state v is DIM-sized (â¤ the embedding dimension, a
+      // The iteration state v is DIM-sized (≤ the embedding dimension, a
       // constant at any corpus size), so each round's v is collected and
-      // re-literalized â the r18 driver-held-iteration-state discipline
+      // re-literalized — the r18 driver-held-iteration-state discipline
       // (see pqCodebookFrom): lazily, iteration i's plan referenced w
-      // twice (norm + update), so iteration iâ1's subtree replayed ~2^i
+      // twice (norm + update), so iteration i−1's subtree replayed ~2^i
       // times and the 3-round spectrum plan carried dozens of dim-sized
       // exchanges. Every value is still computed by the IDENTICAL Spark
-      // expressions (mult / norm fold / pround) â the collect only cuts
+      // expressions (mult / norm fold / pround) — the collect only cuts
       // the lineage, and doubles round-trip collect exactly, so the
       // oracle's replay still hash-matches.
       val spark = emb.sparkSession
@@ -2036,7 +2036,7 @@ object VectorQueries {
     }
   }
 
-  /** q283's silhouette tail on a [[centroidDistances]]-shaped frame â
+  /** q283's silhouette tail on a [[centroidDistances]]-shaped frame —
     * factored so the spec can drive planted clusters through the exact
     * production algebra. */
   private[graft] def silhouetteOf(
@@ -2090,7 +2090,7 @@ object VectorQueries {
   /** q283/q284's shared per-(vector, centroid) squared-distance frame:
     * [[centroidSums]]-derived centroids (halves merged), per-dim products
     * quantized to integer 1e-9ths exactly as q268's scorer, and
-    * d2q = max(0, xÂ² â 2Â·xÂ·c + |c|Â²) â the clamp absorbs the â¤ few-ulp
+    * d2q = max(0, x² − 2·x·c + |c|²) — the clamp absorbs the ≤ few-ulp
     * quantization slack on a vector sitting ON its centroid. BIGINT
     * throughout; |labels| rows per vector against a broadcast centroid
     * table. */
@@ -2116,7 +2116,7 @@ object VectorQueries {
   }
 
   /** q269's kappa/accuracy arithmetic on a (label, pred, n) confusion
-    * frame â factored so the spec can drive a planted hand-computable
+    * frame — factored so the spec can drive a planted hand-computable
     * confusion matrix through the exact production algebra. */
   private[graft] def kappaOf(
       cm: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -2144,14 +2144,14 @@ object VectorQueries {
     * their (+, +) state, then every vector argmax-assigned to its
     * nearest centroid by dot/|c| (the vectors are unit-norm, so this IS
     * the cosine argmax) with smallest-label tie-break via a struct max
-    * over (score, âlabel). */
+    * over (score, −label). */
   private[graft] def centroidConfusion(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     centroidConfusionOf(spread(table(spark, dir, "embeddings")))
 
   /** The same confusion derivation on a caller-supplied (vec_id, label,
-    * embedding) frame â the spec drives planted clusters through it. */
+    * embedding) frame — the spec drives planted clusters through it. */
   private[graft] def centroidConfusionOf(
       emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val cen = centroidSums(emb).groupBy("label", "pos")
@@ -2177,20 +2177,20 @@ object VectorQueries {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** q199's holdout stride â every KnnHoldEvery-th vector is a query; ONE
+  /** q199's holdout stride — every KnnHoldEvery-th vector is a query; ONE
     * place, embedded into the oracle SQL. */
   private val KnnHoldEvery = 10
 
-  /** q217's coarse shortlist width â ADC keeps this many candidates per
+  /** q217's coarse shortlist width — ADC keeps this many candidates per
     * query before the exact re-score; ONE place, both engines. */
   private val RefineK = 20
 
-  /** q176 RRF geometry â ONE place, embedded into the oracle SQL: the
+  /** q176 RRF geometry — ONE place, embedded into the oracle SQL: the
     * standard k=60 dampener and a depth-10 cut per ranking side. */
   private val RrfK = 60
   private val RrfDepth = 10
 
-  /** q260 NDCG geometry â depth-10 cut; position discounts 1/log2(k+1)
+  /** q260 NDCG geometry — depth-10 cut; position discounts 1/log2(k+1)
     * quantized ONCE to integer micros (so DCG/IDCG are exact BIGINTs on
     * both engines), plus their prefix sums for the min(R, 10) ideal.
     * ONE place, embedded into the oracle SQL as integer literals. */
@@ -2225,7 +2225,7 @@ object VectorQueries {
 
   /** Derived-plane bucket over [[SignsX]]: planes below the base count are
     * unconditional, the rest are gated on the ladder-derived `np` (a
-    * `params` CTE column) â bit-identical to [[bucketForX]] at any corpus
+    * `params` CTE column) — bit-identical to [[bucketForX]] at any corpus
     * size. */
   private def bucketSqlX(e: String, t: Int, np: String): String = {
     def proj(j: Int): String = {
@@ -2278,7 +2278,7 @@ object VectorQueries {
        |  FROM scored) WHERE rn = 1)""".stripMargin
 
   /** PQ training + encode CTE chain over `src` (vec_id, embedding[,
-    * cell]) â mirrors [[pqCodebookFrom]] + [[pqAssign]]: seed codebook
+    * cell]) — mirrors [[pqCodebookFrom]] + [[pqAssign]]: seed codebook
     * cb0 -> assignment a0 -> per-(s, cell, dim) quantized means ->
     * trained cb (seed kept for empty cells) -> codes. With `withCell`,
     * the source's IVF cell is threaded through sub/codes (the q94/q100
@@ -2288,7 +2288,7 @@ object VectorQueries {
     val cellSel = if (withCell) "cell, " else ""
     val cellSub = if (withCell) "sub.cell, " else ""
     // one (assignment -> quantized means -> coalesce-update) round per
-    // Lloyd iteration, numbered CTEs chained off the previous codebook â
+    // Lloyd iteration, numbered CTEs chained off the previous codebook —
     // empty cells keep the PREVIOUS centroid, mirroring pqCodebookFrom
     val rounds = (1 to PqIters).map { i =>
       val prev = s"cb${i - 1}"
@@ -2338,7 +2338,7 @@ object VectorQueries {
   /** Shared q89/q90 CTE chain over the raw embeddings. */
   private def pqCtes: String = pqAdcCtes("embeddings")
 
-  /** q104/q105's permuted-embedding CTE ([[OpqPerm]] as a list literal â
+  /** q104/q105's permuted-embedding CTE ([[OpqPerm]] as a list literal —
     * the permutation lives in ONE Scala place and is embedded here). */
   private def opqPermCte: String =
     s"""perm AS (SELECT vec_id,
@@ -2347,7 +2347,7 @@ object VectorQueries {
 
   /** The residual-IVFADC BUILD chain (appended after [[ivfCte]]):
     * residuals vs the assigned coarse centroid and [[pqTrainCtes]] over
-    * them â ends at `cb` (the trained residual codebook) and `codes`
+    * them — ends at `cb` (the trained residual codebook) and `codes`
     * (the per-vector PQ codes). The q127 index-build manifest selects
     * straight from these; [[ivfAdcResidualCtes]] appends the probe. */
   private def ivfResidualBuildCtes: String =
@@ -2360,8 +2360,8 @@ object VectorQueries {
   /** The q94/q100 residual-IVFADC CTE chain (appended after [[ivfCte]]):
     * [[ivfResidualBuildCtes]], the nprobe-ranked query cells, the
     * per-(query, probed-cell) residual LUT, and the summed approximate
-    * distances `adc` â mirrors [[ivfAdcResidual]] clause for clause
-    * (floatâdouble subtraction is exact on both engines, so residuals
+    * distances `adc` — mirrors [[ivfAdcResidual]] clause for clause
+    * (float→double subtraction is exact on both engines, so residuals
     * carry no rounding step). */
   private def ivfAdcResidualCtes(nprobe: Int, queryCount: Long = QueryCount): String =
     s"""$ivfResidualBuildCtes,
@@ -2383,7 +2383,7 @@ object VectorQueries {
        |        WHERE c.vec_id <> l.query_id
        |        GROUP BY l.query_id, c.vec_id)""".stripMargin
 
-  /** q116/q117 shared cascade CTEs â stage-1 prefix scoring over the
+  /** q116/q117 shared cascade CTEs — stage-1 prefix scoring over the
     * first [[TruncDim]] dims and the top-[[RerankC]] candidate set,
     * mirroring the Spark stage-1 exactly (cosSql iterates len(qp) = the
     * sliced prefix, so the coarse score is the same 16-dim loop). */
@@ -2397,7 +2397,7 @@ object VectorQueries {
        |       FROM pre p, q WHERE p.vec_id <> q.query_id),
        |cand AS (SELECT query_id, vec_id FROM c0 WHERE prn <= $RerankC)""".stripMargin
 
-  /** q112/q113 shared SQ8 CTEs â q59's quantization arithmetic verbatim
+  /** q112/q113 shared SQ8 CTEs — q59's quantization arithmetic verbatim
     * (scale = 127/max|x| with the 1e-12 floor, half-up BIGINT codes) plus
     * the query-side projection, mirroring [[sq8Codes]] exactly. */
   private def sq8Ctes: String =
@@ -2410,7 +2410,7 @@ object VectorQueries {
        |       FROM m),
        |qry AS (SELECT vec_id AS query_id, scale AS qscale, qs AS qq FROM q8 WHERE vec_id < $QueryCount)""".stripMargin
 
-  /** The [[sq8Dot]] rescaled score as DuckDB SQL over aliases `qry`/`c` â
+  /** The [[sq8Dot]] rescaled score as DuckDB SQL over aliases `qry`/`c` —
     * BIGINT products and sum, ONE double division at the end. */
   private def sq8DotSql: String =
     "(CAST(list_sum(list_transform(range(1, len(c.qs) + 1), i -> qry.qq[i] * c.qs[i])) AS BIGINT)::DOUBLE / (qry.qscale * c.scale))"
@@ -2485,11 +2485,11 @@ object VectorQueries {
          |${ivfAdcResidualCtes(NProbeWide)},
          |$recallTailSql""".stripMargin,
 
-    // both SERVING pipelines replayed whole from the raw tables â the
+    // both SERVING pipelines replayed whole from the raw tables — the
     // dense side retrains the full residual-IVFADC chain (so green also
     // proves the persisted index lossless under this workload), the
     // sparse side rebuilds postings/lexicon/doc-lengths and replays
-    // q51's exact BM25 â then the identical rank-space fusion
+    // q51's exact BM25 — then the identical rank-space fusion
     "q302_hybrid_serve" -> {
       import graft.sql.OracleGen.dlit
       import TextQueries.{K1, B, K1p1, OneMinusB}
@@ -2537,7 +2537,7 @@ object VectorQueries {
     // the full-corpus-trained ADC replay with the erased cohort barred
     // from candidacy (the exclusion is per-(query, candidate), so
     // filtering the aggregated adc frame equals filtering the code rows)
-    // â equality proves tombstoned-serve == read-time-filtered rebuild
+    // — equality proves tombstoned-serve == read-time-filtered rebuild
     "q305_erasure_ann_serve" ->
       s"""WITH ${ivfCte()},
          |${ivfAdcResidualCtes(NProbe)}
@@ -2548,7 +2548,7 @@ object VectorQueries {
 
     // the ENTIRE training chain replayed over the retained corpus (one
     // WHERE; stride, centroids, codebook, codes, probe all derive from
-    // it) â equality proves the persisted green generation is the
+    // it) — equality proves the persisted green generation is the
     // from-scratch retained index, quantizers included
     "q307_erasure_forget_rebuild" ->
       s"""WITH embr AS (SELECT * FROM embeddings
@@ -2562,7 +2562,7 @@ object VectorQueries {
 
     // both swap-era truths replayed independently in one statement: the
     // pinned reader's (the q305 exclusion replay over the full-trained
-    // chain) and the swapped reader's (the q307 retained-chain replay â
+    // chain) and the swapped reader's (the q307 retained-chain replay —
     // which the Spark side serves through the pointer with the
     // tombstones retired)
     "q312_erasure_generation_swap" ->
@@ -2612,7 +2612,7 @@ object VectorQueries {
          |  FROM adc)
          |WHERE rn <= 5""".stripMargin,
 
-    // full training replay, manifest straight from its codes â what the
+    // full training replay, manifest straight from its codes — what the
     // persisted table must contain (sum(BIGINT) is HUGEINT in DuckDB:
     // cast back)
     "q127_ivf_index_build" ->
@@ -2623,7 +2623,7 @@ object VectorQueries {
          |FROM codes GROUP BY cell""".stripMargin,
 
     // the serving query must answer exactly what the live-trained q100
-    // pipeline answers â the oracle IS q100's
+    // pipeline answers — the oracle IS q100's
     "q128_ivf_index_probe" ->
       s"""WITH ${ivfCte()},
          |${ivfAdcResidualCtes(NProbe)}
@@ -2633,7 +2633,7 @@ object VectorQueries {
          |WHERE rn <= 5""".stripMargin,
 
     // retrain from the pre-batch corpus (embc), then encode the batch
-    // against that codebook â proves Spark's no-retrain batch encode
+    // against that codebook — proves Spark's no-retrain batch encode
     // equals the rebuild's encode for the same vectors
     "q129_ivf_incremental_encode" ->
       s"""WITH embc AS (SELECT * FROM embeddings WHERE vec_id % $IncrMod <> ${IncrMod - 1}),
@@ -3175,9 +3175,9 @@ object VectorQueries {
          |FROM fin""".stripMargin
   )
 
-  /** One q286 oracle power-iteration step: w = CÂ·v (per-j ordered
+  /** One q286 oracle power-iteration step: w = C·v (per-j ordered
     * aggregate), the j-ordered norm, and the 9-decimal re-quantized unit
-    * vector â the SQL twin of the Spark `mult`/normalize loop body. */
+    * vector — the SQL twin of the Spark `mult`/normalize loop body. */
   private def powIterSql(i: Int, prev: String): String =
     s"""w$i AS (SELECT j, sum(c * v ORDER BY k) AS w
        |        FROM cm JOIN $prev USING (k) GROUP BY j),
@@ -3187,9 +3187,9 @@ object VectorQueries {
        |               ELSE ${dlit(0.0)} END AS v
        |        FROM w$i CROSS JOIN n$i)""".stripMargin
 
-  /** q283/q284's shared oracle prefix â the SQL twin of
+  /** q283/q284's shared oracle prefix — the SQL twin of
     * [[centroidDistances]], extending [[CentroidConfusionSql]]'s centroid
-    * machinery with the per-vector xÂ² term and the clamped quadratic.
+    * machinery with the per-vector x² term and the clamped quadratic.
     * Final CTE is `dq` (vec_id, label, clabel, d2q); `m0`/`cen` remain in
     * scope for q284's SSB. A def, not a val: `oracles` initializes
     * first. */
@@ -3217,7 +3217,7 @@ object VectorQueries {
        |              greatest(x2 - 2 * dot + nc, 0) AS d2q
        |       FROM sc)""".stripMargin
 
-  /** q268/q269's shared oracle prefix â the SQL twin of
+  /** q268/q269's shared oracle prefix — the SQL twin of
     * [[centroidConfusion]]. A def, not a val: `oracles` is a val and
     * initializes first. */
   private def CentroidConfusionSql: String =

@@ -31,8 +31,12 @@ val names: Seq[String] = qsel match {
     val topN = sys.env.getOrElse("QT_TOP", "30").toInt
     val txt = java.nio.file.Files.readString(
       java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"))
+    // rank only the "queries" object: the builds and train_serve_split
+    // maps carry q-named keys too (q78, q94, q100)
+    val queriesObj = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
+      .map(_.group(1)).getOrElse(sys.error("BENCH_FULL.json has no queries object"))
     val m = """"(q\d+)":([0-9.]+)""".r
-    m.findAllMatchIn(txt).map(g => (g.group(1), g.group(2).toDouble)).toSeq
+    m.findAllMatchIn(queriesObj).map(g => (g.group(1), g.group(2).toDouble)).toSeq
       .sortBy(-_._2).take(topN).map(_._1)
       .flatMap(q => all.keys.find(_.startsWith(q + "_")))
   case s => s.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { q =>
