@@ -206,13 +206,7 @@ object MultimodalQueries {
     // sort |corpus| rows in MmQueryCount tasks at 100× scale).
     "q296_multimodal_knn" -> ((spark, dir) => {
       val fe = mmEmbedFrame(spread(table(spark, dir, "documents")))
-      // the query side embeds only its MmQueryCount docs: a WHERE above
-      // the opaque mapPartitions embed cannot push down, so deriving q
-      // from fe re-embedded the WHOLE corpus to keep 3 rows (per-row
-      // embed — filtering first is row-identical)
-      val q = mmEmbedFrame(
-        table(spark, dir, "documents").where(col("doc_id") < MmQueryCount))
-        .select(col("doc_id").as("query_id"), col("emb").as("qe"))
+      val q = mmQueryFrame(spark, dir)
       val scored = fe.join(broadcast(q), col("doc_id") =!= col("query_id"))
       saltedTop5(mmCosine(scored))
     }),
@@ -248,12 +242,8 @@ object MultimodalQueries {
     // top-5 runs over ONLY the probed cells' rows — zero extraction or
     // training stages in the plan, no corpus-sized window
     // ([[saltedTop5]]). MmIndexPlanSpec pins the shape.
-    "q298_mm_index_probe" -> ((spark, dir) => {
-      val q = mmEmbedFrame(
-        table(spark, dir, "documents").where(col("doc_id") < MmQueryCount))
-        .select(col("doc_id").as("query_id"), col("emb").as("qe"))
-      mmProbe(spark, dir, q)
-    }),
+    "q298_mm_index_probe" -> ((spark, dir) =>
+      mmProbe(spark, dir, mmQueryFrame(spark, dir))),
 
     // BLOB → EXTRACT → ANN — the unified multimodal lifecycle: queries
     // arrive as AT-REST BINARY FILES (the q263 blob store, read through
@@ -330,33 +320,18 @@ object MultimodalQueries {
     // fresh probe equals a full post-append rebuild.
     "q303_mm_index_generations" -> ((spark, dir) => {
       val (centT, c1T, c2T) = mmGenTables(spark, dir)
-      val cents = spark.table(centT)
-      val q = mmEmbedFrame(
-        table(spark, dir, "documents").where(col("doc_id") < MmQueryCount))
-        .select(col("doc_id").as("query_id"), col("emb").as("qe"))
-      val wQ = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(col("d2"), col("cent_id"))
       // the routed probe list is ≤ queries·nprobe rows — materialize it
       // driver-side (the q128 literal discipline, already paid for the
       // cell IN) so BOTH generation branches share the one bounded local
       // frame instead of each re-deriving the query scan under the union
       import spark.implicits._
-      val pcRows = q.crossJoin(broadcast(cents))
-        .withColumn("d2", mmL2("qe", "ce"))
-        .withColumn("pr", row_number().over(wQ))
-        .where(col("pr") <= MmNProbe)
-        .select(col("query_id"), col("qe"), col("cent_id").as("cell"))
+      val pcRows = mmRoute(mmQueryFrame(spark, dir), spark.table(centT))
         .as[(Long, Seq[Long], Long)].collect().toIndexedSeq
       val pc = pcRows.toDF("query_id", "qe", "cell")
       val cells = pcRows.map(_._3).distinct.sorted
-      def probe(codesT: String, gen: Int) = {
-        val codes =
-          if (cells.isEmpty) spark.table(codesT).limit(0)
-          else spark.table(codesT).where(col("cell").isin(cells: _*))
-        saltedTop5(mmCosine(codes.join(broadcast(pc), Seq("cell"))
-            .where(col("doc_id") =!= col("query_id"))))
+      def probe(codesT: String, gen: Int) =
+        mmScore(probedCodes(spark.table(codesT), cells, None, "doc_id"), pc)
           .withColumn("gen", lit(gen))
-      }
       probe(c1T, 1).unionByName(probe(c2T, 2))
         .select("gen", "query_id", "doc_id", "cos")
     }),
@@ -370,23 +345,9 @@ object MultimodalQueries {
     // barred from candidacy — tombstoned-serve == read-time-filtered
     // rebuild, exactly.
     "q310_erasure_mm_serve" -> ((spark, dir) =>
-      mmTombstonedServe(spark, dir,
-        spark.table(mmTombstoneTable(spark, dir))))
+      mmProbe(spark, dir, mmQueryFrame(spark, dir),
+        Some(spark.table(mmTombstoneTable(spark, dir)))))
   )
-
-  /** The q310 tombstoned mm serve over a caller-supplied (cell, doc_id)
-    * tombstone frame — ONE definition shared by the q310 at-rest path
-    * and [[graft.streaming.StreamingIndexErasure]]'s replay proof, so
-    * the stream-maintained tombstone store cannot drift from the batch
-    * purge. */
-  private[graft] def mmTombstonedServe(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tomb: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val q = mmEmbedFrame(
-      table(spark, dir, "documents").where(col("doc_id") < MmQueryCount))
-      .select(col("doc_id").as("query_id"), col("emb").as("qe"))
-    mmProbe(spark, dir, q, Some(tomb))
-  }
 
   /** The q303 generation pair: shared (gen-1) centroids + one bucketed
     * code table PER GENERATION — gen 1 over the pre-arrival corpus, gen 2
@@ -488,42 +449,58 @@ object MultimodalQueries {
       .select(col("doc_id"), col("best.cent_id").as("cell"), col("emb"))
   }
 
-  /** q298/q299's shared probe: route each (query_id, qe) to its
-    * [[MmNProbe]] nearest cells against the PERSISTED centroids, collect
-    * the probed cell ids (≤ queries·nprobe, driver-bounded), bucket-prune
-    * the persisted code table with the literal IN, and take the exact
-    * cosine top-5 over the probed rows with the salted two-phase rank.
-    * The probe-cell window partitions per query over ≤ MmCentroidBudget
+  /** The multimodal query frame (query_id, qe): the first
+    * [[MmQueryCount]] documents, embedded. A WHERE above the opaque
+    * mapPartitions embed cannot push down, so the filter runs on the
+    * documents scan first — deriving it from the corpus frame re-embedded
+    * the WHOLE corpus to keep 3 rows (per-row embed, so filtering first
+    * is row-identical). ONE definition for q296, q298, q303 and q310. */
+  private[graft] def mmQueryFrame(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String): org.apache.spark.sql.DataFrame =
+    mmEmbedFrame(
+      table(spark, dir, "documents").where(col("doc_id") < MmQueryCount))
+      .select(col("doc_id").as("query_id"), col("emb").as("qe"))
+
+  /** Route each (query_id, qe) to its [[MmNProbe]] nearest centroids:
+    * (query_id, qe, cell) rows, exact BIGINT L2 with ties to the lowest
+    * centroid id. The window partitions per query over ≤ MmCentroidBudget
     * centroid rows — constant-bounded at any corpus size. */
-  private def mmProbe(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      q: org.apache.spark.sql.DataFrame,
-                      tombF: Option[org.apache.spark.sql.DataFrame] = None)
+  private def mmRoute(q: org.apache.spark.sql.DataFrame,
+                      cents: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val (centT, codesT) = mmIndexTables(spark, dir)
-    val cents = spark.table(centT)
     val wQ = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("d2"), col("cent_id"))
-    val pc = q.crossJoin(broadcast(cents))
+    q.crossJoin(broadcast(cents))
       .withColumn("d2", mmL2("qe", "ce"))
       .withColumn("pr", row_number().over(wQ))
       .where(col("pr") <= MmNProbe)
       .select(col("query_id"), col("qe"), col("cent_id").as("cell"))
+  }
+
+  /** Exact cosine top-5 of the routed queries `pc` over probed code rows,
+    * self-matches barred, with the salted two-phase rank. */
+  private def mmScore(codes: org.apache.spark.sql.DataFrame,
+                      pc: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    saltedTop5(mmCosine(codes.join(broadcast(pc), Seq("cell"))
+      .where(col("doc_id") =!= col("query_id"))))
+
+  /** THE persisted multimodal serve (q298/q299/q310 and
+    * [[graft.streaming.StreamingIndexErasure]]'s replay proof): route
+    * each (query_id, qe) against the PERSISTED centroids, collect the
+    * probed cell ids (≤ queries·nprobe, driver-bounded), read the probed
+    * cells of the persisted code table through
+    * [[QueryBase.probedCodes]] — a (cell, doc_id) `tombF` frame is
+    * pruned to the same cells and anti-joined before any scoring — and
+    * take the exact cosine top-5 over the probed rows. */
+  private[graft] def mmProbe(spark: org.apache.spark.sql.SparkSession, dir: String,
+                             q: org.apache.spark.sql.DataFrame,
+                             tombF: Option[org.apache.spark.sql.DataFrame] = None)
+      : org.apache.spark.sql.DataFrame = {
+    val (centT, codesT) = mmIndexTables(spark, dir)
+    val pc = mmRoute(q, spark.table(centT))
     val cells = pc.select("cell").distinct().collect().map(_.getLong(0)).sorted
-    val codes0 =
-      if (cells.isEmpty) spark.table(codesT).limit(0)
-      else spark.table(codesT).where(col("cell").isin(cells: _*))
-    // q310's merge-on-read leg: tombstones prune to the same probed
-    // cells (co-bucketed with the codes, the q305 layout) and drop
-    // erased candidates before any scoring
-    val codes = tombF.map { t =>
-      val tomb =
-        if (cells.isEmpty) t.limit(0)
-        else t.where(col("cell").isin(cells: _*))
-      codes0.join(broadcast(tomb), Seq("cell", "doc_id"), "left_anti")
-    }.getOrElse(codes0)
-    val scored = codes.join(broadcast(pc), Seq("cell"))
-      .where(col("doc_id") =!= col("query_id"))
-    saltedTop5(mmCosine(scored))
+    mmScore(probedCodes(spark.table(codesT), cells.toSeq, tombF, "doc_id"), pc)
   }
 
   /** q310's multimodal erasure tombstones — the q305 discipline applied

@@ -237,6 +237,26 @@ object QueryBase {
       .drop("__stk_salt", "__stk_srn")
   }
 
+  /** THE probed-cell read of a cell-bucketed at-rest code table, shared
+    * by every persisted ANN serve (`VectorQueries.annServe`,
+    * `MultimodalQueries.mmProbe`, q303's generation pair): prune `codes`
+    * to the sorted, driver-collected probed `cells` with a LITERAL
+    * `cell IN (...)`, so the bucketed scan reads only the probed cells'
+    * buckets; then, given a (cell, `idCol`) tombstone frame, anti-join
+    * it pruned to the same cells (the q305/q310 merge-on-read leg: the
+    * bounded tombstone slice broadcasts and drops erased candidates
+    * before any scoring). An empty cell list reads nothing. ServePathSpec
+    * fails the suite if another `cell IN` prune or cell-keyed anti join
+    * appears under graft.queries. */
+  def probedCodes(codes: DataFrame, cells: Seq[Long], tomb: Option[DataFrame],
+                  idCol: String): DataFrame = {
+    def prune(t: DataFrame) =
+      if (cells.isEmpty) t.limit(0) else t.where(col("cell").isin(cells: _*))
+    val live = prune(codes)
+    tomb.fold(live)(t =>
+      live.join(broadcast(prune(t)), Seq("cell", idCol), "left_anti"))
+  }
+
   /** Driver-collect bound shared by [[stitchedRowNumber]]'s bucket guard
     * and `RelQueries.kaplanMeierOf`'s (the r15 ADVICE drift hazard: the
     * two guards protect the same collect shape, so they must retune

@@ -381,19 +381,6 @@ object VectorQueries {
       .select(col("vec_id"), col("embedding"), col("pr.cent_id").as("cell"))
   }
 
-  /** True IVFADC (Jégou et al.'s IVF + PQ serving layout, both realism
-    * knobs in): coarse-quantize, PQ-encode the RESIDUAL `x −
-    * centroid(cell)` with a codebook TRAINED on residuals, and probe the
-    * `nprobe` nearest cells per query with a per-(query, probed-cell)
-    * residual LUT — within a cell, `(q−c) − code(x−c)` approximates
-    * `q−x`, which is what makes coarse+fine quantization compose at high
-    * recall. Scale shape unchanged from the non-residual version: the
-    * residual subtraction and both encodes are map-side against broadcast
-    * tables, corpus rows reach the probe join as (vec_id, cell, s, code)
-    * — one scan, zero corpus-side shuffles before the final per-candidate
-    * sum; the LUT is ≤ queries·nprobe·PqM·PqK rows, broadcast. A corpus
-    * vector lives in exactly ONE inverted list and the probed cells are
-    * distinct, so no candidate dedup is needed. */
   /** The IVFADC build artifacts as live frames — coarse centroids
     * (≤[[CentroidBudget]] rows), the residual PQ codebook (PqM·PqK rows),
     * and the per-vector PQ codes (vec_id, cell, s, code). `corpusPred`
@@ -425,12 +412,26 @@ object VectorQueries {
     (cents, cb, codes)
   }
 
-  /** The IVFADC probe, independent of where the index came from (live
-    * frames for q94/q100, persisted tables for q128): route each query to
-    * its `nprobe` nearest cells, build the per-(query, probed-cell)
-    * residual LUT against the broadcast codebook, and scan the code
-    * tuples via the broadcast-LUT equi-join — the code side never
-    * shuffles before the final bounded per-candidate sum. */
+  /** True IVFADC (Jégou et al.'s IVF + PQ serving layout, both realism
+    * knobs in): coarse-quantize, PQ-encode the RESIDUAL `x −
+    * centroid(cell)` with a codebook TRAINED on residuals, and probe the
+    * `nprobe` nearest cells per query with a per-(query, probed-cell)
+    * residual LUT — within a cell, `(q−c) − code(x−c)` approximates
+    * `q−x`, which is what makes coarse+fine quantization compose at high
+    * recall. Scale shape unchanged from the non-residual version: the
+    * residual subtraction and both encodes are map-side against broadcast
+    * tables, corpus rows reach the probe join as (vec_id, cell, s, code)
+    * — one scan, zero corpus-side shuffles before the final per-candidate
+    * sum; the LUT is ≤ queries·nprobe·PqM·PqK rows, broadcast. A corpus
+    * vector lives in exactly ONE inverted list and the probed cells are
+    * distinct, so no candidate dedup is needed.
+    *
+    * This is the probe, independent of where the index came from (live
+    * frames for q94/q100, persisted tables through [[annServe]]): route
+    * each query to its `nprobe` nearest cells, build the per-(query,
+    * probed-cell) residual LUT against the broadcast codebook, and scan
+    * the code tuples via the broadcast-LUT equi-join — the code side
+    * never shuffles before the final bounded per-candidate sum. */
   private def ivfProbe(queries: org.apache.spark.sql.DataFrame,
                        cents: org.apache.spark.sql.DataFrame,
                        cb: org.apache.spark.sql.DataFrame,
@@ -463,16 +464,6 @@ object VectorQueries {
     ivfProbe(q, cents, cb, codes, nprobe)
   }
 
-  /** [[ivfAdcResidual]]'s workload served from the PERSISTED q127 index at
-    * any probe width — zero training stages in the plan. The probed cells
-    * are collected driver-side first (≤ QueryCount·nprobe ids, the bounded
-    * q05 AQE-style discipline) so the `cell IN (...)` filter is LITERAL and
-    * the bucketed code scan prunes to the probed cells' buckets.
-    * Bit-identical to the live-trained pipeline (IvfIndexPlanSpec pins it),
-    * so q128 and the recall ladder q99/q101/q133 all serve from here — at
-    * 100 TB the recall monitor probes the nightly index like any other
-    * query batch; only q94/q100 keep the one-shot train+serve shape (they
-    * ARE the live-pipeline measurement). */
   /** The two deliberate one-shot train+serve measurements' SERVE-ONLY
     * twins (q94 at nprobe=1, q100 at [[NProbe]]), probing the persisted
     * q127 index — [[graft.Bench]] times these beside the full queries so
@@ -482,24 +473,41 @@ object VectorQueries {
   private[graft] val serveOnlyTwins: Map[String,
       (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
     Map(
-      "q94_ivf_adc" -> ((s, d) => ivfAdcFromIndex(s, d, 1)),
-      "q100_ivfadc_nprobe" -> ((s, d) => ivfAdcFromIndex(s, d, NProbe)))
+      "q94_ivf_adc" -> ((s, d) => annServe(s, d, ivfIndexTables(s, d), None, 1)),
+      "q100_ivfadc_nprobe" -> ((s, d) => annServe(s, d, ivfIndexTables(s, d), None)))
 
-  private def ivfAdcFromIndex(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, nprobe: Int,
-                              queryCount: Long = QueryCount,
-                              k: Int = 5): org.apache.spark.sql.DataFrame = {
-    val (centT, cbT, codesT) = ivfIndexTables(spark, dir)
+  /** THE persisted-index ANN serve: [[ivfAdcResidual]]'s workload served
+    * from a PERSISTED index generation — the (centroids, codebook, codes)
+    * tables of [[ivfIndexTables]] (q127) or [[retainedIvfTables]] (q307's
+    * green generation) — at any probe width, depth and query count, with
+    * zero training stages in the plan. The probed cells are collected
+    * driver-side first (≤ queryCount·nprobe ids, the bounded q05
+    * AQE-style discipline) so [[QueryBase.probedCodes]]' `cell IN (...)`
+    * filter is LITERAL and the bucketed code scan prunes to the probed
+    * cells' buckets; a (cell, vec_id) `tomb` frame (q305's at-rest
+    * tombstones or [[graft.streaming.StreamingIndexErasure]]'s store) is
+    * pruned to the same cells and anti-joined before any scoring.
+    * Bit-identical to the live-trained pipeline (IvfIndexPlanSpec pins
+    * it), so q128, the recall ladder q99/q101/q133, q217, q302 and the
+    * erasure serves q305/q307/q312 all serve from here — at 100 TB the
+    * recall monitor probes the nightly index like any other query batch;
+    * only q94/q100 keep the one-shot train+serve shape (they ARE the
+    * live-pipeline measurement). */
+  private[graft] def annServe(spark: org.apache.spark.sql.SparkSession,
+      dir: String, index: (String, String, String),
+      tomb: Option[org.apache.spark.sql.DataFrame],
+      nprobe: Int = NProbe, k: Int = 5,
+      queryCount: Long = QueryCount): org.apache.spark.sql.DataFrame = {
+    val (centT, cbT, codesT) = index
     val cents = spark.table(centT)
-    val cb = spark.table(cbT)
     // ≤ queryCount rows after the pushed filter: spreading them cost a
     // 32-partition exchange in BOTH the eager cell-collect job and the
     // main probe plan (r19 floor audit)
     val q = table(spark, dir, "embeddings").where(col("vec_id") < queryCount)
     val cells = probeCells(q, cents, nprobe)
       .select("cell").distinct().collect().map(_.getLong(0)).sorted
-    val codes = spark.table(codesT).where(col("cell").isin(cells: _*))
-    ivfProbe(q, cents, cb, codes, nprobe, k)
+    val codes = probedCodes(spark.table(codesT), cells.toSeq, tomb, "vec_id")
+    ivfProbe(q, cents, spark.table(cbT), codes, nprobe, k)
   }
 
   /** Bucket count for the at-rest code table — fixed so the layout's
@@ -513,8 +521,8 @@ object VectorQueries {
     * every later serving query with zero training stages in its plan.
     * This is the boundary a production pipeline draws (build once, serve
     * many) — the round-9 verdict's top gap. */
-  private[queries] def ivfIndexTables(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): (String, String, String) = {
+  private[graft] def ivfIndexTables(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): (String, String, String) = {
     val names = AtRestTables.get(spark, s"ivfidx|$dir") { base =>
       val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
       val (cents, cb, codes) = ivfBuildFrames(spark, dir)
@@ -548,8 +556,8 @@ object VectorQueries {
     * — full forgetting of the erased vectors' training influence is the
     * next q303 blue/green generation, which trains on the retained
     * corpus by construction. */
-  private[queries] def annTombstoneTable(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): String =
+  private[graft] def annTombstoneTable(spark: org.apache.spark.sql.SparkSession,
+                              dir: String): String =
     AtRestTables.get(spark, s"eraseann|$dir") { base =>
       val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
       val tombT = s"graft_erase_vecs_$sfx"
@@ -574,8 +582,8 @@ object VectorQueries {
     * arrival batch: tombstones serve correctness NOW at O(|erased|), the
     * nightly rebuild makes forgetting total, and after the swap the
     * cohort's tombstones retire. */
-  private[queries] def retainedIvfTables(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): (String, String, String) = {
+  private[graft] def retainedIvfTables(spark: org.apache.spark.sql.SparkSession,
+                              dir: String): (String, String, String) = {
     val names = AtRestTables.get(spark, s"eraseann2|$dir") { base =>
       val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
       val (cents, cb, codes) = ivfBuildFrames(spark, dir,
@@ -852,7 +860,8 @@ object VectorQueries {
     // the plan a 100 TB deployment wants: the index is files, a query
     // batch reads only the buckets it routes to. IvfIndexPlanSpec pins
     // the shape (one embeddings scan, SelectedBucketsCount, no SMJ/SHJ).
-    "q128_ivf_index_probe" -> ((spark, dir) => ivfAdcFromIndex(spark, dir, NProbe)),
+    "q128_ivf_index_probe" -> ((spark, dir) =>
+      annServe(spark, dir, ivfIndexTables(spark, dir), None)),
 
     // incremental index maintenance (the q62 batch-vs-corpus shape for
     // vectors): encode the NEW batch (vec_id % IncrMod == IncrMod-1)
@@ -910,7 +919,8 @@ object VectorQueries {
       // dense: ADC ranks from the persisted IVF index (≤ depth rows per
       // query out of the probe, so the re-rank window is bounded)
       val wd = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-      val dense = ivfAdcFromIndex(spark, dir, NProbe, HybridQueries, HybridDepth)
+      val dense = annServe(spark, dir, ivfIndexTables(spark, dir), None,
+          k = HybridDepth, queryCount = HybridQueries)
         .withColumn("dr", row_number().over(wd))
         .select(col("query_id"), col("vec_id").as("doc_id"), col("dr"))
       // sparse: BM25 served from the persisted postings/lexicon/doclen.
@@ -974,27 +984,27 @@ object VectorQueries {
     // measures the residual composition at nprobe=1 (where recall still
     // pays for single-cell routing), and q101 measures what nprobe=3 buys
     // back. Same harness shape. The ladder SERVES FROM THE q127 AT-REST
-    // INDEX (ivfAdcFromIndex — bit-identical to the live-trained pipeline,
+    // INDEX (annServe — bit-identical to the live-trained pipeline,
     // IvfIndexPlanSpec pins it): a recall monitor probes the nightly index;
     // re-running Lloyd per evaluation point would triple-pay a training
     // stage the engine has already persisted.
     "q99_ivf_adc_recall" -> ((spark, dir) =>
       recallHarness(defs("q40_ann_brute")(spark, dir),
-        ivfAdcFromIndex(spark, dir, 1))),
+        annServe(spark, dir, ivfIndexTables(spark, dir), None, 1))),
 
-    // recall@5 of the nprobe=3 IVFADC — the number the nprobe knob is
-    // tuned against: q99 (nprobe=1) vs this quantifies exactly the
-    // routing recall the extra probes recover.
     // the wide end of the nprobe ladder: same pipeline at nprobe=5 —
     // with q99 (np1) and q101 (np3) this measures the knob's full curve
     // in-engine, each point against the same exact-truth harness
     "q133_ivfadc_np5_recall" -> ((spark, dir) =>
       recallHarness(defs("q40_ann_brute")(spark, dir),
-        ivfAdcFromIndex(spark, dir, NProbeWide))),
+        annServe(spark, dir, ivfIndexTables(spark, dir), None, NProbeWide))),
 
+    // recall@5 of the nprobe=3 IVFADC — the number the nprobe knob is
+    // tuned against: q99 (nprobe=1) vs this quantifies exactly the
+    // routing recall the extra probes recover.
     "q101_ivfadc_nprobe_recall" -> ((spark, dir) =>
       recallHarness(defs("q40_ann_brute")(spark, dir),
-        ivfAdcFromIndex(spark, dir, NProbe))),
+        annServe(spark, dir, ivfIndexTables(spark, dir), None))),
 
     // exact ANN baseline: brute-force cosine top-5 per query vector.
     // Plans as BroadcastNestedLoopJoin with the 10-row query side broadcast
@@ -1439,16 +1449,12 @@ object VectorQueries {
     // fetch is one scan with the join key pushed, zero training stages
     // anywhere (serves from the q127 index).
     "q217_adc_refine" -> ((spark, dir) => {
-      val (centT, cbT, codesT) = ivfIndexTables(spark, dir)
-      val cents = spark.table(centT)
-      val cb = spark.table(cbT)
-      val q = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
-      val cells = probeCells(q, cents, NProbe)
-        .select("cell").distinct().collect().map(_.getLong(0)).sorted
-      val codes = spark.table(codesT).where(col("cell").isin(cells: _*))
-      val coarse = ivfProbe(q, cents, cb, codes, NProbe, RefineK)
+      val coarse = annServe(spark, dir, ivfIndexTables(spark, dir), None,
+          k = RefineK)
         .select(col("query_id"), col("vec_id").as("cand_id"), col("adc"))
-      val qv = q.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+      // the same memoized query-vector scan annServe probes with
+      val qv = table(spark, dir, "embeddings").where(col("vec_id") < QueryCount)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       table(spark, dir, "embeddings")
         .join(broadcast(coarse), col("vec_id") === col("cand_id"))
         .join(broadcast(qv), "query_id")
@@ -1770,8 +1776,8 @@ object VectorQueries {
     // centroids/codebook is a TRAINING artifact; purging that is the
     // q303 blue/green rebuild, not a serve-path patch.)
     "q305_erasure_ann_serve" -> ((spark, dir) =>
-      tombstonedAnnServe(spark, dir,
-        spark.table(annTombstoneTable(spark, dir)))),
+      annServe(spark, dir, ivfIndexTables(spark, dir),
+        Some(spark.table(annTombstoneTable(spark, dir))))),
 
     // FULL-FORGET REBUILD — the green generation of the erasure story:
     // q305 keeps serving NOW by tombstoning the blue index; this is the
@@ -1787,7 +1793,7 @@ object VectorQueries {
     // (q305) and training erasure (q307) are different guarantees, and
     // the engine serves both.
     "q307_erasure_forget_rebuild" -> ((spark, dir) =>
-      retainedAnnServe(spark, dir)),
+      annServe(spark, dir, retainedIvfTables(spark, dir), None)),
 
     // THE GENERATION SWAP, END TO END — the arrow q307's scaladoc only
     // asserted, now gate-checked (the r16 verdict's #2): after the green
@@ -1810,8 +1816,7 @@ object VectorQueries {
     // the pinned reader's answer, the swapped reader's answer, and that
     // the pointer-resolved serve IS the retained rebuild.
     "q312_erasure_generation_swap" -> ((spark, dir) => {
-      val blue = tombstonedAnnServe(spark, dir,
-          spark.table(annTombstoneTable(spark, dir)))
+      val blue = servedGeneration(spark, dir, "blue")
         .select(lit("blue_pinned").as("gen"), col("query_id"),
           col("vec_id"), col("adc"))
       val green = swappedAnnServe(spark, dir)
@@ -1820,43 +1825,6 @@ object VectorQueries {
       blue.unionByName(green)
     })
   )
-
-  /** q307's serve: the green (retained-trained) generation probed with
-    * NO tombstone table anywhere in the plan — the post-swap serving
-    * path. ONE definition shared by q307, q312's green branch, and
-    * ErasureRetirementSpec's equivalence proof. */
-  private[graft] def retainedAnnServe(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val (centT, cbT, codesT) = retainedIvfTables(spark, dir)
-    val cents = spark.table(centT)
-    val q = table(spark, dir, "embeddings")
-      .where(col("vec_id") < QueryCount) // ≤ QueryCount rows: no spread
-    val cells = probeCells(q, cents, NProbe)
-      .select("cell").distinct().collect().map(_.getLong(0)).sorted
-    val codes = spark.table(codesT).where(col("cell").isin(cells: _*))
-    ivfProbe(q, cents, spark.table(cbT), codes, NProbe)
-  }
-
-  /** The green generation's codes with q305's tombstones STILL applied —
-    * only ErasureRetirementSpec uses this: proving it equal to
-    * [[retainedAnnServe]] is the retirement theorem (the tombstoned
-    * cohort is absent from the green codes by construction, so dropping
-    * the anti join after the swap loses nothing). */
-  private[graft] def retainedAnnServeWithTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val (centT, cbT, codesT) = retainedIvfTables(spark, dir)
-    val cents = spark.table(centT)
-    val q = table(spark, dir, "embeddings")
-      .where(col("vec_id") < QueryCount) // ≤ QueryCount rows: no spread
-    val cells = probeCells(q, cents, NProbe)
-      .select("cell").distinct().collect().map(_.getLong(0)).sorted
-    val codes = spark.table(codesT).where(col("cell").isin(cells: _*))
-    val tomb = spark.table(annTombstoneTable(spark, dir))
-      .where(col("cell").isin(cells: _*))
-    val live = codes.join(broadcast(tomb), Seq("cell", "vec_id"), "left_anti")
-    ivfProbe(q, cents, spark.table(cbT), live, NProbe)
-  }
 
   /** The at-rest GENERATION POINTER for the erasure lifecycle — the tiny
     * control-plane table a blue/green swap actually flips: written (and
@@ -1884,9 +1852,9 @@ object VectorQueries {
     * must land here). */
   private[graft] def servedGeneration(spark: org.apache.spark.sql.SparkSession,
       dir: String, active: String): org.apache.spark.sql.DataFrame =
-    if (active == "green") retainedAnnServe(spark, dir)
-    else tombstonedAnnServe(spark, dir,
-      spark.table(annTombstoneTable(spark, dir)))
+    if (active == "green") annServe(spark, dir, retainedIvfTables(spark, dir), None)
+    else annServe(spark, dir, ivfIndexTables(spark, dir),
+      Some(spark.table(annTombstoneTable(spark, dir))))
 
   /** The unpinned reader's serve: resolve the generation pointer and
     * serve the ACTIVE generation. The pointer read is load-bearing: this
@@ -1896,29 +1864,6 @@ object VectorQueries {
     val active = spark.table(eraseGenPointerTable(spark, dir))
       .select("active_gen").collect()(0).getString(0)
     servedGeneration(spark, dir, active)
-  }
-
-  /** The q305 tombstoned-ADC serve over a caller-supplied (cell, vec_id)
-    * tombstone frame — ONE definition shared by the q305 at-rest path
-    * and [[graft.streaming.StreamingIndexErasure]]'s replay proof (the
-    * erasedBm25Serve discipline applied to the vector index), so the
-    * stream-maintained tombstone store cannot drift from the batch
-    * purge. Both the code and tombstone reads prune to the probed cells'
-    * literal IN; the anti join drops erased candidates BEFORE any
-    * scoring work. */
-  private[graft] def tombstonedAnnServe(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tomb: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val (centT, cbT, codesT) = ivfIndexTables(spark, dir)
-    val cents = spark.table(centT)
-    val q = table(spark, dir, "embeddings")
-      .where(col("vec_id") < QueryCount) // ≤ QueryCount rows: no spread
-    val cells = probeCells(q, cents, NProbe)
-      .select("cell").distinct().collect().map(_.getLong(0)).sorted
-    val codes = spark.table(codesT).where(col("cell").isin(cells: _*))
-    val tombP = tomb.where(col("cell").isin(cells: _*))
-    val live = codes.join(broadcast(tombP), Seq("cell", "vec_id"), "left_anti")
-    ivfProbe(q, cents, spark.table(cbT), live, NProbe)
   }
 
   /** q286's whole derivation on a caller-supplied (vec_id, label,

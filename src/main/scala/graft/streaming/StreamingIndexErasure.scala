@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * stored, the q305/q310 discipline) and lands their (cell, id) rows
   * under an id-keyed `batch=<id>/` directory. The serve-side anti join
   * is THE q305/q310 definition
-  * ([[graft.queries.VectorQueries.tombstonedAnnServe]] /
-  * [[graft.queries.MultimodalQueries.mmTombstonedServe]]), so the
+  * ([[graft.queries.VectorQueries.annServe]] /
+  * [[graft.queries.MultimodalQueries.mmProbe]] given a tombstone
+  * frame), so the
   * stream-maintained tombstones cannot drift from the batch purge —
   * StreamingAnnErasureSpec replays the full cohort through shuffled,
   * overlapping micro-batches and proves the accumulated store and the
@@ -115,8 +116,9 @@ object StreamingIndexErasure {
 
   /** The accumulated (cell, id) tombstone set — the active generation
     * plus committed loose batches above its coverage — exactly what
-    * [[graft.queries.VectorQueries.tombstonedAnnServe]] /
-    * [[graft.queries.MultimodalQueries.mmTombstonedServe]] anti-join.
+    * [[graft.queries.VectorQueries.annServe]] /
+    * [[graft.queries.MultimodalQueries.mmProbe]] anti-join when passed
+    * it as their tombstone frame.
     * Empty (typed) before the first commit, so a serve racing the first
     * micro-batch simply filters nothing. */
   def readTombstones(spark: SparkSession, outDir: String,

@@ -29,9 +29,10 @@ class ErasureRetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy("query_id", "adc", "vec_id").collect()
         .map(_.toString).toIndexedSeq
-    val retired = rows(graft.queries.VectorQueries.retainedAnnServe(spark, dir))
-    val tombstoned = rows(
-      graft.queries.VectorQueries.retainedAnnServeWithTombstones(spark, dir))
+    import graft.queries.VectorQueries.{annServe, annTombstoneTable, retainedIvfTables}
+    val retired = rows(annServe(spark, dir, retainedIvfTables(spark, dir), None))
+    val tombstoned = rows(annServe(spark, dir, retainedIvfTables(spark, dir),
+      Some(spark.table(annTombstoneTable(spark, dir)))))
     assert(retired.nonEmpty && retired == tombstoned,
       "retiring the tombstones changed the green generation's serve — " +
         "the swap must NOT retire them yet")

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.MultimodalQueries.{mmProbe, mmQueryFrame}
+import graft.queries.VectorQueries.{annServe, ivfIndexTables}
 import graft.streaming.StreamingIndexErasure
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -70,6 +72,9 @@ class StreamingAnnErasureSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("cell"), col(idCol)).as[(Long, Long)].collect().toSet
   }
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toIndexedSeq
+
   test("streamed ANN tombstones accumulate exactly the q305 batch purge and serve its exact top-k") {
     val ss = spark; import ss.implicits._
     val codesT = annCodesTable()
@@ -77,6 +82,12 @@ class StreamingAnnErasureSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids.size >= 8, s"degenerate fixture: only ${ids.size} erased vecs")
     val outDir = java.nio.file.Files.createTempDirectory("graft-sanne-").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-sanne-ckpt-").toString
+    // a serve racing the first micro-batch filters nothing: the empty
+    // store serves exactly the unerased q128 answer
+    val unerased = rows(SparkEntry.queries("q128_ivf_index_probe")(spark, dir))
+    assert(unerased.nonEmpty && rows(annServe(spark, dir, ivfIndexTables(spark, dir),
+        Some(StreamingIndexErasure.readTombstones(spark, outDir, "vec_id")))) == unerased,
+      "the empty ANN tombstone store filtered something: != q128")
     val stream = MemoryStream[VecReq](spark)
     val q = StreamingIndexErasure.start(stream.toDF(),
       spark.table(codesT), "vec_id", outDir, ckpt)
@@ -91,10 +102,8 @@ class StreamingAnnErasureSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     assert(storeSet(outDir, "vec_id") == truthOf(codesT, "vec_id"),
       "streamed ANN tombstones != the batch purge's (cell, vec_id) set")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toIndexedSeq
-    val fromStream = rows(graft.queries.VectorQueries.tombstonedAnnServe(
-      spark, dir, StreamingIndexErasure.readTombstones(spark, outDir, "vec_id")))
+    val fromStream = rows(annServe(spark, dir, ivfIndexTables(spark, dir),
+      Some(StreamingIndexErasure.readTombstones(spark, outDir, "vec_id"))))
     val fromBatch = rows(SparkEntry.queries("q305_erasure_ann_serve")(spark, dir))
     assert(fromStream.nonEmpty && fromStream == fromBatch,
       "ANN top-k served from the stream-maintained tombstones != q305")
@@ -106,16 +115,18 @@ class StreamingAnnErasureSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ids = cohortOf(codesT, "doc_id")
     assert(ids.size >= 8, s"degenerate fixture: only ${ids.size} erased docs")
     val outDir = java.nio.file.Files.createTempDirectory("graft-smme-").toString
+    val unerased = rows(SparkEntry.queries("q298_mm_index_probe")(spark, dir))
+    assert(unerased.nonEmpty && rows(mmProbe(spark, dir, mmQueryFrame(spark, dir),
+        Some(StreamingIndexErasure.readTombstones(spark, outDir, "doc_id")))) == unerased,
+      "the empty mm tombstone store filtered something: != q298")
     ids.grouped(math.max(1, ids.size / 4)).zipWithIndex.foreach { case (chunk, i) =>
       StreamingIndexErasure.writeBatch(chunk.toDF("doc_id"),
         spark.table(codesT), "doc_id", outDir, i.toLong)
     }
     assert(storeSet(outDir, "doc_id") == truthOf(codesT, "doc_id"),
       "streamed mm tombstones != the batch purge's (cell, doc_id) set")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toIndexedSeq
-    val fromStream = rows(graft.queries.MultimodalQueries.mmTombstonedServe(
-      spark, dir, StreamingIndexErasure.readTombstones(spark, outDir, "doc_id")))
+    val fromStream = rows(mmProbe(spark, dir, mmQueryFrame(spark, dir),
+      Some(StreamingIndexErasure.readTombstones(spark, outDir, "doc_id"))))
     val fromBatch = rows(SparkEntry.queries("q310_erasure_mm_serve")(spark, dir))
     assert(fromStream.nonEmpty && fromStream == fromBatch,
       "mm top-k served from the stream-maintained tombstones != q310")
@@ -186,10 +197,8 @@ class StreamingAnnErasureSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((storeSet(outDir, "vec_id"), looseDirs()) == before,
       "a replayed pre-compaction batch id changed the store")
     // the serve is bit-equal through the compacted store
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toIndexedSeq
-    assert(rows(graft.queries.VectorQueries.tombstonedAnnServe(spark, dir,
-        StreamingIndexErasure.readTombstones(spark, outDir, "vec_id"))) ==
+    assert(rows(annServe(spark, dir, ivfIndexTables(spark, dir),
+        Some(StreamingIndexErasure.readTombstones(spark, outDir, "vec_id")))) ==
       rows(SparkEntry.queries("q305_erasure_ann_serve")(spark, dir)),
       "top-k served from the compacted tombstones != q305")
   }

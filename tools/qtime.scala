@@ -3,7 +3,9 @@
 //   --conf ... --jars target/scala-2.13/symtseriesspark_2.13-0.1.0.jar \
 //   -I tools/qtime.scala
 // Env: QT_QUERIES=q144,q140 (comma list, "slowest" = BENCH_FULL.json's
-//      top QT_TOP entries, or "all"), QT_TOP=30,
+//      top QT_TOP entries, or "all"), QT_TOP=30, SPARK_GRAFT_REPO= (the
+//      checkout whose BENCH_FULL.json ranks "slowest"; default: the
+//      working directory, which tools/qtime.sh sets to its checkout),
 //      QT_PASSES=3, QT_SF=/root/testdata/sf0.1, QT_PLANDIR= (optional:
 //      write explain("formatted") per query), QT_TAG=before|after
 // Emits one line per query: QT <name> <min> plus a QT_JOBS line with
@@ -30,7 +32,7 @@ val names: Seq[String] = qsel match {
     // top-N of the committed full per-query map, slowest first
     val topN = sys.env.getOrElse("QT_TOP", "30").toInt
     val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"))
+      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO", "."), "BENCH_FULL.json"))
     // rank only the "queries" object: the builds and train_serve_split
     // maps carry q-named keys too (q78, q94, q100)
     val queriesObj = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
