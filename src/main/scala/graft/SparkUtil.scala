@@ -11,6 +11,26 @@ object SparkUtil {
     *    TIMESTAMP(NANOS), which Spark 4 otherwise refuses to read.
     *  - AQE on: runtime coalescing + skew-join handling is part of the
     *    100TB design (skewed series keys get split automatically).
+    *  - `fs.file.impl` = [[graft.spark.LocalFileSystem]]: without Hadoop's
+    *    native library, `RawLocalFileSystem.setPermission` (called from
+    *    `LocalFSFileOutputStream.<init>` on every non-append create) forks
+    *    a `chmod` for each file and again for its `.crc`. The replacement
+    *    sets permissions through NIO and still writes and verifies the
+    *    `.crc` sidecars. Hadoop caches one FileSystem per scheme per JVM,
+    *    so this holds only because `configure` runs before any `file:`
+    *    FileSystem is created.
+    *  - `checkpointFileManagerClass` = the FileSystem-based manager: the
+    *    default FileContext manager reaches `file:` through Hadoop's
+    *    `LocalFs`, which hard-wires the stock raw FS (so `fs.file.impl`
+    *    cannot reach it), and its `AbstractFileSystem.rename` forks
+    *    `readlink` four times (`getFileLinkStatus` → `FileUtil.readLink`,
+    *    twice each for the file and its `.crc`). JFR `jdk.ProcessStart`
+    *    stacks put these two sites at ~40 forks per micro-batch. The
+    *    FileSystem manager writes a temp file and commits it with
+    *    `rename(2)`, atomic on local disk and on HDFS (not on object
+    *    stores, which need their own manager). The offset/commit log
+    *    layout is unchanged, `.crc` files are kept, and Spark's state-store
+    *    checksum files (`ChecksumCheckpointFileManager`) stay on.
     */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.spark.GraftExtensions")
@@ -26,6 +46,9 @@ object SparkUtil {
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.spark.LocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   /** Read one of the testdata tables from `dir`. Column pruning and filter
     * pushdown reach the parquet scan because this stays a plain relation.
