@@ -1,12 +1,19 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: times every SparkEntry query at the given scale
   * factor and prints one JSON line. A short warmup runs first so the
-  * first timed query doesn't absorb JVM/codegen/session startup. */
+  * first timed query doesn't absorb JVM/codegen/session startup. An
+  * optional first argument, a [[SparkEntry.select]] query list, times only
+  * those queries and never writes the committed `BENCH_FULL*.json`. */
 object Bench {
 
   /** Fully materialize a frame. `df.count()` lets Catalyst prune every
@@ -16,7 +23,48 @@ object Bench {
     * actually produce its output rows. */
   private def force(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
+  /** Jobs started, stages completed and those stages' tasks. */
+  private[graft] final case class Sched(jobs: Long, stages: Long, tasks: Long) {
+    def -(o: Sched): Sched = Sched(jobs - o.jobs, stages - o.stages, tasks - o.tasks)
+  }
+
+  /** Scheduler counts off Spark's listener bus, running totals. */
+  private[graft] final class SchedCounter extends SparkListener {
+    private val jobs, stages, tasks = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet(); tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    /** The totals once the bus has delivered every event posted so far. */
+    def read(sc: SparkContext): Sched = {
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+      Sched(jobs.get, stages.get, tasks.get)
+    }
+  }
+
+  /** One timing: wall seconds, what the query threw, its scheduler counts. */
+  private[graft] final case class Run(seconds: Double, failure: Option[Throwable], sched: Sched)
+
+  /** Time one query STANDALONE (caches and the q75/q83 component memo
+    * cleared first). `counter` must listen on the session's context; its
+    * reads, bus drains included, sit outside the timed interval. */
+  private[graft] def measure(spark: SparkSession, counter: SchedCounter,
+      fn: (SparkSession, String) => DataFrame, sfDir: String): Run = {
+    graft.queries.DedupQueries.invalidateComponentMemo()
+    spark.catalog.clearCache() // queries may cache(); don't leak across timings
+    val before = counter.read(spark.sparkContext)
+    val t0 = System.nanoTime()
+    val failure = try { force(fn(spark, sfDir)); None }
+      catch { case NonFatal(e) => Some(e) }
+    val dt = (System.nanoTime() - t0) / 1e9
+    Run(dt, failure, counter.read(spark.sparkContext) - before)
+  }
+
   def main(args: Array[String]): Unit = {
+    // resolved before the session starts, so a misspelled entry fails fast
+    val selected = args.headOption
+    val registry = SparkEntry.queries
+    val names = SparkEntry.select(selected)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkUtil.configure(
@@ -35,7 +83,7 @@ object Bench {
     // warmup: exercise scan + shuffle + window + UDF codepaths once
     try {
       spark.range(1 << 20).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("q02_sax_window_encode")
+      registry.get("q02_sax_window_encode")
         .foreach(fn => force(fn(spark, sfDir)))
     } catch { case _: Throwable => () }
     spark.catalog.clearCache()
@@ -55,6 +103,17 @@ object Bench {
     }.min
     val probeStart = probe()
 
+    val counter = new SchedCounter
+    spark.sparkContext.addSparkListener(counter)
+    // log EVERY failed pass (r17 ADVICE): a query that warms fine but
+    // throws on one timed pass would otherwise report the minimum of the
+    // others with no visible signal at all
+    def logged(label: String, pass: Int, run: Run): Option[Run] = {
+      run.failure.foreach(e =>
+        System.err.println(s"[bench] $label pass $pass threw: ${e.getMessage}"))
+      if (run.failure.isEmpty) Some(run) else None
+    }
+
     // One UNTIMED warm pass over every query, then three timed passes,
     // min per query. The warm pass pays each query's first-execution
     // codegen/JIT once (the r8 probe measured 3-5 s of it on q88's 5-join
@@ -68,30 +127,25 @@ object Bench {
     // every query is measured STANDALONE and per-query numbers stay
     // comparable across rounds regardless of execution order (Verify
     // keeps the sharing; only the benchmark isolates it).
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val best = scala.collection.mutable.Map[String, Double]()
+    // scheduler counts of each query's last successful timed pass
+    val sched = scala.collection.mutable.Map[String, Sched]()
     var pass1Total = 0.0 // first TIMED pass total, comparable to pre-r7 rounds
     var pass0Total = 0.0 // the untimed WARM pass: bootstrap (builds) + first
                          // execution — emitted so cold-start cost is visible
     graft.queries.AtRestTables.resetBuildSeconds()
-    for (pass <- 0 to 3; (name, fn) <- names) {
-      graft.queries.DedupQueries.invalidateComponentMemo()
-      spark.catalog.clearCache() // queries may cache(); don't leak across timings
-      val t0 = System.nanoTime()
+    for (pass <- 0 to 3; name <- names) {
       // a THROWING query must never record its ~0.05s analysis-failure time
       // as a benchmark number (r10's broken queries made the total look
       // BETTER): only successful passes feed best/pass1Total; a query with
       // no successful timed pass reports -1.0 and counts into "errors".
-      val ok = try { force(fn(spark, sfDir)); true }
-      catch { case scala.util.control.NonFatal(e) =>
-        if (pass == 0) System.err.println(s"[bench] $name threw: ${e.getMessage}")
-        false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (pass == 0 && ok) pass0Total += dt
-      if (pass >= 1 && ok) { // pass 0 is the warm pass: never timed per query
-        if (pass == 1) pass1Total += dt
-        best(name) = math.min(best.getOrElse(name, Double.MaxValue), dt)
+      logged(name, pass, measure(spark, counter, registry(name), sfDir)).foreach { run =>
+        if (pass == 0) pass0Total += run.seconds
+        else { // pass 0 is the warm pass: never timed per query
+          if (pass == 1) pass1Total += run.seconds
+          best(name) = math.min(best.getOrElse(name, Double.MaxValue), run.seconds)
+          sched(name) = run.sched
+        }
       }
     }
     // recall-ladder shared-truth supplement: the 8 recall harnesses
@@ -104,25 +158,28 @@ object Bench {
     // minima: the r13 artifact recorded a one-shot shared run (66 s) vs
     // the sum of min-of-3 standalone numbers (18 s) — the single shot
     // inherited whatever load window it landed in and the comparison was
-    // meaningless, so the shared run is now ALSO min-of-3 (no extra warm
-    // pass needed — every ladder query is codegen-warm from the main
-    // loop's 4 passes) under the same memo-invalidate + cache-clear
-    // start-state as each standalone measurement.
+    // meaningless, so the shared run is now ALSO min-of-3 under the same
+    // memo-invalidate + cache-clear start-state as each standalone
+    // measurement. It has no warm pass: the main loop leaves the JIT and
+    // the builds warm but not the generated classes, because Spark's
+    // 100-entry class cache (spark.sql.codegen.cache.maxEntries) is smaller
+    // than one pass over the registry. Shared pass 1 recompiles; passes 2-3
+    // are warm only if the ladder's own classes fit in that cache.
     val ladder = Seq("q90_pq_recall", "q99_ivf_adc_recall",
       "q101_ivfadc_nprobe_recall", "q105_opq_recall",
       "q111_ivf_nprobe_recall", "q113_sq8_recall",
       "q117_trunc_rerank_recall", "q133_ivfadc_np5_recall")
-      .filter(SparkEntry.queries.contains)
-    var ladderShared = Double.MaxValue
-    for (pass <- 1 to 3) {
+      .filter(names.contains)
+    var ladderShared = if (ladder.isEmpty) 0.0 else Double.MaxValue
+    for (pass <- 1 to 3 if ladder.nonEmpty) {
       graft.queries.DedupQueries.invalidateComponentMemo()
       spark.catalog.clearCache()
       val lt0 = System.nanoTime()
       var running = "" // which query was in flight when a pass failed
       val ok =
         try { ladder.foreach { n => running = n
-          force(SparkEntry.queries(n)(spark, sfDir)) }; true }
-        catch { case scala.util.control.NonFatal(e) =>
+          force(registry(n)(spark, sfDir)) }; true }
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] ladder pass $pass failed in $running: $e")
           false
         }
@@ -138,25 +195,14 @@ object Bench {
     // train_est per query so adjudication can separate designed training
     // cost from serve regressions without reading git history. Totals
     // above are untouched.
-    val twins = graft.queries.VectorQueries.serveOnlyTwins.toSeq.sortBy(_._1)
+    val twins = graft.queries.VectorQueries.serveOnlyTwins.toSeq
+      .filter(t => names.contains(t._1)).sortBy(_._1)
     val serveBest = twins.map { case (name, fn) =>
-      var b = Double.MaxValue
-      for (pass <- 0 to 3) { // pass 0 warm (pays any index build), 3 timed
-        graft.queries.DedupQueries.invalidateComponentMemo()
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        // log EVERY failed pass (r17 ADVICE): a twin that warms fine but
-        // throws on the timed passes would otherwise report -1.0 with no
-        // visible signal at all
-        val ok = try { force(fn(spark, sfDir)); true }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] serve twin $name pass $pass threw: ${e.getMessage}")
-          false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (pass >= 1 && ok) b = math.min(b, dt)
+      val timed = (0 to 3).flatMap { pass => // pass 0 warm (pays any index build)
+        val run = logged(s"serve twin $name", pass, measure(spark, counter, fn, sfDir))
+        if (pass == 0) None else run.map(_.seconds)
       }
-      name -> (if (b == Double.MaxValue) -1.0 else b)
+      name -> (if (timed.isEmpty) -1.0 else timed.min)
     }.toMap
     val loadEnd = loadAvg()
     val probeEnd = probe()
@@ -168,7 +214,7 @@ object Bench {
     // load, not new build work
     val builds = graft.queries.AtRestTables.buildSeconds.toSeq.sortBy(-_._2)
     val buildsTotal = builds.map(_._2).sum
-    val results = names.map { case (name, _) => name -> best.getOrElse(name, -1.0) }
+    val results = names.map(name => name -> best.getOrElse(name, -1.0))
     val ladderStandalone = ladder.map(n => math.max(best.getOrElse(n, 0.0), 0.0)).sum
     // serve-twin failures count as errors too (r17 ADVICE): a degraded
     // train_serve_split must redden the artifact, not just print -1.0
@@ -210,7 +256,13 @@ object Bench {
     // "cpus" rides the line so a scaling-run artifact is self-describing
     // (the r18 verdict's #2: the 8-core sweep's map was indistinguishable
     // from the 32-core one once written to disk)
-    def jsonLine(qs: String, slowestOnly: Boolean, bs: Seq[(String, Double)]): String =
+    // "sched" (full artifact only, tail budget): per query, the
+    // [jobs, stages, tasks] of its last successful timed pass
+    val schedJson = results.flatMap { case (name, _) => sched.get(name).map(c =>
+      "\"" + name.split("_").head + "\":[" + c.jobs + "," + c.stages + "," + c.tasks + "]")
+    }.mkString("{", ",", "}")
+    def jsonLine(qs: String, slowestOnly: Boolean, bs: Seq[(String, Double)],
+        withSched: Boolean): String =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":$cpus,"passes":3,"warm_pass":true,"errors":$errors,""" +
         s""""load_start":"$loadStart","load_end":"$loadEnd",""" +
         s""""probe_start":${f2(probeStart)},"probe_end":${f2(probeEnd)},""" +
@@ -219,7 +271,8 @@ object Bench {
         s""""ladder_shared":${f2(ladderShared)},"ladder_standalone":${f2(ladderStandalone)},""" +
         s""""train_serve_split":$splitJson,""" +
         s""""queries_all":${results.size},"queries_slowest_only":$slowestOnly,""" +
-        s""""queries":$qs,"sf":"$sfDir"}"""
+        s""""queries":$qs,""" + (if (withSched) s""""sched":$schedJson,""" else "") +
+        s""""sf":"$sfDir"}"""
     // stdout for the driver (build.sbt routes `run` output straight to
     // stdout, no [info] prefix): the slowest-60 subset, sized to survive
     // the driver's tail capture. The full map goes to bench_out.json
@@ -230,8 +283,8 @@ object Bench {
     // gitignored; the absolute-path copy survives any driver cwd and
     // rides the end-of-round commit, so every round carries all
     // per-query timings machine-parseable.
-    println(jsonLine(qsTop, slowestOnly = true, builds.take(10)))
-    val fullLine = jsonLine(qsFull, slowestOnly = false, builds) + "\n"
+    println(jsonLine(qsTop, slowestOnly = true, builds.take(10), withSched = false))
+    val fullLine = jsonLine(qsFull, slowestOnly = false, builds, withSched = true) + "\n"
     def writeArtifact(path: String, what: String): Unit =
       try Files.writeString(Paths.get(path), fullLine)
       catch {
@@ -248,9 +301,11 @@ object Bench {
     // non-default core count writes BENCH_FULL_c<N>.json so it can never
     // clobber the canonical 32-core map (the r18 verdict's #2 — the
     // driver's 8-core run overwrote the committed 32-core artifact)
+    // A selected run writes none, so a subset can never replace the map.
     val fullName = if (cpus == "32") "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
-    writeArtifact(sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo") + s"/$fullName",
-      "the committed per-query artifact")
+    if (selected.isEmpty)
+      writeArtifact(sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo") + s"/$fullName",
+        "the committed per-query artifact")
     spark.stop()
   }
 }

@@ -18,6 +18,24 @@ object SparkEntry {
     SaxQueries.defs ++ RelQueries.defs ++ DedupQueries.defs ++
       TextQueries.defs ++ VectorQueries.defs ++ MultimodalQueries.defs
 
+  /** The registry names a comma-separated query list selects, sorted. Each
+    * entry is a full name or its `qNN` prefix (`q05` for `q05_sax_topk`).
+    * An entry that names no query throws, so a misspelled filter fails
+    * instead of selecting nothing, and so does a list with no entry. No
+    * filter selects every query. */
+  def select(filter: Option[String]): Seq[String] = {
+    val all = queries.keys.toSeq.sorted
+    filter.fold(all) { f =>
+      val picked = f.split(",").map(_.trim).filter(_.nonEmpty).toSeq.flatMap { q =>
+        val hit = all.filter(k => k == q || k.startsWith(q + "_"))
+        require(hit.nonEmpty, s"no query named $q")
+        hit
+      }
+      require(picked.nonEmpty, s"the query list '$f' names no query")
+      picked.distinct.sorted
+    }
+  }
+
   /** Session pragmas prefixed to every oracle statement. The gate's DuckDB
     * runs with default config (80%-RAM buffer pool, one worker thread per
     * core); this container caps thread creation, and overrunning the cap

@@ -7,12 +7,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter for a fast local
     // loop on one new query (the driver's 2-arg invocation is unchanged;
-    // oracle_sql.json is filtered too so tools/compare.py follows along)
+    // oracle_sql.json is filtered too so tools/compare.py follows along).
+    // Entries are full names or qNN prefixes; an unknown one throws here,
+    // before any output: an empty dump would compare as a clean pass.
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case Array(s, o, f) => (s, o, Some(f))
     }
-    def keep(name: String): Boolean = only.forall(_.contains(name))
+    val keep = SparkEntry.select(only).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkUtil.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()

@@ -48,6 +48,23 @@ class OracleParitySpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"suspect oracle SQL: ${bad.toSeq.sorted.mkString(", ")}")
   }
+
+  test("select resolves qNN prefixes and full names to registry names") {
+    assert(SparkEntry.select(Some("q05")) == Seq("q05_sax_topk"))
+    assert(SparkEntry.select(Some("q142_aqe_skew_join, q05")) ==
+      Seq("q05_sax_topk", "q142_aqe_skew_join"))
+  }
+
+  test("select throws on an unknown entry and names it") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("q05,q142_aqe_skw_join")))
+    assert(e.getMessage.contains("q142_aqe_skw_join"))
+    intercept[IllegalArgumentException](SparkEntry.select(Some(" , ")))
+  }
+
+  test("select with no filter returns every registry key") {
+    assert(SparkEntry.select(None) == SparkEntry.queries.keys.toSeq.sorted)
+  }
 }
 
 object OracleParitySpec {

@@ -1,0 +1,64 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Session config is set in one place (the [[SourceEncodingSpec]]
+  * source-scan idiom): every key [[SparkUtil.configure]] sets belongs to
+  * it alone. A launcher script once copied those settings as `--conf`
+  * flags, and the copy drifted: it lacked the two local-I/O keys, so its
+  * sessions forked a process per written file. This spec reads the keys
+  * `SparkUtil.scala` sets with `.config("…"` and fails when any other file
+  * under `src/main` or `tools/` sets one of them through `--conf`,
+  * `.config("` or `conf.set("`. Comment lines are skipped, so a doc
+  * example may still name a key. Needs no SparkSession. */
+class SessionConfigSpec extends AnyFunSuite {
+
+  private val Owner = java.nio.file.Paths.get("src/main/scala/graft/SparkUtil.scala")
+
+  private val Setters = Seq(
+    """--conf\s+"?([A-Za-z0-9_.]+)=""".r,
+    """\.config\(\s*"([^"]+)"""".r,
+    """conf\.set\(\s*"([^"]+)"""".r)
+
+  private def lines(f: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(f).asScala.toSeq
+  }
+
+  private def isComment(l: String): Boolean = {
+    val t = l.trim
+    Seq("//", "/*", "*", "#").exists(t.startsWith)
+  }
+
+  /** The keys [[SparkUtil.configure]] sets. */
+  private def owned: Set[String] = lines(Owner).filterNot(isComment)
+    .flatMap(l => Setters(1).findAllMatchIn(l).map(_.group(1))).toSet
+
+  private def files: Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    Seq("src/main", "tools").flatMap { root =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_)).toSeq.sortBy(_.toString)
+    }.filterNot(_.normalize == Owner.normalize)
+  }
+
+  test("the scan sees the keys SparkUtil.configure sets") {
+    val keys = owned
+    assert(Seq("spark.sql.extensions", "spark.sql.session.timeZone",
+      "spark.hadoop.fs.file.impl",
+      "spark.sql.streaming.checkpointFileManagerClass").forall(keys),
+      s"run from the repository root, or update the pattern: found $keys")
+  }
+
+  test("no file outside SparkUtil sets a key that configure sets") {
+    val keys = owned
+    val hits = for {
+      f <- files
+      (l, i) <- lines(f).zipWithIndex if !isComment(l)
+      k <- Setters.flatMap(_.findAllMatchIn(l).map(_.group(1))) if keys(k)
+    } yield s"$f:${i + 1}: $k"
+    assert(hits.isEmpty,
+      s"${hits.size} settings copied from SparkUtil.configure — build the " +
+        s"session through configure instead:\n${hits.mkString("\n")}")
+  }
+}
