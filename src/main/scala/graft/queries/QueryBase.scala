@@ -140,32 +140,12 @@ object QueryBase {
   /** Repartition a small single-file table before UDF-heavy work: the
     * testdata tables are one parquet file each, so Spark plans ONE input
     * split and the whole pipeline above the first shuffle runs on a single
-    * core. One cheap round-robin shuffle buys full parallelism.
-    *
-    * SCALE-ADAPTIVE (r19): the exchange is only worth paying when each
-    * target partition receives at least `spark.graft.spread.minBytesPerTask`
-    * of input (estimated from the relation's optimizer stats — file size
-    * for the scans this wraps). Below that, the whole pipeline above the
-    * first keyed shuffle is cheaper single-task than the extra AQE stage
-    * job the repartition costs; above it, the round-robin buys real
-    * parallelism. At 100 TB the corpus side always clears any sane
-    * threshold — and a many-splits scan at real scale should make this a
-    * no-op entirely, which the stats-based rule approximates (the knob is
-    * a conf so a cluster deployment can raise it toward AQE's
-    * minPartitionSize-style sizing). Default 0 keeps the unconditional
-    * repartition. */
-  def spread(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val minPerTask =
-      try spark.conf.get("spark.graft.spread.minBytesPerTask", "0").toLong
-      catch { case _: NumberFormatException => 0L }
-    if (minPerTask <= 0L) df.repartition(par)
-    else {
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (bytes >= BigInt(par) * minPerTask) df.repartition(par) else df
-    }
-  }
+    * core. One cheap round-robin shuffle buys full parallelism. A scan
+    * that already plans many splits pays for an exchange it does not
+    * need; skipping it from the scan's planned split count is still
+    * open. */
+  def spread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** THE tokenize, Spark surface — the filter-nonempty formulation of
     * the engine-wide tokenization invariant (twins:

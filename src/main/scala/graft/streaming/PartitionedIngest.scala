@@ -53,7 +53,7 @@ object PartitionedIngest {
     * the sink's append path under foreachBatch just to regain guarantees
     * the sink already gives natively; the atomicity this compaction
     * needs (never rewrite in place, caller flips a pointer) is the same
-    * contract writeGeneration provides, kept here at day granularity.
+    * contract GenerationalStore.compact provides, kept here at day granularity.
     * Rewrites the layout to `outPath` with exactly one file per day:
     * `repartition(col("day"))` puts a day's rows in one task, so the
     * dynamic partitioned write emits one file per day directory. Writes

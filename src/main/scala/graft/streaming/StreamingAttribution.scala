@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -120,87 +120,77 @@ object StreamingAttribution {
   def writeBatch(batch: DataFrame, outDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val st = store(outDir)
-    if (st.batchApplied(spark, batchId)) return
-    // committed prior state STRICTLY below this id — a replayed id must
-    // not anti-join against its own previous (possibly torn) run
-    val gen = st.activeGeneration(spark)
-    val ok = st.looseIds(spark, gen).filter(_ < batchId)
-    val hasForget = batch.columns.contains("__forget")
-    val newFgt =
-      (if (hasForget) batch.where(col("__forget")) else batch.limit(0))
-        .select("doc_id").distinct().coalesce(1).cache()
-    val priorFgt = st.readPart(spark, "fgt", gen, ok).map(_.select("doc_id"))
-    // the full gate: previously-forgotten ids plus this batch's forgets
-    // (the forget wins its batch)
-    val gate = priorFgt.map(_.unionByName(newFgt)).getOrElse(newFgt)
-    val docRows =
-      (if (hasForget) batch.where(!coalesce(col("__forget"), lit(false)))
-       else batch)
-        .select(col("doc_id"), col("text"))
-        .join(gate, Seq("doc_id"), "left_anti")
-    val feat = graft.queries.TextQueries.pipelineFeatureFrame(docRows).cache()
-    try {
-      val q = feat.where(graft.queries.TextQueries.pipeIsQual)
-      // deposed canonicals (their doc erased — by any forget known at
-      // this batch, same-batch included: the forget wins its batch)
-      // leave the election cache: re-arriving content elects a fresh
-      // survivor, the StreamingDedup forgetting contract
-      def undeposed(sub: String, key: String): Option[DataFrame] =
-        st.readPart(spark, sub, gen, ok).map(p =>
-          p.join(gate, Seq("doc_id"), "left_anti").select(key))
-      val priorE = undeposed("ecan", "h")
-      val priorN = undeposed("ncan", "simhash")
-      // no broadcast hint on the prior store: it grows with the corpus
-      // (the batch is the SMALL side of this anti join). The roll-up
-      // range-clusters it by probe key, so Spark's runtime bloom filter
-      // plus row-group min/max stats prune the store scan to the key
-      // ranges this batch actually probes — O(batch) effective work.
-      val newE = priorE.map(p => q.join(p, Seq("h"), "left_anti"))
-        .getOrElse(q)
-        .groupBy("h").agg(min("doc_id").as("doc_id"))
-      val ekDocs = q.join(newE, Seq("h", "doc_id"), "left_semi")
-      // near canonicals elected this batch: min doc_id per simhash among
-      // the freshly-elected exact canonicals with an unseen simhash
-      val newN = priorN.map(p =>
-          ekDocs.join(p, Seq("simhash"), "left_anti"))
-        .getOrElse(ekDocs)
-        .groupBy("simhash").agg(min("doc_id").as("doc_id"))
-      val nkDocs = ekDocs.join(newN, Seq("simhash", "doc_id"), "left_semi")
-      val att = feat
-        .join(ekDocs.select(col("doc_id"), lit(1L).as("__ex")),
-          Seq("doc_id"), "left")
-        .join(nkDocs.select(col("doc_id"), lit(1L).as("__nr")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), lit(batchId).as("seq"), col("h"),
-          col("simhash"), col("pred_lang"), col("n_tokens"),
-          graft.queries.TextQueries.pipeIsQual.as("qpass"),
-          graft.queries.TextQueries.attributionStageCol(
-            graft.queries.TextQueries.pipeQualFail,
-            col("__ex").isNotNull, col("__nr").isNotNull).as("stage"))
-      att.write.mode("overwrite").parquet(s"$outDir/att/batch=$batchId")
-      newE.write.mode("overwrite").parquet(s"$outDir/ecan/batch=$batchId")
-      newN.write.mode("overwrite").parquet(s"$outDir/ncan/batch=$batchId")
-      newFgt.write.mode("overwrite").parquet(s"$outDir/fgt/batch=$batchId")
-    } finally { feat.unpersist(); newFgt.unpersist(); () }
+    // `prior`: committed state STRICTLY below this id — a replayed id
+    // must not anti-join against its own previous (possibly torn) run
+    st.landBatch(spark, batchId) { prior =>
+      val hasForget = batch.columns.contains("__forget")
+      val newFgt =
+        (if (hasForget) batch.where(col("__forget")) else batch.limit(0))
+          .select("doc_id").distinct().coalesce(1).cache()
+      val priorFgt = st.readPart(spark, "fgt", prior).map(_.select("doc_id"))
+      // the full gate: previously-forgotten ids plus this batch's forgets
+      // (the forget wins its batch)
+      val gate = priorFgt.map(_.unionByName(newFgt)).getOrElse(newFgt)
+      val docRows =
+        (if (hasForget) batch.where(!coalesce(col("__forget"), lit(false)))
+         else batch)
+          .select(col("doc_id"), col("text"))
+          .join(gate, Seq("doc_id"), "left_anti")
+      val feat = graft.queries.TextQueries.pipelineFeatureFrame(docRows).cache()
+      try {
+        val q = feat.where(graft.queries.TextQueries.pipeIsQual)
+        // deposed canonicals (their doc erased — by any forget known at
+        // this batch, same-batch included: the forget wins its batch)
+        // leave the election cache: re-arriving content elects a fresh
+        // survivor, the StreamingDedup forgetting contract
+        def undeposed(sub: String, key: String): Option[DataFrame] =
+          st.readPart(spark, sub, prior).map(p =>
+            p.join(gate, Seq("doc_id"), "left_anti").select(key))
+        val priorE = undeposed("ecan", "h")
+        val priorN = undeposed("ncan", "simhash")
+        // no broadcast hint on the prior store: it grows with the corpus
+        // (the batch is the SMALL side of this anti join). The roll-up
+        // range-clusters it by probe key, so Spark's runtime bloom filter
+        // plus row-group min/max stats prune the store scan to the key
+        // ranges this batch actually probes — O(batch) effective work.
+        val newE = priorE.map(p => q.join(p, Seq("h"), "left_anti"))
+          .getOrElse(q)
+          .groupBy("h").agg(min("doc_id").as("doc_id"))
+        val ekDocs = q.join(newE, Seq("h", "doc_id"), "left_semi")
+        // near canonicals elected this batch: min doc_id per simhash among
+        // the freshly-elected exact canonicals with an unseen simhash
+        val newN = priorN.map(p =>
+            ekDocs.join(p, Seq("simhash"), "left_anti"))
+          .getOrElse(ekDocs)
+          .groupBy("simhash").agg(min("doc_id").as("doc_id"))
+        val nkDocs = ekDocs.join(newN, Seq("simhash", "doc_id"), "left_semi")
+        val att = feat
+          .join(ekDocs.select(col("doc_id"), lit(1L).as("__ex")),
+            Seq("doc_id"), "left")
+          .join(nkDocs.select(col("doc_id"), lit(1L).as("__nr")),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"), lit(batchId).as("seq"), col("h"),
+            col("simhash"), col("pred_lang"), col("n_tokens"),
+            graft.queries.TextQueries.pipeIsQual.as("qpass"),
+            graft.queries.TextQueries.attributionStageCol(
+              graft.queries.TextQueries.pipeQualFail,
+              col("__ex").isNotNull, col("__nr").isNotNull).as("stage"))
+        att.write.mode("overwrite").parquet(s"$outDir/att/batch=$batchId")
+        newE.write.mode("overwrite").parquet(s"$outDir/ecan/batch=$batchId")
+        newN.write.mode("overwrite").parquet(s"$outDir/ncan/batch=$batchId")
+        newFgt.write.mode("overwrite").parquet(s"$outDir/fgt/batch=$batchId")
+      } finally { feat.unpersist(); newFgt.unpersist(); () }
+    }
   }
 
   /** Start attributing a stream of (doc_id, text) rows — optionally
-    * carrying in-band [[forgetRecords]]. `compactEvery` wires the
-    * generational roll-up into the stream (every k-th batch) — no
-    * external maintenance tick needed to stay bounded, and forgets fold
+    * carrying in-band [[forgetRecords]]. `compactEvery` runs
+    * [[compactStore]] inside the stream every k-th batch, so forgets fold
     * into the store on the same cadence. */
   def start(docs: DataFrame, outDir: String, checkpoint: String,
             compactEvery: Option[Long] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        writeBatch(df, outDir, id)
-        if (compactEvery.exists(k => k > 0 && (id + 1) % k == 0)) {
-          compactStore(df.sparkSession, outDir); ()
-        }
-      }
-      .start()
+    store(outDir).start(docs, checkpoint, compactEvery)(
+      writeBatch(_, outDir, _), compactStore(_, outDir))
 
   /** The (seq, doc_id) first-seen election re-derived from stored row
     * features — ONE definition for the MoR serve under unfolded forgets,
@@ -234,14 +224,11 @@ object StreamingAttribution {
     * every part read (the r17 consistent-pair rule). */
   def servedAttribution(spark: SparkSession, outDir: String): DataFrame = {
     val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    val ok = st.looseIds(spark, gen)
-    val att = st.readPart(spark, "att", gen, ok)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], attSchema))
+    val snap = st.snapshot(spark)
+    val att = st.read(spark, "att", snap, attSchema)
     // loose (unfolded) forgets force the MoR re-derivation; the
     // generation's own fgt rows are already folded into its att part
-    val looseFgt = st.readPart(spark, "fgt", None, ok)
+    val looseFgt = st.readPart(spark, "fgt", new StoreSnapshot(None, snap.ids))
       .map(_.select("doc_id").distinct())
     looseFgt match {
       case Some(f) if !f.isEmpty =>
@@ -249,10 +236,6 @@ object StreamingAttribution {
       case _ => att
     }
   }
-
-  /** Backwards-compatible alias for the served attribution rows. */
-  def readAttribution(spark: SparkSession, outDir: String): DataFrame =
-    servedAttribution(spark, outDir)
 
   /** The live q318 report — the shared `attributionReport` aggregation
     * over the served attributions, bit-identical to the batch report
@@ -264,7 +247,7 @@ object StreamingAttribution {
         .select("stage", "pred_lang", "n_tokens"))
 
   /** Roll every fully-landed batch into one generation so the directory
-    * count and the read-side id `isin` stay bounded — and FOLD the
+    * count and the read-side path list stay bounded — and FOLD the
     * accumulated forgets (the CoW leg): cohort rows leave `att`, the
     * surviving stages are re-materialized through the shared
     * re-derivation, and `ecan`/`ncan` are rebuilt from the survivors so
@@ -275,28 +258,26 @@ object StreamingAttribution {
     * join prunes. Returns the active coverage. */
   def compactStore(spark: SparkSession, outDir: String): Option[Long] = {
     val st = store(outDir)
-    val prev = st.activeGeneration(spark)
-    val live = st.compactableIds(spark, prev)
-    if (live.isEmpty) return prev
-    def part(sub: String): DataFrame = st.readPart(spark, sub, prev, live).get
-    val fgt = part("fgt").select("doc_id").distinct()
-    val survivors = part("att").join(fgt, Seq("doc_id"), "left_anti")
-    // re-derive only when forgets exist: the steady-state roll-up is a
-    // pure union and must stay one (stored stages are already exact)
-    val att =
-      if (fgt.isEmpty) survivors else attributionFromFeatures(survivors)
-    val attC = att.cache()
-    try {
-      val ecan = attC.where(col("stage").isin("4_near_dup", "5_kept"))
-        .select("h", "doc_id")
-      val ncan = attC.where(col("stage") === "5_kept")
-        .select("simhash", "doc_id")
-      st.writeGeneration(spark, live.max, prev, Map(
-        "att" -> attC.repartitionByRange(4, col("doc_id")),
-        "ecan" -> ecan.repartitionByRange(4, col("h")),
-        "ncan" -> ncan.repartitionByRange(4, col("simhash")),
-        "fgt" -> fgt.coalesce(1)))
-    } finally { attC.unpersist(); () }
-    Some(live.max)
+    st.compact(spark) { (covered, land) =>
+      def part(sub: String): DataFrame = st.readPart(spark, sub, covered).get
+      val fgt = part("fgt").select("doc_id").distinct()
+      val survivors = part("att").join(fgt, Seq("doc_id"), "left_anti")
+      // re-derive only when forgets exist: the steady-state roll-up is a
+      // pure union and must stay one (stored stages are already exact)
+      val att =
+        if (fgt.isEmpty) survivors else attributionFromFeatures(survivors)
+      val attC = att.cache()
+      try {
+        val ecan = attC.where(col("stage").isin("4_near_dup", "5_kept"))
+          .select("h", "doc_id")
+        val ncan = attC.where(col("stage") === "5_kept")
+          .select("simhash", "doc_id")
+        land(Map(
+          "att" -> attC.repartitionByRange(4, col("doc_id")),
+          "ecan" -> ecan.repartitionByRange(4, col("h")),
+          "ncan" -> ncan.repartitionByRange(4, col("simhash")),
+          "fgt" -> fgt.coalesce(1)))
+      } finally { attC.unpersist(); () }
+    }
   }
 }

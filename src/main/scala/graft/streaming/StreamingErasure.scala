@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -20,11 +20,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * served BM25 bit-equal to q304's.
   *
   * Idempotence, in both directions a request stream needs:
-  *  - a REPLAYED micro-batch id (at-least-once foreachBatch) overwrites
-  *    its own `batch=<id>/` directories with identical bytes (the
-  *    [[StreamingIvfEncode]] id-keyed idiom) — prior-batch tombstones are
-  *    consulted with `batch < id`, so the replay recomputes exactly what
-  *    the original run computed;
+  *  - a REPLAYED micro-batch id (at-least-once foreachBatch) no-ops once
+  *    committed, and a torn one is rewritten against the prior-batch
+  *    tombstones (`batch < id`), so the replay recomputes exactly what
+  *    the original run computed ([[GenerationalStore]]);
   *  - a DUPLICATE request in a later batch anti-joins away against the
   *    already-landed tombstones: erasing twice must not decrement twice
   *    (a double df decrement corrupts the lexicon for every query that
@@ -39,7 +38,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Store COMPACTION ([[compact]]): a long-lived request stream otherwise
   * accumulates one tiny directory triple per micro-batch forever — the
-  * batch-id enumeration and the read-side `isin` literal grow without
+  * batch-id enumeration and the read-side path list grow without
   * bound (the r16 verdict's weak-in-waiting). Compaction rolls every
   * fully-landed batch into ONE generation triple under `gen/`, keyed and
   * committed by the SAME [[IdKeyedStore]] discipline (`batch=<coveredId>`
@@ -67,23 +66,6 @@ object StreamingErasure {
     * id-keyed maintenance store — see [[GenerationalStore]]). */
   private def store(outDir: String) = new GenerationalStore(outDir, Subs)
 
-  /** Tombstone ids already landed by COMMITTED work BEFORE `batchId`:
-    * the active generation's roll-up (its coverage is always below any
-    * live batch id) plus committed loose batches in (coverage, batchId).
-    * None when nothing landed yet. The strict `<` keeps a replayed id
-    * from anti-joining against its own previous run's output, and the
-    * committed-id restriction keeps a FIRST-batch crash from wedging the
-    * stream: a torn tomb/batch=0 directory holds only `_temporary` trash,
-    * and an unguarded parquet read of the root would throw
-    * schema-inference errors on every replay forever. */
-  private def priorTombstones(spark: SparkSession, outDir: String,
-                              batchId: Long): Option[DataFrame] = {
-    val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    val ok = st.looseIds(spark, gen).filter(_ < batchId)
-    st.readPart(spark, "tomb", gen, ok).map(_.select("doc_id"))
-  }
-
   /** Land one micro-batch of erasure requests against the static
     * documents relation (exposed separately so the replay and crash
     * paths are testable). Requests below [[graft.queries.QueryBase
@@ -95,77 +77,49 @@ object StreamingErasure {
     * hold only for well-formed request streams (the r16 ADVICE). */
   def writeBatch(reqs: DataFrame, docs: DataFrame,
                  outDir: String, batchId: Long): Unit = {
-    val spark = reqs.sparkSession
-    // an APPLIED batch replays as a no-op — rolled into the active
-    // generation (its own directories may be garbage-collected; the
-    // content lives in the generation triple) or fully published loose:
-    // its content is a deterministic function of (requests, committed
-    // prior batches), so rewriting could only reproduce the same bytes —
-    // and the overwrite would first DELETE tomb/batch=N's marker,
-    // transiently un-publishing the batch from the all-three
-    // intersection mid-replay (erased docs would serve again for the
-    // rewrite's duration)
-    if (store(outDir).batchApplied(spark, batchId)) return
-    val ids0 = reqs.select("doc_id")
-      .where(col("doc_id") >= lit(graft.queries.QueryBase.EraseProtect))
-      .distinct()
-    val ids = priorTombstones(spark, outDir, batchId)
-      .map(p => ids0.join(p, Seq("doc_id"), "left_anti")).getOrElse(ids0)
-      .cache()
-    try {
-      ids.write.mode("overwrite").parquet(s"$outDir/tomb/batch=$batchId")
-      val erased = docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
-      graft.queries.TextQueries.postingsOf(erased)
-        .groupBy("term").agg(count(lit(1)).as("ddf"))
-        .write.mode("overwrite").parquet(s"$outDir/dfdec/batch=$batchId")
-      erased.select(size(toksC).cast("long").as("dl"))
-        .agg(count(lit(1)).as("n_erased"),
-          coalesce(sum("dl"), lit(0L)).cast("long").as("sum_dl_erased"))
-        .write.mode("overwrite").parquet(s"$outDir/dlstat/batch=$batchId")
-    } finally ids.unpersist()
+    val st = store(outDir)
+    st.landBatch(reqs.sparkSession, batchId) { prior =>
+      val ids0 = reqs.select("doc_id")
+        .where(col("doc_id") >= lit(graft.queries.QueryBase.EraseProtect))
+        .distinct()
+      // tombstones landed by committed work BEFORE this id: a duplicate
+      // request anti-joins away (erasing twice must not decrement twice)
+      val ids = st.readPart(reqs.sparkSession, "tomb", prior)
+        .map(p => ids0.join(p.select("doc_id"), Seq("doc_id"), "left_anti"))
+        .getOrElse(ids0)
+        .cache()
+      try {
+        ids.write.mode("overwrite").parquet(s"$outDir/tomb/batch=$batchId")
+        val erased = docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
+        graft.queries.TextQueries.postingsOf(erased)
+          .groupBy("term").agg(count(lit(1)).as("ddf"))
+          .write.mode("overwrite").parquet(s"$outDir/dfdec/batch=$batchId")
+        erased.select(size(toksC).cast("long").as("dl"))
+          .agg(count(lit(1)).as("n_erased"),
+            coalesce(sum("dl"), lit(0L)).cast("long").as("sum_dl_erased"))
+          .write.mode("overwrite").parquet(s"$outDir/dlstat/batch=$batchId")
+      } finally ids.unpersist()
+    }
   }
 
   /** Start maintaining the erasure store for a stream of (doc_id)
     * requests against the static documents relation. `compactEvery`
-    * wires the generational roll-up into the stream itself (every k-th
-    * batch), so a production deployment needs no external maintenance
-    * tick to stay bounded; a compaction interrupted by a crash is
-    * invisible (the generation intersection) and the next tick re-runs
-    * it. */
+    * runs [[compact]] inside the stream every k-th batch. */
   def start(reqs: DataFrame, docs: DataFrame, outDir: String,
             checkpoint: String,
             compactEvery: Option[Long] = None): StreamingQuery =
-    reqs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        writeBatch(df, docs, outDir, id)
-        if (compactEvery.exists(k => k > 0 && (id + 1) % k == 0)) {
-          compact(df.sparkSession, outDir); ()
-        }
-      }
-      .start()
+    store(outDir).start(reqs, checkpoint, compactEvery)(
+      writeBatch(_, docs, outDir, _), compact(_, outDir))
 
   /** Roll every fully-landed batch into one compacted generation, so the
-    * store's directory count and the read-side batch-id `isin` stay
-    * bounded under an unbounded request stream ([[GenerationalStore]] —
-    * ONE discipline with the ANN/mm tombstone and MV decrement stores).
-    * No-op (returning the unchanged coverage) when nothing new landed.
-    * Returns the active coverage after the call. */
-  def compact(spark: SparkSession, outDir: String): Option[Long] = {
-    val st = store(outDir)
-    val prev = st.activeGeneration(spark)
-    val live = st.compactableIds(spark, prev)
-    if (live.isEmpty) return prev
-    // the roll-up reads exactly (prev generation + `live`) — the id set
-    // the new generation's coverage claims — not a racy re-listing that
-    // could admit a batch landing mid-compaction without covering it
-    val (tomb, dec, stat) = storeAt(spark, outDir, prev, live)
-    val covered = live.max
-    st.writeGeneration(spark, covered, prev,
-      Map("tomb" -> tomb, "dfdec" -> dec, "dlstat" -> stat))
-    Some(covered)
-  }
+    * store's directory count and read-side work stay bounded under an
+    * unbounded request stream. Returns the active coverage after the
+    * call. */
+  def compact(spark: SparkSession, outDir: String): Option[Long] =
+    store(outDir).compact(spark) { (covered, land) =>
+      val (tomb, dec, stat) = storeAt(spark, outDir, covered)
+      land(Map("tomb" -> tomb, "dfdec" -> dec, "dlstat" -> stat))
+    }
 
   /** The accumulated store: the active compacted generation (if any)
     * plus loose batches above its coverage, each restricted to
@@ -177,27 +131,22 @@ object StreamingErasure {
     * the loose batches — with the keep-one GC lag that order can never
     * observe a store state with a hole. */
   def readStore(spark: SparkSession, outDir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    storeAt(spark, outDir, gen, st.looseIds(spark, gen))
-  }
+      : (DataFrame, DataFrame, DataFrame) =
+    storeAt(spark, outDir, store(outDir).snapshot(spark))
 
-  /** The store state over an EXPLICIT (generation, loose-batch-id) pair —
-    * shared by [[readStore]] (which resolves the current pair) and
-    * [[compact]] (which must roll up exactly the ids its new generation
+  /** The store state over one snapshot — shared by [[readStore]] (the
+    * current one) and [[compact]] (exactly the ids its new generation
     * claims to cover). */
   private def storeAt(spark: SparkSession, outDir: String,
-                      gen: Option[Long], ok: Set[Long])
-      : (DataFrame, DataFrame, DataFrame) = {
+                      snap: StoreSnapshot): (DataFrame, DataFrame, DataFrame) = {
     val st = store(outDir)
     import spark.implicits._
-    val tomb = st.readPart(spark, "tomb", gen, ok)
+    val tomb = st.readPart(spark, "tomb", snap)
       .getOrElse(Seq.empty[Long].toDF("doc_id"))
-    val dec = st.readPart(spark, "dfdec", gen, ok)
+    val dec = st.readPart(spark, "dfdec", snap)
       .map(_.groupBy("term").agg(sum("ddf").as("ddf")))
       .getOrElse(Seq.empty[(String, Long)].toDF("term", "ddf"))
-    val stat = st.readPart(spark, "dlstat", gen, ok)
+    val stat = st.readPart(spark, "dlstat", snap)
       .map(_.agg(coalesce(sum("n_erased"), lit(0L)).cast("long").as("n_erased"),
         coalesce(sum("sum_dl_erased"), lit(0L)).cast("long").as("sum_dl_erased")))
       .getOrElse(Seq((0L, 0L)).toDF("n_erased", "sum_dl_erased"))

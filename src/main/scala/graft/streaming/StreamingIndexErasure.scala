@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * One artifact per batch (unlike the text store's triple), so there is
   * no torn-TRIPLE hazard — but a write killed mid-flight still leaves an
   * uncommitted directory, which the [[IdKeyedStore]] `_SUCCESS`
-  * discipline keeps invisible until the replay completes it. Replayed
-  * ids overwrite their own directory with identical bytes; duplicate
+  * discipline keeps invisible until the replay completes it. A replayed
+  * id no-ops once committed and is rewritten while torn; duplicate
   * requests in later batches anti-join away against committed prior
   * tombstones (harmless set-wise for an anti-join consumer, but the
   * disjointness keeps per-batch compliance counts honest — a ledger
@@ -47,71 +47,46 @@ object StreamingIndexErasure {
     * batches land at the root ([[GenerationalStore]]'s `""` sub). */
   private def store(outDir: String) = new GenerationalStore(outDir, Seq(""))
 
-  /** Tombstones landed by COMMITTED work strictly before `batchId` —
-    * the active generation's roll-up plus committed loose batches below
-    * it (the [[StreamingErasure]] prior-batch rule: a replayed id must
-    * not anti-join against its own previous run's output). */
-  private def priorTombstones(spark: SparkSession, outDir: String,
-                              batchId: Long): Option[DataFrame] = {
-    val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    st.readPart(spark, "", gen, st.looseIds(spark, gen).filter(_ < batchId))
-  }
-
   /** Land one micro-batch of erasure requests against the persisted
     * code table (exposed separately so the replay and crash paths are
     * testable). `codes` must carry (`cell`, `idCol`) — the at-rest
     * bucketed code table of whichever index is forgetting. */
   def writeBatch(reqs: DataFrame, codes: DataFrame, idCol: String,
                  outDir: String, batchId: Long): Unit = {
-    val spark = reqs.sparkSession
-    // an APPLIED batch replays as a no-op — rolled into the active
-    // generation or fully published loose (the StreamingErasure
-    // rationale: the overwrite would transiently un-publish the batch)
-    if (store(outDir).batchApplied(spark, batchId)) return
-    val ids0 = reqs.select(idCol)
-      .where(col(idCol) >= lit(graft.queries.QueryBase.EraseProtect))
-      .distinct()
-    val ids = priorTombstones(spark, outDir, batchId)
-      .map(p => ids0.join(p.select(idCol).distinct(), Seq(idCol), "left_anti"))
-      .getOrElse(ids0)
-    codes.join(broadcast(ids), Seq(idCol), "left_semi")
-      .select(col("cell"), col(idCol)).distinct()
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    val st = store(outDir)
+    st.landBatch(reqs.sparkSession, batchId) { prior =>
+      val ids0 = reqs.select(idCol)
+        .where(col(idCol) >= lit(graft.queries.QueryBase.EraseProtect))
+        .distinct()
+      val ids = st.readPart(reqs.sparkSession, "", prior)
+        .map(p => ids0.join(p.select(idCol).distinct(), Seq(idCol), "left_anti"))
+        .getOrElse(ids0)
+      codes.join(broadcast(ids), Seq(idCol), "left_semi")
+        .select(col("cell"), col(idCol)).distinct()
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
   }
 
   /** Start maintaining the tombstone store for a stream of (idCol)
     * requests against the static persisted code table. `compactEvery`
-    * wires the generational roll-up into the stream (every k-th batch) —
-    * no external maintenance tick needed to stay bounded. */
+    * runs [[compact]] inside the stream every k-th batch. */
   def start(reqs: DataFrame, codes: DataFrame, idCol: String,
             outDir: String, checkpoint: String,
             compactEvery: Option[Long] = None): StreamingQuery =
-    reqs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        writeBatch(df, codes, idCol, outDir, id)
-        if (compactEvery.exists(k => k > 0 && (id + 1) % k == 0)) {
-          compact(df.sparkSession, outDir); ()
-        }
-      }
-      .start()
+    store(outDir).start(reqs, checkpoint, compactEvery)(
+      writeBatch(_, codes, idCol, outDir, _), compact(_, outDir))
 
   /** Roll every fully-landed batch into one compacted generation
     * ([[GenerationalStore]] — ONE discipline with the text erasure
-    * store), so the directory count and the read-side `isin` stay
-    * bounded under an unbounded request stream. Tombstone batches are
-    * disjoint by the anti-join discipline, so the roll-up is a plain
-    * union. Returns the active coverage after the call. */
+    * store), so the directory count and read-side work stay bounded
+    * under an unbounded request stream. Tombstone batches are disjoint
+    * by the anti-join discipline, so the roll-up is a plain union.
+    * Returns the active coverage after the call. */
   def compact(spark: SparkSession, outDir: String): Option[Long] = {
     val st = store(outDir)
-    val prev = st.activeGeneration(spark)
-    val live = st.compactableIds(spark, prev)
-    if (live.isEmpty) return prev
-    val rolled = st.readPart(spark, "", prev, live).get
-    st.writeGeneration(spark, live.max, prev, Map("" -> rolled))
-    Some(live.max)
+    st.compact(spark) { (covered, land) =>
+      land(Map("" -> st.readPart(spark, "", covered).get))
+    }
   }
 
   /** The accumulated (cell, id) tombstone set — the active generation
@@ -124,9 +99,6 @@ object StreamingIndexErasure {
   def readTombstones(spark: SparkSession, outDir: String,
                      idCol: String): DataFrame = {
     val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    st.readPart(spark, "", gen, st.looseIds(spark, gen))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], storeSchema(idCol)))
+    st.read(spark, "", st.snapshot(spark), storeSchema(idCol))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming maintenance of the q127 at-rest vector index — the vector
@@ -16,34 +16,35 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Append protocol: each micro-batch writes its codes under a
   * batch-id-keyed directory (`batch=<id>/`, Spark's partition-discovery
-  * layout). foreachBatch is at-least-once; a REPLAYED id (checkpoint
-  * recovery) carries identical rows and overwrites its own directory
-  * with identical bytes — idempotent append without a table format, the
-  * MvMaintenance skip-if-applied discipline in directory form.
+  * layout) through [[GenerationalStore]]. foreachBatch is
+  * at-least-once; a REPLAYED id (checkpoint recovery) carries identical
+  * rows, so a committed one no-ops and a torn one is overwritten —
+  * idempotent append without a table format, the MvMaintenance
+  * skip-if-applied discipline in directory form.
   *
   * StreamingIvfEncodeSpec replays the q129 batch through micro-batches
   * and proves the accumulated code store row-identical to the one-shot
   * batch encode. */
 object StreamingIvfEncode {
 
+  /** The store — single-artifact, batches at the root, never compacted
+    * (a code store grows with the index it serves). */
+  private def store(outDir: String) = new GenerationalStore(outDir, Seq(""))
+
   /** Encode one micro-batch and land it under its id-keyed directory
     * (exposed separately so the replay path is testable). */
   def writeBatch(batch: DataFrame, cents: DataFrame, cb: DataFrame,
                  outDir: String, batchId: Long): Unit =
-    graft.queries.VectorQueries.encodeAgainstIndex(batch, cents, cb)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    store(outDir).landBatch(batch.sparkSession, batchId) { _ =>
+      graft.queries.VectorQueries.encodeAgainstIndex(batch, cents, cb)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
 
   /** Start encoding a stream of (vec_id, embedding) rows against the
     * persisted index tables. */
   def start(vecs: DataFrame, cents: DataFrame, cb: DataFrame,
             outDir: String, checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        writeBatch(df, cents, cb, outDir, id)
-      }
-      .start()
+    store(outDir).start(vecs, checkpoint)(writeBatch(_, cents, cb, outDir, _))
 
   /** The store's served schema — the (vec_id, cell, s, code) contract
     * [[writeBatch]] lands (StreamingIvfEncodeSpec pins constant ==
@@ -60,8 +61,9 @@ object StreamingIvfEncode {
       org.apache.spark.sql.types.StructField("code",
         org.apache.spark.sql.types.LongType)))
 
-  /** The accumulated code store (all landed batches; the discovery
-    * column `batch` is the lineage tag, dropped for serving reads). */
-  def readCodes(spark: SparkSession, outDir: String): DataFrame =
-    IdKeyedStore.readCommitted(spark, outDir, Some(storeSchema))
+  /** The accumulated code store: every committed batch. */
+  def readCodes(spark: SparkSession, outDir: String): DataFrame = {
+    val st = store(outDir)
+    st.read(spark, "", st.snapshot(spark), storeSchema)
+  }
 }

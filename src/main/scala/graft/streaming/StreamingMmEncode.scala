@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming maintenance of the q297 at-rest MULTIMODAL index — the blob
@@ -18,33 +18,33 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * micro-batch writes its (doc_id, cell, emb) codes under a
   * batch-id-keyed directory (`batch=<id>/`, Spark's partition-discovery
   * layout). foreachBatch is at-least-once; a REPLAYED id (checkpoint
-  * recovery) carries identical rows and overwrites its own directory
-  * with identical bytes — idempotent append without a table format.
+  * recovery) carries identical rows, so a committed one no-ops and a
+  * torn one is overwritten — idempotent append without a table format.
   *
   * StreamingMmEncodeSpec replays the q301 blob batch through
   * micro-batches and proves the accumulated code store row-identical to
   * the one-shot batch encode. */
 object StreamingMmEncode {
 
+  /** The store — single-artifact, batches at the root, never compacted
+    * (a code store grows with the index it serves). */
+  private def store(outDir: String) = new GenerationalStore(outDir, Seq(""))
+
   /** Encode one micro-batch of (doc_id, payload) rows and land it under
     * its id-keyed directory (exposed separately so the replay path is
     * testable). */
   def writeBatch(batch: DataFrame, cents: DataFrame,
                  outDir: String, batchId: Long): Unit =
-    graft.queries.MultimodalQueries.mmEncodeAgainstIndex(batch, cents)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    store(outDir).landBatch(batch.sparkSession, batchId) { _ =>
+      graft.queries.MultimodalQueries.mmEncodeAgainstIndex(batch, cents)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
 
   /** Start encoding a stream of (doc_id, payload BINARY) rows against
     * the persisted centroid table. */
   def start(blobs: DataFrame, cents: DataFrame,
             outDir: String, checkpoint: String): StreamingQuery =
-    blobs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        writeBatch(df, cents, outDir, id)
-      }
-      .start()
+    store(outDir).start(blobs, checkpoint)(writeBatch(_, cents, outDir, _))
 
   /** The store's served schema — the (doc_id, cell, emb) contract
     * [[writeBatch]] lands (StreamingMmEncodeSpec pins constant == landed
@@ -62,8 +62,9 @@ object StreamingMmEncode {
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.LongType, containsNull = true))))
 
-  /** The accumulated code store (all landed batches; the discovery
-    * column `batch` is the lineage tag, dropped for serving reads). */
-  def readCodes(spark: SparkSession, outDir: String): DataFrame =
-    IdKeyedStore.readCommitted(spark, outDir, Some(storeSchema))
+  /** The accumulated code store: every committed batch. */
+  def readCodes(spark: SparkSession, outDir: String): DataFrame = {
+    val st = store(outDir)
+    st.read(spark, "", st.snapshot(spark), storeSchema)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -36,8 +36,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * worse than for tombstones — decrements are additive, so erasing a
   * user twice would subtract their events twice and corrupt every group
   * they touched:
-  *  - a replayed micro-batch id overwrites its own pair with identical
-  *    bytes (prior-applied users are consulted with `batch < id`);
+  *  - a replayed micro-batch id no-ops once committed, and a torn one is
+  *    rewritten against the prior-applied users (`batch < id`);
   *  - a DUPLICATE user in a later batch anti-joins away against the
   *    users already applied by FULLY-landed pairs.
   * A batch's two directories land in sequence, so a crash can leave the
@@ -65,17 +65,6 @@ object StreamingMvErasure {
     StructField("n", LongType),
     StructField("s", LongType)))
 
-  /** Users applied by fully-landed COMMITTED work strictly before
-    * `batchId` — the active generation's roll-up plus loose pairs below
-    * it. */
-  private def priorUsers(spark: SparkSession, outDir: String,
-                         batchId: Long): Option[DataFrame] = {
-    val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    st.readPart(spark, "users", gen,
-      st.looseIds(spark, gen).filter(_ < batchId)).map(_.select("user_id"))
-  }
-
   /** Land one micro-batch of user-erasure requests against the static
     * events relation the MV aggregates (callers pass the SAME frame the
     * MV was built from — the ingested subset, so the decrement can never
@@ -83,40 +72,31 @@ object StreamingMvErasure {
     * replay and crash paths are testable. */
   def writeBatch(reqs: DataFrame, events: DataFrame,
                  outDir: String, batchId: Long): Unit = {
-    val spark = reqs.sparkSession
-    // an APPLIED batch replays as a no-op — rolled into the active
-    // generation or fully published loose
-    if (store(outDir).batchApplied(spark, batchId)) return
-    val users0 = reqs.select("user_id").distinct()
-    val users = priorUsers(spark, outDir, batchId)
-      .map(p => users0.join(p, Seq("user_id"), "left_anti")).getOrElse(users0)
-      .cache()
-    try {
-      users.write.mode("overwrite").parquet(s"$outDir/users/batch=$batchId")
-      graft.queries.RelQueries.negatePartials(
-        graft.queries.RelQueries.dayTypePartials(
-          events.join(broadcast(users), Seq("user_id"), "left_semi")))
-        .write.mode("overwrite").parquet(s"$outDir/dec/batch=$batchId")
-    } finally users.unpersist()
+    val st = store(outDir)
+    st.landBatch(reqs.sparkSession, batchId) { prior =>
+      val users0 = reqs.select("user_id").distinct()
+      val users = st.readPart(reqs.sparkSession, "users", prior)
+        .map(p => users0.join(p.select("user_id"), Seq("user_id"), "left_anti"))
+        .getOrElse(users0)
+        .cache()
+      try {
+        users.write.mode("overwrite").parquet(s"$outDir/users/batch=$batchId")
+        graft.queries.RelQueries.negatePartials(
+          graft.queries.RelQueries.dayTypePartials(
+            events.join(broadcast(users), Seq("user_id"), "left_semi")))
+          .write.mode("overwrite").parquet(s"$outDir/dec/batch=$batchId")
+      } finally users.unpersist()
+    }
   }
 
   /** Start maintaining the decrement store for a stream of (user_id)
-    * requests against the static events relation. `compactEvery` wires
-    * the generational roll-up into the stream (every k-th batch) — no
-    * external maintenance tick needed to stay bounded. */
+    * requests against the static events relation. `compactEvery` runs
+    * [[compact]] inside the stream every k-th batch. */
   def start(reqs: DataFrame, events: DataFrame, outDir: String,
             checkpoint: String,
             compactEvery: Option[Long] = None): StreamingQuery =
-    reqs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        writeBatch(df, events, outDir, id)
-        if (compactEvery.exists(k => k > 0 && (id + 1) % k == 0)) {
-          compact(df.sparkSession, outDir); ()
-        }
-      }
-      .start()
+    store(outDir).start(reqs, checkpoint, compactEvery)(
+      writeBatch(_, events, outDir, _), compact(_, outDir))
 
   /** Roll every fully-landed pair into one compacted generation
     * ([[GenerationalStore]]): applied users union as-is (disjoint by the
@@ -125,16 +105,12 @@ object StreamingMvErasure {
     * store serves bit-identically. Returns the active coverage. */
   def compact(spark: SparkSession, outDir: String): Option[Long] = {
     val st = store(outDir)
-    val prev = st.activeGeneration(spark)
-    val live = st.compactableIds(spark, prev)
-    if (live.isEmpty) return prev
-    val users = st.readPart(spark, "users", prev, live).get
-    val dec = st.readPart(spark, "dec", prev, live).get
-      .groupBy("day", "event_type")
-      .agg(sum("n").as("n"), sum("s").as("s"))
-    st.writeGeneration(spark, live.max, prev,
-      Map("users" -> users, "dec" -> dec))
-    Some(live.max)
+    st.compact(spark) { (covered, land) =>
+      land(Map("users" -> st.readPart(spark, "users", covered).get,
+        "dec" -> st.readPart(spark, "dec", covered).get
+          .groupBy("day", "event_type")
+          .agg(sum("n").as("n"), sum("s").as("s"))))
+    }
   }
 
   /** The accumulated store — the active generation plus fully-landed
@@ -142,12 +118,9 @@ object StreamingMvErasure {
     * partials). Both empty (typed) before the first commit. */
   def readStore(spark: SparkSession, outDir: String): (DataFrame, DataFrame) = {
     val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    val ok = st.looseIds(spark, gen)
-    def part(sub: String, schema: StructType): DataFrame =
-      st.readPart(spark, sub, gen, ok).getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
-    (part("users", usersSchema), part("dec", decSchema))
+    val snap = st.snapshot(spark)
+    (st.read(spark, "users", snap, usersSchema),
+      st.read(spark, "dec", snap, decSchema))
   }
 
   /** The MV actually served under streamed erasure: the stored partials

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming maintenance of the q148 at-rest inverted index — the TEXT
@@ -15,10 +15,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * stats (the q141 manifest discipline): serving re-derives or
   * periodically compacts it from the postings, never the raw text.
   *
-  * Append protocol: [[StreamingIvfEncode]]'s id-keyed-directory idiom —
+  * Append protocol: [[GenerationalStore]]'s id-keyed directories —
   * each micro-batch writes under `batch=<id>/`; a replayed id
-  * (at-least-once foreachBatch) overwrites its own directory with
-  * identical bytes, so the append is idempotent without a table format.
+  * (at-least-once foreachBatch) no-ops once committed and is rewritten
+  * while torn, so the append is idempotent without a table format.
   *
   * Store compaction rides [[GenerationalStore]] — ONE roll-up discipline
   * with the erasure stores (the r17 verdict's #5): every fully-landed
@@ -45,28 +45,20 @@ object StreamingPostingsAppend {
     * generation (its own directory may be garbage-collected) or fully
     * committed loose — replays as a no-op: re-landing it after a roll-up
     * would duplicate every posting it contributed. */
-  def writeBatch(batch: DataFrame, outDir: String, batchId: Long): Unit = {
-    if (store(outDir).batchApplied(batch.sparkSession, batchId)) return
-    graft.queries.TextQueries.postingsOf(batch)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-  }
+  def writeBatch(batch: DataFrame, outDir: String, batchId: Long): Unit =
+    store(outDir).landBatch(batch.sparkSession, batchId) { _ =>
+      graft.queries.TextQueries.postingsOf(batch)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
 
   /** Start appending postings for a stream of (doc_id, text) rows.
-    * `compactEvery` wires the generational roll-up into the stream
-    * (every k-th batch) — no external maintenance tick needed to stay
-    * bounded under a document firehose. */
+    * `compactEvery` runs [[compactStore]] inside the stream every k-th
+    * batch — no external maintenance tick needed to stay bounded under a
+    * document firehose. */
   def start(docs: DataFrame, outDir: String, checkpoint: String,
             compactEvery: Option[Long] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (df: Dataset[Row], id: Long) =>
-        writeBatch(df, outDir, id)
-        if (compactEvery.exists(k => k > 0 && (id + 1) % k == 0)) {
-          compactStore(df.sparkSession, outDir); ()
-        }
-      }
-      .start()
+    store(outDir).start(docs, checkpoint, compactEvery)(
+      writeBatch(_, outDir, _), compactStore(_, outDir))
 
   /** The store's served schema — the (term, doc_id, tf) posting contract
     * [[writeBatch]] lands (StreamingPostingsSpec pins constant == landed
@@ -89,10 +81,7 @@ object StreamingPostingsAppend {
     * tf-sum is an identity over that disjointness. */
   def readPostings(spark: SparkSession, outDir: String): DataFrame = {
     val st = store(outDir)
-    val gen = st.activeGeneration(spark)
-    st.readPart(spark, "", gen, st.looseIds(spark, gen))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], storeSchema))
+    st.read(spark, "", st.snapshot(spark), storeSchema)
   }
 
   /** Roll every fully-landed batch into one term-range-clustered
@@ -105,32 +94,11 @@ object StreamingPostingsAppend {
     * active coverage after the call. */
   def compactStore(spark: SparkSession, outDir: String): Option[Long] = {
     val st = store(outDir)
-    val prev = st.activeGeneration(spark)
-    val live = st.compactableIds(spark, prev)
-    if (live.isEmpty) return prev
-    val rolled = st.readPart(spark, "", prev, live).get
-      .groupBy("term", "doc_id")
-      .agg(org.apache.spark.sql.functions.sum("tf").as("tf"))
-      .repartitionByRange(4, org.apache.spark.sql.functions.col("term"))
-    st.writeGeneration(spark, live.max, prev, Map("" -> rolled))
-    Some(live.max)
+    st.compact(spark) { (covered, land) =>
+      land(Map("" -> st.readPart(spark, "", covered).get
+        .groupBy("term", "doc_id")
+        .agg(org.apache.spark.sql.functions.sum("tf").as("tf"))
+        .repartitionByRange(4, org.apache.spark.sql.functions.col("term"))))
+    }
   }
-
-  /** Compact the per-batch directories into one term-clustered layout —
-    * the [[PartitionedIngest.compactDaily]] discipline for the text leg:
-    * a long-running append stream leaves one small file per micro-batch
-    * (the small-files problem), and the periodic compaction rewrites
-    * them into few term-range-clustered files a serving scan reads
-    * efficiently. The rewrite merges per-(term, doc_id) tf partials by
-    * SUM — the q138 additive-partial discipline (an identity here, since
-    * each document lands whole in one batch and replays overwrite their
-    * own directory, but the correct general semantics if a landing ever
-    * shards one doc's postings). Row-identity with the uncompacted store
-    * is spec-pinned. */
-  def compact(spark: SparkSession, inDir: String, outDir: String): Unit =
-    readPostings(spark, inDir)
-      .groupBy("term", "doc_id")
-      .agg(org.apache.spark.sql.functions.sum("tf").as("tf"))
-      .repartitionByRange(4, org.apache.spark.sql.functions.col("term"))
-      .write.mode("overwrite").parquet(outDir)
 }

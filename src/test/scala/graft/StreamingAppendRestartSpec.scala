@@ -8,16 +8,16 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kill/restart fault proof for the foreachBatch INDEX-APPEND protocol
-  * ([[StreamingMmEncode]]; [[graft.streaming.StreamingIvfEncode]] and
-  * [[graft.streaming.StreamingPostingsAppend]] share the id-keyed
-  * overwrite discipline): the replay specs prove a re-delivered batch id
-  * is idempotent, this one proves the claim it rests on — an actual
-  * query KILL between (and once DURING) micro-batches, with each drain a
-  * NEW query instance resuming from the shared checkpoint, accumulates a
-  * code store row-identical to the one-shot batch encode. The
-  * mid-flight-stopped instance may leave an uncommitted partial
-  * `batch=<id>/` directory; the restarted instance re-runs that id and
-  * OVERWRITES it with identical bytes, so the store converges with no
+  * ([[StreamingMmEncode]]; every id-keyed store in graft.streaming shares
+  * it through one GenerationalStore): the replay specs prove a
+  * re-delivered batch id is idempotent, this one proves the claim it
+  * rests on — an actual query KILL between (and once DURING)
+  * micro-batches, with each drain a NEW query instance resuming from the
+  * shared checkpoint, accumulates a code store row-identical to the
+  * one-shot batch encode. The mid-flight-stopped instance may leave an
+  * uncommitted partial `batch=<id>/` directory; the restarted instance
+  * re-runs that id and OVERWRITES the torn directory (a committed one
+  * no-ops, its content being identical), so the store converges with no
   * duplicates and no gaps. */
 class StreamingAppendRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
 

@@ -70,7 +70,7 @@ class StreamingAttributionSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"streamed: ${streamed.toSeq.sorted.mkString("; ")}\n" +
         s"batch:    ${batch.toSeq.sorted.mkString("; ")}")
     // exactly one attribution row per document
-    assert(StreamingAttribution.readAttribution(spark, outDir).count() ==
+    assert(StreamingAttribution.servedAttribution(spark, outDir).count() ==
       rows.length.toLong)
   }
 

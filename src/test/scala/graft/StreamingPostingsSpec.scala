@@ -98,33 +98,6 @@ class StreamingPostingsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"stream-served probe != batch-served probe (${fromStream.size} vs ${fromBatch.size})")
   }
 
-  test("compaction collapses batch files without changing a single posting") {
-    val ss = spark
-    import ss.implicits._
-    val rows = docs().as[Doc].collect().sortBy(_.doc_id)
-    val outDir = java.nio.file.Files.createTempDirectory("graft-spost4-").toString
-    // land many tiny batches (the small-files problem a long stream makes)
-    rows.grouped(math.max(1, rows.length / 8)).zipWithIndex.foreach {
-      case (chunk, id) =>
-        StreamingPostingsAppend.writeBatch(ss.createDataset(chunk.toIndexedSeq).toDF(),
-          outDir, id.toLong)
-    }
-    val before = StreamingPostingsAppend.readPostings(spark, outDir)
-      .as[(String, Long, Long)].collect().toSet
-
-    val compactDir = java.nio.file.Files.createTempDirectory("graft-spost4c-").toString
-    StreamingPostingsAppend.compact(spark, outDir, compactDir)
-    val after = spark.read.parquet(compactDir)
-      .as[(String, Long, Long)].collect().toSet
-    assert(after == before,
-      s"compaction changed postings (${after.size} vs ${before.size} rows)")
-
-    def parquetFiles(p: String) = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      .filter(f => f.toString.endsWith(".parquet")).count()
-    assert(parquetFiles(compactDir) < parquetFiles(outDir),
-      "compaction did not reduce the file count")
-  }
-
   test("generational roll-up: the store stays bounded in place, serves row-identically, and replays no-op after GC") {
     val ss = spark
     import ss.implicits._
