@@ -32,6 +32,15 @@ object QueryBase {
       .otherwise(floor(x).cast("double")) / lit(p)
   }
 
+  /** Scalar [[pround]] for plain Double code such as streaming state:
+    * the identical IEEE ops. `math.pow(10, digits)` is exact for these
+    * digits, and `math.floor` is already the identity from 2^52 up, so
+    * the Column form's guard needs no branch here. */
+  def pround(x: Double, digits: Int): Double = {
+    val p = math.pow(10, digits)
+    math.floor(x * p + 0.5) / p
+  }
+
   /** Epoch-MICROSECOND integer column for a time column, whatever type the
     * data carries it as — the ONE place every oracle-facing time
     * ordering/bucketing threshold derives from (the DuckDB oracle side is

@@ -693,7 +693,7 @@ object SaxQueries {
     // sessionization, the shared constant), order each session by
     // (ts_us, event_id), truncate to the largest w-divisible prefix, and
     // batch-encode it into ONE word (sts_from_double_array semantics,
-    // Sax.encode over the prefix — the truncEncode contract). Sessions
+    // Sax.encode over the prefix — the windowWords contract). Sessions
     // shorter than w values don't encode and are dropped, exactly like
     // the streaming variant's null filter. This puts the session
     // semantics on the hash-checked oracle surface; the streaming replay

@@ -5,7 +5,7 @@ package graft.sax
   * Re-implements the operator semantics of the reference library
   * (Quadrocube/symtseries, see /root/repo/SURVEY.md §2) as pure functions on
   * `Array[Double]` / `String`, independent of Spark — the Spark layer wraps
-  * these as UDFs / stateful operators.
+  * these as native Catalyst expressions / stateful operators.
   *
   * Canonical word form is the SAX *string* (`'A'` = lowest sector ascending,
   * `'#'` = all-NaN frame) plus the pair (nValues, c) carried alongside where
@@ -81,6 +81,32 @@ object Sax {
     if (n == 0) (0.0, 0.0) else (mean, math.sqrt(s2 / n))
   }
 
+  /** Normalized value of ONE PAA frame: the `frameSize` values starting at
+    * `begin` in `series`, treated as a ring that wraps at the array end.
+    * NaN values leave the frame sum and count; an all-NaN frame or
+    * Inf + (-Inf) gives NaN, ±Inf passes through, std < StatEps gives 0.
+    * The one frame z-score rule behind [[saxTransform]] and
+    * [[paaNormalized]]. */
+  def frameZ(series: Array[Double], begin: Int, frameSize: Int,
+             mu: Double, std: Double): Double = {
+    val len = series.length
+    var vi = begin
+    var sum = 0.0
+    var cnt = frameSize
+    var j = 0
+    while (j < frameSize) {
+      val v = series(vi)
+      if (java.lang.Double.isNaN(v)) cnt -= 1 else sum += v
+      vi += 1
+      if (vi == len) vi = 0
+      j += 1
+    }
+    if (cnt == 0 || java.lang.Double.isNaN(sum)) Double.NaN
+    else if (!isFinite(sum)) sum
+    else if (std < StatEps) 0.0
+    else (sum - cnt * mu) / (cnt * std)
+  }
+
   /** PAA + z-normalize + symbolize. Writes `w` symbols for the `n` values
     * starting at `begin` in `series`, treating `series` as a ring that wraps
     * at the array end (begin=0 on a plain array is the batch case).
@@ -88,27 +114,13 @@ object Sax {
   def saxTransform(series: Array[Double], begin: Int, n: Int, w: Int, c: Int,
                    mu: Double, std: Double, out: Array[Int]): Unit = {
     val frameSize = n / w
-    var vi = begin
     val len = series.length
+    var vi = begin
     var i = 0
     while (i < w) {
-      var sum = 0.0
-      var cnt = frameSize
-      var j = 0
-      while (j < frameSize) {
-        val v = series(vi)
-        if (java.lang.Double.isNaN(v)) cnt -= 1 else sum += v
-        vi += 1
-        if (vi == len) vi = 0
-        j += 1
-      }
-      var average = sum
-      if (cnt == 0 || java.lang.Double.isNaN(average)) {
-        average = Double.NaN // all NaNs, or Inf + (-Inf)
-      } else if (isFinite(average)) {
-        average = if (std < StatEps) 0.0 else (average - cnt * mu) / (cnt * std)
-      } // non-finite sums bypass normalization, hit getSymbol directly
-      out(i) = getSymbol(average, c)
+      out(i) = getSymbol(frameZ(series, vi, frameSize, mu, std), c)
+      vi += frameSize
+      if (vi >= len) vi -= len
       i += 1
     }
   }
@@ -147,36 +159,51 @@ object Sax {
   }
 
   /** Normalized PAA frame values (the z-scores that symbolization would
-    * bucket) — the same arithmetic as [[saxTransform]] minus the final
-    * symbol lookup. NaN marks all-NaN / Inf+(-Inf) frames; ±Inf passes
-    * through. */
+    * bucket): [[frameZ]] per frame, minus the final symbol lookup. */
   def paaNormalized(series: Array[Double], w: Int): Array[Double] = {
     if (series == null || series.length == 0 || series.length % w != 0)
       return null
-    val n = series.length
     val (mu, std) = estimateMuStd(series)
-    val frameSize = n / w
+    val frameSize = series.length / w
     val out = new Array[Double](w)
-    var vi = 0
     var i = 0
     while (i < w) {
-      var sum = 0.0
-      var cnt = frameSize
-      var j = 0
-      while (j < frameSize) {
-        val v = series(vi)
-        if (java.lang.Double.isNaN(v)) cnt -= 1 else sum += v
-        vi += 1
-        j += 1
-      }
-      out(i) =
-        if (cnt == 0 || java.lang.Double.isNaN(sum)) Double.NaN
-        else if (!isFinite(sum)) sum
-        else if (std < Tables.StatEps) 0.0
-        else (sum - cnt * mu) / (cnt * std)
+      out(i) = frameZ(series, i * frameSize, frameSize, mu, std)
       i += 1
     }
     out
+  }
+
+  /** Internal symbol -> SAX char: the reversed mapping `c - symbol - 1 + 'A'`
+    * ('A' = lowest sector), '#' for the NaN sentinel `c`. Reference:
+    * src/symtseries.c:556-576. */
+  @inline def symbolChar(symbol: Int, c: Int): Char =
+    if (symbol == c) '#' else (c - symbol - 1 + 'A').toChar
+
+  /** SAX char -> internal symbol, the inverse of [[symbolChar]]; -1 for a
+    * char outside [A, A+c) that is not '#'. */
+  @inline def charSymbol(ch: Char, c: Int): Int =
+    if (ch == '#') c
+    else if (ch < 'A' || ch >= 'A' + c) -1
+    else c - (ch - 'A') - 1
+
+  /** Every char a word at cardinality c may hold: 'A', 'B', …, then '#'. */
+  def alphabet(c: Int): IndexedSeq[Char] =
+    ((c - 1 to 0 by -1) :+ c).map(symbolChar(_, c))
+
+  /** Squared distance of one cell (sa, sb) of internal symbols, with its
+    * side as the sign: positive counts toward `above` (sa < sb), negative
+    * toward `below`, 0 for equal symbols. The NaN sentinel `c` maps to the
+    * symbol FARTHEST from the other side's symbol (ties to the lowest
+    * sector, c-1 in reversed order). Reference: src/symtseries.c:585-636. */
+  def cellDistSq(sa: Int, sb: Int, c: Int): Double = {
+    if (sa == sb) return 0.0
+    var x = sa
+    var y = sb
+    if (x == c) x = if (y > c - 1 - y) 0 else c - 1
+    else if (y == c) y = if (x > c - 1 - x) 0 else c - 1
+    val d = distTable(c - MinCardinality)(x * c + y).toDouble
+    if (x < y) d * d else -(d * d)
   }
 
   /** Render internal symbols as a SAX string ('A' lowest, '#' NaN frame).
@@ -185,9 +212,8 @@ object Sax {
     val sb = new java.lang.StringBuilder(symbols.length)
     var i = 0
     while (i < symbols.length) {
-      val dig = symbols(i)
-      if (dig > c) return null
-      sb.append(if (dig == c) '#' else (c - dig - 1 + 'A').toChar)
+      if (symbols(i) > c) return null
+      sb.append(symbolChar(symbols(i), c))
       i += 1
     }
     sb.toString
@@ -203,12 +229,8 @@ object Sax {
     val out = new Array[Int](s.length)
     var i = 0
     while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '#') out(i) = c
-      else {
-        if (ch < 'A' || ch >= ('A' + c).toChar) return null
-        out(i) = c - (ch - 'A') - 1
-      }
+      out(i) = charSymbol(s.charAt(i), c)
+      if (out(i) < 0) return null
       i += 1
     }
     out
@@ -232,20 +254,10 @@ object Sax {
     if (n == 0) n = w // compression rate of 1
     var above = 0.0
     var below = 0.0
-    val table = distTable(c - MinCardinality)
     var i = 0
     while (i < w) {
-      var sa = a(i)
-      var sb = b(i)
-      if (sa != sb) {
-        // NaN sentinel maps to the symbol FARTHEST from the other side's
-        // symbol (ties to the lowest sector, i.e. c-1 in reversed order).
-        if (sa == c) sa = if (sb > c - 1 - sb) 0 else c - 1
-        else if (sb == c) sb = if (sa > c - 1 - sa) 0 else c - 1
-        val d = table(sa * c + sb).toDouble
-        val d2 = d * d
-        if (sa < sb) above += d2 else below += d2
-      }
+      val d2 = cellDistSq(a(i), b(i), c)
+      if (d2 > 0) above += d2 else below -= d2
       i += 1
     }
     val compression = math.sqrt(n.toDouble / w.toDouble)

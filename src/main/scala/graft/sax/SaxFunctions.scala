@@ -1,102 +1,52 @@
 package graft.sax
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 
-/** Spark SQL surface of the SAX core: scalar UDFs over the pure functions in
-  * [[Sax]]. The canonical word form is the SAX string, so words group, join
+/** DataFrame column helpers over the native SAX expressions in
+  * [[SaxExpressions]], plus [[saxMindist]], the boxed reference path for
+  * differential tests. SQL names (`sax_encode`, `sax_encode_window`,
+  * `sax_paa`, `sax_mindist`) come from [[graft.spark.GraftExtensions]]
+  * alone. The canonical word form is the SAX string, so words group, join
   * and equality-compare with plain Spark operators (the reference's
   * `sts_words_equal` ignores n_values — string equality at fixed c matches
   * that exactly, SURVEY.md §2 op 14).
-  *
-  * Role since round 2: the UDFs below are the `spark.sql` NAME surface
-  * (registered per session via [[register]]) and a reference
-  * implementation for differential tests. The DataFrame helpers further
-  * down ([[sax_encode]], [[sax_mindist]], …) build the native codegen
-  * Catalyst expressions in [[SaxExpressions]], and every query in the
-  * inventory uses only those — the hot path never pays UDF invocation or
-  * boxing.
   */
 object SaxFunctions {
 
-  // null elements map to NaN ('#' semantics), matching the native
-  // expressions — Seq[Double] UDFs would silently unbox null to 0.0
-  private def unbox(values: Seq[java.lang.Double]): Array[Double] =
-    values.map(v => if (v == null) Double.NaN else v.doubleValue()).toArray
-
-  /** sax_encode(values, w, c) -> SAX string; null on invalid (n%w!=0, bad c).
-    * Reference sts_from_double_array (src/symtseries.c:515-532). */
-  val saxEncode: UserDefinedFunction =
-    udf((values: Seq[java.lang.Double], w: Int, c: Int) =>
-      if (values == null) null else Sax.encode(unbox(values), w, c))
-
-  /** sax_encode_window(values, n, w, c): encode the trailing window of n
-    * values, left-padding with NaN below n (ring prefill) and keeping only
-    * the last n above (sts_append_array semantics). */
-  val saxEncodeWindow: UserDefinedFunction =
-    udf((values: Seq[java.lang.Double], n: Int, w: Int, c: Int) =>
-      if (values == null) null else Sax.encodePadded(unbox(values), n, w, c))
-
-  /** sax_mindist(a, nA, b, nB, c) -> struct(dist, above, below); null when
-    * the words are incompatible (the reference returns NaN / Lua nil).
-    * Reference sts_mindist_ab (src/symtseries.c:585-636). */
+  /** sax_mindist(a, nA, b, nB, c) -> struct(dist, above, below) as a boxed
+    * UDF over [[Sax.mindist]]: an opaque ScalaUDF that MindistPruneRule
+    * cannot match, so specs compare the pruned native plan against it.
+    * Null when the words are incompatible (the reference returns NaN / Lua
+    * nil). Reference sts_mindist_ab (src/symtseries.c:585-636). */
   val saxMindist: UserDefinedFunction =
     udf((a: String, aN: Long, b: String, bN: Long, c: Int) =>
       Sax.mindist(a, aN, b, bN, c))
 
-  /** sax_is_valid(word, c): true iff the string parses at cardinality c. */
-  val saxIsValid: UserDefinedFunction =
-    udf((s: String, c: Int) => Sax.isValidWord(s, c))
-
-  /** Register all functions for SQL use (spark.sql("... sax_encode(...)")). */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("sax_encode", saxEncode)
-    spark.udf.register("sax_encode_window", saxEncodeWindow)
-    spark.udf.register("sax_mindist", saxMindist)
-    spark.udf.register("sax_is_valid", saxIsValid)
-  }
-
-  /** Column helpers for the DataFrame API — these build the NATIVE codegen
-    * expressions (no UDF invocation/boxing in the hot path); the UDF
-    * registrations above remain for spark.udf-style use. */
-  private def colOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(e)
-  private def exprOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.GraftColumnBridge.expression(c)
-  private def litE(v: Any) =
-    org.apache.spark.sql.catalyst.expressions.Literal(v)
+  /** Column helpers for the DataFrame API: each builds the NATIVE codegen
+    * expression (no UDF invocation or boxing in the hot path). */
+  private def colOf(e: Expression): Column = GraftColumnBridge.column(e)
 
   // explicit Casts: the expressions read children positionally (ArrayData /
   // Long / Int) and would CCE in the interpreted path on e.g. an int
   // literal where a long is expected; Cast makes coercion analysis-time
-  private def castE(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                    t: org.apache.spark.sql.types.DataType) =
-    org.apache.spark.sql.catalyst.expressions.Cast(e, t)
+  private def castE(c: Column, t: DataType): Expression =
+    Cast(GraftColumnBridge.expression(c), t)
+  private def doubles(values: Column): Expression = castE(values, ArrayType(DoubleType))
 
   def sax_encode(values: Column, w: Int, c: Int): Column =
-    colOf(SaxEncodeExpr(
-      castE(exprOf(values), org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)),
-      litE(w), litE(c)))
+    colOf(SaxEncodeExpr(doubles(values), Literal(w), Literal(c)))
 
   def sax_encode_window(values: Column, n: Int, w: Int, c: Int): Column =
-    colOf(SaxEncodeWindowExpr(
-      castE(exprOf(values), org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)),
-      litE(n), litE(w), litE(c)))
+    colOf(SaxEncodeWindowExpr(doubles(values), Literal(n), Literal(w), Literal(c)))
 
   def sax_paa(values: Column, w: Int): Column =
-    colOf(SaxPaaExpr(
-      castE(exprOf(values), org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)),
-      litE(w)))
+    colOf(SaxPaaExpr(doubles(values), Literal(w)))
 
   def sax_mindist(a: Column, aN: Column, b: Column, bN: Column, c: Int): Column =
-    colOf(SaxMindistExpr(Seq(
-      castE(exprOf(a), org.apache.spark.sql.types.StringType),
-      castE(exprOf(aN), org.apache.spark.sql.types.LongType),
-      castE(exprOf(b), org.apache.spark.sql.types.StringType),
-      castE(exprOf(bN), org.apache.spark.sql.types.LongType),
-      litE(c))))
+    colOf(SaxMindistExpr(Seq(castE(a, StringType), castE(aN, LongType),
+      castE(b, StringType), castE(bN, LongType), Literal(c))))
 }

@@ -126,35 +126,24 @@ object MindistPruneRule extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** Per-position symbol distance² in reference semantics: reversed iSAX
-    * ordering, '#' remapped to the farthest symbol of the other side
-    * (src/symtseries.c:585-636). */
-  private def cellSq(table: Array[Float], c: Int, xa: Char, xb: Char): Double = {
-    var sa = if (xa == '#') c else c - (xa - 'A') - 1
-    var sb = if (xb == '#') c else c - (xb - 'A') - 1
-    if (sa == sb) return 0.0
-    if (sa == c) sa = if (sb > c - 1 - sb) 0 else c - 1
-    else if (sb == c) sb = if (sa > c - 1 - sa) 0 else c - 1
-    val d = table(sa * c + sb).toDouble
-    d * d
-  }
+  /** Squared cell distance of a word char against an internal symbol —
+    * [[Sax.cellDistSq]], the bound mindist scoring itself sums, so a
+    * pruned row can never be one the score would keep. */
+  private def dist2(ch: Char, symbol: Int, c: Int): Double =
+    math.abs(Sax.cellDistSq(Sax.charSymbol(ch, c), symbol, c))
 
   private def allowedPredicates(md: SaxMindistExpr, tau: Double): Seq[(Expression, Expression)] = {
     md.children match {
       case Seq(wordExpr, Literal(nA: Long, _), Literal(pat: UTF8String, StringType),
                Literal(0L, _), Literal(c: Int, _)) =>
-        val pattern = pat.toString
-        val pSym = Sax.parseSymbols(pattern, c)
+        val pSym = Sax.parseSymbols(pat.toString, c)
         if (pSym == null || tau < 0) return Nil
-        val w = pattern.length
+        val w = pSym.length
         val n = if (nA > 0) nA else w.toLong
         val comp2 = n.toDouble / w.toDouble
-        val table = Tables.distTable(c - 2)
-        val chars = (0 until c).map(i => ('A' + i).toChar) :+ '#'
-
+        val chars = Sax.alphabet(c)
         (0 until w).flatMap { i =>
-          val pc = if (pSym(i) == c) '#' else ('A' + (c - pSym(i) - 1)).toChar
-          val allowed = chars.filter(ch => comp2 * cellSq(table, c, ch, pc) <= tau * tau)
+          val allowed = chars.filter(ch => comp2 * dist2(ch, pSym(i), c) <= tau * tau)
           // only inject when the position actually prunes something
           if (allowed.length == chars.length || allowed.isEmpty) None
           else {
@@ -167,13 +156,12 @@ object MindistPruneRule extends Rule[LogicalPlan] {
       // word vs word (neither side a literal pattern): per-position pair
       // membership, identical at every position, fixed prefix depth
       case Seq(wordA, Literal(_: Long, _), wordB, Literal(_: Long, _), Literal(c: Int, _))
-          if c >= 2 && c <= 16 && tau >= 0 &&
+          if c >= Tables.MinCardinality && c <= Tables.MaxCardinality && tau >= 0 &&
             !wordA.isInstanceOf[Literal] && !wordB.isInstanceOf[Literal] =>
-        val table = Tables.distTable(c - 2)
-        val chars = (0 until c).map(i => ('A' + i).toChar) :+ '#'
+        val chars = Sax.alphabet(c)
         // comp² = n/w >= 1 for every valid (n, w): the w-independent bound
         val allowed = for {
-          a <- chars; b <- chars if cellSq(table, c, a, b) <= tau * tau
+          a <- chars; b <- chars if dist2(a, Sax.charSymbol(b, c), c) <= tau * tau
         } yield s"$a$b"
         if (allowed.length == chars.length * chars.length) return Nil
         val inList = allowed.map(s => Literal(UTF8String.fromString(s), StringType))

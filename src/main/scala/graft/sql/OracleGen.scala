@@ -143,8 +143,10 @@ object OracleGen {
   /** Shared symbol algebra: squared cell distance for raw internal symbols
     * (sentinel = c) with the '#'-maps-to-farthest rule, plus whether the
     * pair contributes to the `above` component. One definition feeds both
-    * oracle forms so they cannot diverge from each other or from
-    * Sax.mindistSymbols. */
+    * oracle forms so they cannot diverge from each other. It deliberately
+    * does NOT call Sax.cellDistSq / Sax.charSymbol: the gate compares the
+    * engine against this independent derivation, so sharing the engine's
+    * definitions would make that check circular. */
   private def cellSq(saRaw: Int, sbRaw: Int, c: Int): (Double, Boolean) = {
     var sa = saRaw
     var sb = sbRaw

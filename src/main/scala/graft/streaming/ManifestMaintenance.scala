@@ -67,14 +67,7 @@ object ManifestMaintenance {
         .select("file").collect().map(r => bare(r.getString(0))).toSet
     val fresh = listed.filterNot(known)
     if (fresh.nonEmpty)
-      spark.read.parquet(fresh: _*)
-        .select(input_file_name().as("raw_file"), col(key))
-        .groupBy("raw_file")
-        .agg(min(key).as(s"min_$key"), max(key).as(s"max_$key"),
-          count(lit(1)).as("n_rows"))
-        .select(regexp_replace(col("raw_file"), "^file:(//)?", "").as("file"),
-          col(s"min_$key"), col(s"max_$key"), col("n_rows"))
-        .write.mode("append").parquet(manifestPath)
+      fileStats(spark, fresh, key).write.mode("append").parquet(manifestPath)
     fresh.size
   }
 
@@ -83,7 +76,13 @@ object ManifestMaintenance {
     * [[update]]. */
   def rebuild(spark: SparkSession, layoutPath: String,
               key: String = "user_id"): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(listDataFiles(layoutPath): _*)
+    fileStats(spark, listDataFiles(layoutPath), key)
+
+  /** One (file, min_key, max_key, n_rows) row per data file: the manifest's
+    * row shape, for both [[update]] and [[rebuild]]. */
+  private def fileStats(spark: SparkSession, files: Seq[String],
+                        key: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(files: _*)
       .select(input_file_name().as("raw_file"), col(key))
       .groupBy("raw_file")
       .agg(min(key).as(s"min_$key"), max(key).as(s"max_$key"),

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.sax.SaxFunctions.sax_encode
 import graft.sax.SaxWindow
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming port of the reference's stateful sliding-window
@@ -34,7 +36,6 @@ object SaxStreaming {
     * source can never split the typed streaming surface from the batch one. */
   def seriesEvents(events: org.apache.spark.sql.DataFrame): Dataset[SeriesEvent] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
     events.select(col("user_id").as("userId"), col("event_id").as("eventId"),
         (graft.queries.QueryBase.tsUs(events) * lit(1000L)).as("ts"), col("value"))
       .as[SeriesEvent]
@@ -84,32 +85,10 @@ object SaxStreaming {
     * for that window, tolerating `lateness` of out-of-order data — the
     * idiomatic Structured Streaming treatment when event time, not arrival
     * order, defines the series. */
-  /** Shared by the tumbling and session event-time variants: event-time
-    * groups have data-dependent sizes, so truncate to the largest
-    * encodable prefix (n % w == 0); null (filtered) below w values. ONE
-    * definition so the two variants' truncation/null contracts cannot
-    * drift. */
-  private def truncEncode(w: Int, c: Int) =
-    org.apache.spark.sql.functions.udf((vs: Seq[Double]) => {
-      val n = vs.length - vs.length % w
-      if (n == 0) null else graft.sax.Sax.encode(vs.take(n).toArray, w, c)
-    })
-
   def eventTimeWords(events: Dataset[SeriesEvent], windowLength: String,
-                     lateness: String, w: Int, c: Int) = {
-    import org.apache.spark.sql.functions._
-    val enc = truncEncode(w, c)
-    events
-      // tsUs dispatches on the carrier type; for SeriesEvent's ns Long it is
-      // integer division (FP division of ns epochs loses precision above 2^53)
-      .withColumn("ets", timestamp_micros(graft.queries.QueryBase.tsUs(events.toDF())))
-      .withWatermark("ets", lateness)
-      .groupBy(window(col("ets"), windowLength), col("userId"))
-      .agg(sort_array(collect_list(struct(col("ts"), col("eventId"), col("value")))).as("rows"))
-      .select(col("window"), col("userId"),
-        enc(expr("transform(rows, r -> r.value)")).as("word"))
-      .where(col("word").isNotNull) // windows with fewer than w values don't encode
-  }
+                     lateness: String, w: Int, c: Int): DataFrame =
+    windowWords(events, window(col("ets"), windowLength), lateness, w, c)
+      .select(col("window"), col("userId"), col("word"))
 
   /** Event-time SESSION windows (gap-closed) — the streaming analogue of
     * the batch q27 sessionization: a session collects a key's events until
@@ -120,16 +99,29 @@ object SaxStreaming {
     * At 100 TB the only shuffle is the session-window aggregation on the
     * series key — the same partitioning every other per-key op uses. */
   def sessionWords(events: Dataset[SeriesEvent], gap: String,
-                   lateness: String, w: Int, c: Int) = {
-    import org.apache.spark.sql.functions._
-    val enc = truncEncode(w, c)
+                   lateness: String, w: Int, c: Int): DataFrame =
+    windowWords(events, session_window(col("ets"), gap), lateness, w, c)
+      .select(col("session_window"), col("userId"), size(col("rows")).as("n_events"),
+        col("word"))
+
+  /** The one body of both event-time variants: group by (`windowCol`, key)
+    * under the watermark, then encode each group's (ts, eventId)-ordered
+    * values with the native `sax_encode`. Groups have data-dependent
+    * sizes, so the encode sees the largest encodable prefix (n % w == 0);
+    * below w values that prefix is empty and the word is null, and the row
+    * is dropped. */
+  private def windowWords(events: Dataset[SeriesEvent], windowCol: Column,
+                          lateness: String, w: Int, c: Int): DataFrame = {
+    val values = expr("transform(rows, r -> r.value)")
     events
+      // tsUs dispatches on the carrier type; for SeriesEvent's ns Long it is
+      // integer division (FP division of ns epochs loses precision above 2^53)
       .withColumn("ets", timestamp_micros(graft.queries.QueryBase.tsUs(events.toDF())))
       .withWatermark("ets", lateness)
-      .groupBy(session_window(col("ets"), gap), col("userId"))
+      .groupBy(windowCol, col("userId"))
       .agg(sort_array(collect_list(struct(col("ts"), col("eventId"), col("value")))).as("rows"))
-      .select(col("session_window"), col("userId"), size(col("rows")).as("n_events"),
-        enc(expr("transform(rows, r -> r.value)")).as("word"))
+      .withColumn("word",
+        sax_encode(slice(values, lit(1), size(values) - size(values) % w), w, c))
       .where(col("word").isNotNull)
   }
 

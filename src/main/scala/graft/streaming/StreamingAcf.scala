@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.QueryBase.pround
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -41,17 +42,13 @@ object StreamingAcf {
   private val Lags: Seq[Int] = graft.queries.RelQueries.AcfLags
   private val maxLag: Long = Lags.max.toLong
 
-  /** Scalar pround(x, 6) — the identical IEEE ops of QueryBase.pround. */
-  private def pround6(x: Double): Double =
-    math.floor(x * 1.0e6 + 0.5) / 1.0e6
-
   /** The batch tail's terminal expression on one lag's moments. */
   private def rOf(m: LagM): Double = {
     val num = m.n * m.sxy - m.sx * m.sy
     val d1 = m.n * m.sxx - m.sx * m.sx
     val d2 = m.n * m.syy - m.sy * m.sy
     if (d1 > 0L && d2 > 0L)
-      pround6(num.toDouble / math.sqrt(d1.toDouble * d2.toDouble))
+      pround(num.toDouble / math.sqrt(d1.toDouble * d2.toDouble), 6)
     else 0.0
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.QueryBase.pround
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -38,10 +39,6 @@ object StreamingDrift {
   private val DeltaQ = graft.queries.RelQueries.PhDeltaQ
   private val LambdaQ = graft.queries.RelQueries.PhLambdaQ
 
-  /** Scalar pround(x, 4) — the identical IEEE ops of QueryBase.pround. */
-  private def pround4(x: Double): Double =
-    math.floor(x * 1.0e4 + 0.5) / 1.0e4
-
   def phStream(days: Dataset[DayMean]): Dataset[PhOut] = {
     import days.sparkSession.implicits._
     days.groupByKey(_.eventType)
@@ -62,8 +59,8 @@ object StreamingDrift {
             val alarmDay =
               if (st.alarmDay >= 0L || dev <= LambdaQ) st.alarmDay else r.day
             st = PhState(n, cs, m, runmin, maxDev, alarmDay)
-            PhOut(et, r.day, n, pround4(dev.toDouble / 1.0e4),
-              pround4(maxDev.toDouble / 1.0e4), alarmDay)
+            PhOut(et, r.day, n, pround(dev.toDouble / 1.0e4, 4),
+              pround(maxDev.toDouble / 1.0e4, 4), alarmDay)
           }
           state.update(st)
           out.iterator

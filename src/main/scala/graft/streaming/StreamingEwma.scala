@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.QueryBase.pround
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -34,10 +35,6 @@ object StreamingEwma {
   private val W = graft.queries.RelQueries.EwmaWq.toArray
   private val Scale = 10000.0
 
-  /** Scalar pround(x, 6) — the identical IEEE ops of QueryBase.pround. */
-  private def pround6(x: Double): Double =
-    math.floor(x * 1.0e6 + 0.5) / 1.0e6
-
   def ewmaStream(events: Dataset[EwmaEvent]): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.userId)
@@ -62,7 +59,7 @@ object StreamingEwma {
           num += W(k) * recent(k); den += W(k); k += 1
         }
         EwmaOut(userId, e.eventId, e.eventType,
-          pround6(num.toDouble / (den.toDouble * Scale)))
+          pround(num.toDouble / (den.toDouble * Scale), 6))
       }
       state.update(EwmaState(recent.toArray))
       out.iterator

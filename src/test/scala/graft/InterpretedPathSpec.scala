@@ -42,8 +42,7 @@ class InterpretedPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       "q11 must run on the native expression, not a boxed UDF")
     val p = q11.where(org.apache.spark.sql.functions.col("user_id") === 1L).head()
     assert((1 to 4).forall(i => !p.isNullAt(i)), p)
-    // SQL registration path
-    graft.sax.SaxFunctions.register(spark)
+    // sax_encode via the GraftExtensions native — interpreted path
     val r = spark.sql(
       "SELECT sax_encode(array(1.0D, 2.0D, 3.0D, 10.1D), 2, 4) AS w").head()
     assert(r.getString(0) == "AD")

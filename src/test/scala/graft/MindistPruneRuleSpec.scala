@@ -22,14 +22,16 @@ class MindistPruneRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def words = {
+  /** Trailing-window words (n = 8, w = 4) at cardinality `c`. */
+  private def wordsAt(c: Int) = {
     import org.apache.spark.sql.expressions.Window
     val trail = Window.partitionBy("user_id").orderBy("ts", "event_id")
       .rowsBetween(-7, 0)
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("event_id"),
-        sax_encode_window(collect_list(col("value")).over(trail), 8, 4, 4).as("word"))
+        sax_encode_window(collect_list(col("value")).over(trail), 8, 4, c).as("word"))
   }
+  private def words = wordsAt(4)
 
   test("rule injects substring IN predicates for pattern-threshold filters") {
     val md = sax_mindist(col("word"), lit(8L), lit("ADBB"), lit(0L), 4)
@@ -43,44 +45,60 @@ class MindistPruneRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pruned results equal the unprunable UDF-path results across thresholds") {
-    for (tau <- Seq(0.0, 0.5, 1.0, 2.0, 100.0)) {
-      val mdN = sax_mindist(col("word"), lit(8L), lit("BDBB"), lit(0L), 4)
-      val native = words
-        .select(col("event_id"), graft.queries.QueryBase.pround(mdN.getField("dist"), 6).as("dist"))
-        .where(col("dist") <= tau)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      val mdU = saxMindist(col("word"), lit(8L), lit("BDBB"), lit(0L), lit(4))
-      val viaUdf = words
-        .select(col("event_id"), graft.queries.QueryBase.pround(mdU.getField("dist"), 6).as("dist"))
-        .where(col("dist") <= tau)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(native == viaUdf, s"tau=$tau: ${native.size} vs ${viaUdf.size}")
+    // one valid pattern per cardinality: the allowed symbol sets differ at
+    // every c, so soundness is checked at each, not only at c = 4
+    for ((c, pattern) <- Seq(4 -> "BDBB", 2 -> "ABBA", 3 -> "CABC", 8 -> "BHDA", 16 -> "CPGA")) {
+      var pruned = false
+      for (tau <- Seq(0.0, 0.5, 1.0, 2.0, 100.0)) {
+        val mdN = sax_mindist(col("word"), lit(8L), lit(pattern), lit(0L), c)
+        val q = wordsAt(c)
+          .select(col("event_id"), graft.queries.QueryBase.pround(mdN.getField("dist"), 6).as("dist"))
+          .where(col("dist") <= tau)
+        pruned ||= q.queryExecution.optimizedPlan.toString.contains("substring")
+        val native = q.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+        val mdU = saxMindist(col("word"), lit(8L), lit(pattern), lit(0L), lit(c))
+        val viaUdf = wordsAt(c)
+          .select(col("event_id"), graft.queries.QueryBase.pround(mdU.getField("dist"), 6).as("dist"))
+          .where(col("dist") <= tau)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+        assert(native == viaUdf, s"c=$c tau=$tau: ${native.size} vs ${viaUdf.size}")
+      }
+      // c = 2 has one breakpoint, so every cell distance is 0 and no
+      // position can prune; at every other c some threshold must
+      assert(pruned == (c != 2), s"c=$c: prune injected = $pruned")
     }
   }
 
   test("rule injects pair predicates into word-vs-word dictionary joins (q17 shape)") {
-    val dict = words.select("word").distinct()
-    def joined(mdExpr: org.apache.spark.sql.Column) =
+    def joined(c: Int, mdExpr: org.apache.spark.sql.Column) = {
+      val dict = wordsAt(c).select("word").distinct()
       dict.as("a").join(dict.as("b"), col("a.word") < col("b.word"))
         .select(col("a.word").as("wa"), col("b.word").as("wb"),
           graft.queries.QueryBase.pround(mdExpr.getField("dist"), 6).as("dist"))
         .where(col("dist") <= 1.0)
+    }
 
-    val q = joined(sax_mindist(col("a.word"), lit(8L), col("b.word"), lit(8L), 4))
-    val plan = q.queryExecution.optimizedPlan.toString
+    val plan = joined(4, sax_mindist(col("a.word"), lit(8L), col("b.word"), lit(8L), 4))
+      .queryExecution.optimizedPlan.toString
     // pair predicates referencing BOTH sides, inside the join condition
     assert(plan.contains("concat(substring"), s"no pair prune in:\n$plan")
-    assert("concat\\(substring".r.findAllIn(plan).length == 4, plan) // PairPruneDepth
     // c=4, tau=1: symbol pairs at distance 1.349 (A-D and the '#' remaps)
     // must be excluded from the allowed set
     assert(!plan.matches("(?s).*IN \\([^)]*\\bAD\\b.*"), plan)
 
     // pruning is a sound necessary condition: results equal the UDF path
-    // (which the rule cannot match)
-    val native = q.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
-    val viaUdf = joined(saxMindist(col("a.word"), lit(8L), col("b.word"), lit(8L), lit(4)))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
-    assert(native == viaUdf, s"${native.size} vs ${viaUdf.size}")
+    // (which the rule cannot match) at c = 4 and the extreme cardinalities.
+    // At c = 2 every cell distance is 0, so no pair prunes there.
+    for (c <- Seq(4, 2, 16)) {
+      val q = joined(c, sax_mindist(col("a.word"), lit(8L), col("b.word"), lit(8L), c))
+      val planC = q.queryExecution.optimizedPlan.toString
+      assert("concat\\(substring".r.findAllIn(planC).length == (if (c == 2) 0 else 4), // PairPruneDepth
+        s"c=$c:\n$planC")
+      val native = q.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      val viaUdf = joined(c, saxMindist(col("a.word"), lit(8L), col("b.word"), lit(8L), lit(c)))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      assert(native.nonEmpty && native == viaUdf, s"c=$c: ${native.size} vs ${viaUdf.size}")
+    }
   }
 
   test("q05 two-phase top-k: phase 2 plans a pruned scan and equals the direct sort") {

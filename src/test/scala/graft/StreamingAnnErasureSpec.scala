@@ -141,7 +141,7 @@ class StreamingAnnErasureSpec extends AnyFunSuite with BeforeAndAfterAll {
     StreamingIndexErasure.writeBatch(a.toDF("vec_id"), spark.table(codesT),
       "vec_id", outDir, 0L)
     val after0 = storeSet(outDir, "vec_id")
-    // a replayed id overwrites with identical bytes — never duplicates
+    // a replayed committed id no-ops — the store never duplicates
     StreamingIndexErasure.writeBatch(a.toDF("vec_id"), spark.table(codesT),
       "vec_id", outDir, 0L)
     assert(storeSet(outDir, "vec_id") == after0,

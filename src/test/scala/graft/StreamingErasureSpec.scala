@@ -103,7 +103,7 @@ class StreamingErasureSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"stream-served BM25 != q304 batch serve (${fromStream.size} vs ${fromBatch.size})")
   }
 
-  test("a replayed micro-batch id overwrites, never duplicates or re-decrements") {
+  test("a replayed micro-batch id no-ops, never duplicates or re-decrements") {
     val ss = spark; import ss.implicits._
     val outDir = java.nio.file.Files.createTempDirectory("graft-sers3-").toString
     val ids = cohort()
