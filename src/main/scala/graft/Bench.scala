@@ -7,7 +7,9 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Driver-run benchmark: times every SparkEntry query at the given scale
   * factor and prints one JSON line. A short warmup runs first so the
@@ -133,20 +135,31 @@ object Bench {
     var pass1Total = 0.0 // first TIMED pass total, comparable to pre-r7 rounds
     var pass0Total = 0.0 // the untimed WARM pass: bootstrap (builds) + first
                          // execution — emitted so cold-start cost is visible
+    // generated classes compiled (Spark's class-cache misses) and their
+    // compile ms, per pass: timed passes that compile nothing measure a
+    // warm session
+    val compiles = new Array[Long](4)
+    val compileMs = new Array[Double](4)
     graft.queries.AtRestTables.resetBuildSeconds()
-    for (pass <- 0 to 3; name <- names) {
-      // a THROWING query must never record its ~0.05s analysis-failure time
-      // as a benchmark number (r10's broken queries made the total look
-      // BETTER): only successful passes feed best/pass1Total; a query with
-      // no successful timed pass reports -1.0 and counts into "errors".
-      logged(name, pass, measure(spark, counter, registry(name), sfDir)).foreach { run =>
-        if (pass == 0) pass0Total += run.seconds
-        else { // pass 0 is the warm pass: never timed per query
-          if (pass == 1) pass1Total += run.seconds
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), run.seconds)
-          sched(name) = run.sched
+    for (pass <- 0 to 3) {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
+      for (name <- names) {
+        // a THROWING query must never record its ~0.05s analysis-failure time
+        // as a benchmark number (r10's broken queries made the total look
+        // BETTER): only successful passes feed best/pass1Total; a query with
+        // no successful timed pass reports -1.0 and counts into "errors".
+        logged(name, pass, measure(spark, counter, registry(name), sfDir)).foreach { run =>
+          if (pass == 0) pass0Total += run.seconds
+          else { // pass 0 is the warm pass: never timed per query
+            if (pass == 1) pass1Total += run.seconds
+            best(name) = math.min(best.getOrElse(name, Double.MaxValue), run.seconds)
+            sched(name) = run.sched
+          }
         }
       }
+      compiles(pass) = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      compileMs(pass) = (CodeGenerator.compileTime - ns0) / 1e6
     }
     // recall-ladder shared-truth supplement: the 8 recall harnesses
     // share ONE exact-truth frame through the tcache plan-equality memo,
@@ -160,11 +173,16 @@ object Bench {
     // inherited whatever load window it landed in and the comparison was
     // meaningless, so the shared run is now ALSO min-of-3 under the same
     // memo-invalidate + cache-clear start-state as each standalone
-    // measurement. It has no warm pass: the main loop leaves the JIT and
-    // the builds warm but not the generated classes, because Spark's
-    // 100-entry class cache (spark.sql.codegen.cache.maxEntries) is smaller
-    // than one pass over the registry. Shared pass 1 recompiles; passes 2-3
-    // are warm only if the ladder's own classes fit in that cache.
+    // measurement. It has no warm pass: the main loop leaves the JIT, the
+    // builds and the generated classes warm: configure sizes Spark's class
+    // cache to hold one pass over the registry, and the conf-isolated
+    // queries reuse one child session per conf set. `codegen_compiles`
+    // shows it: at sf0.1 on 4 cores the whole registry compiles
+    // [5464, 802, 724, 681] classes per pass, where the 100-entry cache and
+    // a child session per execution compiled [9677, 9023, 9024, 9033]. The
+    // ~700 left per timed pass have source that differs per execution;
+    // eight queries incl. the five conf-isolated ones compile
+    // [276, 0, 0, 0].
     val ladder = Seq("q90_pq_recall", "q99_ivf_adc_recall",
       "q101_ivfadc_nprobe_recall", "q105_opq_recall",
       "q111_ivf_nprobe_recall", "q113_sq8_recall",
@@ -261,8 +279,12 @@ object Bench {
     val schedJson = results.flatMap { case (name, _) => sched.get(name).map(c =>
       "\"" + name.split("_").head + "\":[" + c.jobs + "," + c.stages + "," + c.tasks + "]")
     }.mkString("{", ",", "}")
+    // "codegen_compiles" / "codegen_ms" (full artifact only): per pass,
+    // warm pass first
+    val codegenJson = s""""codegen_compiles":${compiles.mkString("[", ",", "]")},""" +
+      s""""codegen_ms":${compileMs.map(f2).mkString("[", ",", "]")},"""
     def jsonLine(qs: String, slowestOnly: Boolean, bs: Seq[(String, Double)],
-        withSched: Boolean): String =
+        full: Boolean): String =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":$cpus,"passes":3,"warm_pass":true,"errors":$errors,""" +
         s""""load_start":"$loadStart","load_end":"$loadEnd",""" +
         s""""probe_start":${f2(probeStart)},"probe_end":${f2(probeEnd)},""" +
@@ -271,7 +293,8 @@ object Bench {
         s""""ladder_shared":${f2(ladderShared)},"ladder_standalone":${f2(ladderStandalone)},""" +
         s""""train_serve_split":$splitJson,""" +
         s""""queries_all":${results.size},"queries_slowest_only":$slowestOnly,""" +
-        s""""queries":$qs,""" + (if (withSched) s""""sched":$schedJson,""" else "") +
+        s""""queries":$qs,""" +
+        (if (full) s""""sched":$schedJson,""" + codegenJson else "") +
         s""""sf":"$sfDir"}"""
     // stdout for the driver (build.sbt routes `run` output straight to
     // stdout, no [info] prefix): the slowest-60 subset, sized to survive
@@ -283,8 +306,8 @@ object Bench {
     // gitignored; the absolute-path copy survives any driver cwd and
     // rides the end-of-round commit, so every round carries all
     // per-query timings machine-parseable.
-    println(jsonLine(qsTop, slowestOnly = true, builds.take(10), withSched = false))
-    val fullLine = jsonLine(qsFull, slowestOnly = false, builds, withSched = true) + "\n"
+    println(jsonLine(qsTop, slowestOnly = true, builds.take(10), full = false))
+    val fullLine = jsonLine(qsFull, slowestOnly = false, builds, full = true) + "\n"
     def writeArtifact(path: String, what: String): Unit =
       try Files.writeString(Paths.get(path), fullLine)
       catch {

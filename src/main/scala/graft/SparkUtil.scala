@@ -31,6 +31,25 @@ object SparkUtil {
     *    stores, which need their own manager). The offset/commit log
     *    layout is unchanged, `.crc` files are kept, and Spark's state-store
     *    checksum files (`ChecksumCheckpointFileManager`) stay on.
+    *  - `codegen.cache.maxEntries` = [[CodegenCacheEntries]]: Spark's
+    *    generated-class cache defaults to 100 entries, fewer than one
+    *    pass over the registry generates, so every execution ran Janino
+    *    again and the JIT compiled the fresh classes again. Measured with
+    *    an unbounded cache, one Bench-style pass over all 316 queries
+    *    compiles 5,484 distinct classes at sf0.01 and 5,478 at sf0.1; a
+    *    second pass adds ~820 whose source differs from the first pass's.
+    *    6,144 holds one pass with 12% headroom, so the least recently used
+    *    classes, not the live ones, are evicted. Heap cost, measured by
+    *    invalidating the full cache: 31 KB of heap and ~10 KB of metaspace
+    *    per class, so ~190 MB of heap for a session that runs the whole
+    *    registry, and ~10 MB for perfbench's 8-query mix (~300 classes).
+    *    The key is static and JVM-wide: `CodeGenerator`'s cache is built
+    *    once, sized by the session that first touches `CodeGenerator`,
+    *    and later sessions cannot resize it. Its entries are keyed by
+    *    (context classloader, source), and each session has its own
+    *    artifact classloader, so a session minted per execution misses
+    *    on every class at any size; conf-isolated queries therefore take
+    *    their child session from [[graft.queries.QueryBase.childSession]].
     */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.spark.GraftExtensions")
@@ -49,6 +68,10 @@ object SparkUtil {
       .config("spark.hadoop.fs.file.impl", classOf[graft.spark.LocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Spark's generated-class cache size, set by [[configure]]. */
+  private[graft] val CodegenCacheEntries = 6144
 
   /** Read one of the testdata tables from `dir`. Column pruning and filter
     * pushdown reach the parquet scan because this stays a plain relation.

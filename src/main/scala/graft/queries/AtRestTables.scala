@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Lifecycle: a [[SessionMemo]] keyed by the session OBJECT. When a
   * context ends, its entries' temp dirs are deleted. Its FIFO bound
-  * reclaims entries of sessions minted and discarded mid-application
-  * (newSession() churn). Eviction only UNREGISTERS — a
+  * reclaims entries of sessions minted and dropped mid-application (tests
+  * and streaming clones; engine queries reuse one
+  * [[QueryBase.childSession]] per conf set). Eviction only UNREGISTERS — a
   * concurrently-running query of the same JVM may still be executing a
   * plan that reads the evicted files, so the physical delete is deferred
   * to the owning context's end, when no query of that context can be

@@ -392,11 +392,12 @@ object DedupQueries {
     * eviction and [[invalidateComponentMemo]] can unpersist it. The
     * [[SessionMemo]] drops a stopped context's entries (their RDD caches
     * die with it), its FIFO bound of 8 unpersists the oldest entry when
-    * sessions are minted via newSession() and discarded mid-application,
-    * and a caller that rewrites the data under `dir` mid-session
-    * invalidates explicitly (Bench does, so each timed run measures the
-    * full pipeline standalone and per-query numbers stay
-    * order-independent). */
+    * a caller mints sessions and drops them mid-application (tests and
+    * streaming clones do; engine queries reuse
+    * [[QueryBase.childSession]]), and a caller that rewrites the data
+    * under `dir` mid-session invalidates explicitly (Bench does, so each
+    * timed run measures the full pipeline standalone and per-query
+    * numbers stay order-independent). */
   private[graft] final case class ComponentEntry(labels: DataFrame, edges: DataFrame)
   private[graft] val componentMemo = new SessionMemo[ComponentEntry](8,
     onEvict = (_, e) => unpersistEdges(e))

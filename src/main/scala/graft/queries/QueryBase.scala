@@ -96,8 +96,9 @@ object QueryBase {
     * correctness-safe (Spark recomputes from lineage — unlike at-rest
     * FILES, nothing can dangle). The [[SessionMemo]] drops an ending
     * context's entries (their cached RDDs die with it) and its FIFO bound
-    * unpersists entries of sessions minted via newSession() and
-    * discarded mid-application. */
+    * unpersists entries of sessions a caller minted and dropped
+    * mid-application (tests and streaming clones still do; engine
+    * queries take theirs from [[childSession]]). */
   private[graft] val tcacheMemo = new SessionMemo[DataFrame](64,
     onEvict = (_, df) => unpersistQuietly(df))
 
@@ -145,6 +146,28 @@ object QueryBase {
     * same site just re-caches. */
   def tcacheDrop(spark: SparkSession, site: String): Unit =
     tcacheMemo.remove(spark, site).foreach(unpersistQuietly)
+
+  /** Conf-isolated child sessions, one per (parent, conf set). */
+  private[graft] val childMemo = new SessionMemo[SparkSession](16)
+
+  /** THE conf-isolated child session: `parent.newSession()` with `confs`
+    * set, built once per (parent, conf set) and reused by every later
+    * call, whatever the order of `confs`. A query that needs confs its
+    * parent must not see (a lowered AQE skew threshold, runtime blooms,
+    * no broadcast) takes its session here instead of minting one per
+    * execution: a fresh session has a fresh artifact classloader, which
+    * misses Spark's generated-class cache on every class
+    * ([[graft.SparkUtil.configure]]), and a fresh session key misses the
+    * resolved-relation memo ([[graft.SparkUtil.table]]) on every read.
+    * CodegenReuseSpec fails on a `newSession()` or `conf.set(` elsewhere
+    * under graft.queries. */
+  def childSession(parent: SparkSession, confs: (String, String)*): SparkSession =
+    childMemo.getOrBuild(parent,
+        confs.sorted.map { case (k, v) => s"$k=$v" }.mkString("\n")) {
+      val child = parent.newSession()
+      confs.foreach { case (k, v) => child.conf.set(k, v) }
+      child
+    }
 
   /** Repartition a small single-file table before UDF-heavy work: the
     * testdata tables are one parquet file each, so Spark plans ONE input

@@ -515,6 +515,14 @@ object RelQueries {
     * both). */
   private[graft] val SkewW = 97
 
+  /** q139/q159's child-session confs: runtime bloom filters at any
+    * application-side size, broadcast off. One set, so both queries
+    * share one [[QueryBase.childSession]]. */
+  private val RuntimeBloomConfs = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   /** q141 layout fan-out: the range-clustered events copy is written as
     * [[SkipFiles]] disjoint user_id ranges (one file each). At 100 TB the
     * analogue is thousands of files; the manifest stays proportional to
@@ -722,11 +730,7 @@ object RelQueries {
     // is exactly what the oracle replays. RuntimeFilterSpec pins the
     // bloom_filter_agg + might_contain plan shape.
     "q139_runtime_bloom_join" -> ((spark0, dir) => {
-      val spark = spark0.newSession()
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val spark = childSession(spark0, RuntimeBloomConfs: _*)
       val o = table(spark, dir, "orders")
         .where(col("o_orderpriority") === "1-URGENT")
       table(spark, dir, "lineitem")
@@ -1286,14 +1290,13 @@ object RelQueries {
     // SF. AqeSkewSpec pins skew=true in the executed plan; the oracle
     // replays the join naively — equal results prove the split exact.
     "q142_aqe_skew_join" -> ((spark0, dir) => {
-      val spark = spark0.newSession()
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "128b")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64b")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+      val spark = childSession(spark0,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "128b",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64b",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
       // AQE splits a skewed reduce partition at MAP-output granularity; a
       // test-SF parquet file scans as one map task, whose single chunk is
       // unsplittable — fan the fact over 16 mappers first (at 100 TB the
@@ -1558,11 +1561,7 @@ object RelQueries {
     // over raw parquet.
     "q159_star_runtime_filters" -> ((spark0, dir) => {
       val (pT, dT) = partitionedEventsTable(spark0, dir)
-      val spark = spark0.newSession()
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val spark = childSession(spark0, RuntimeBloomConfs: _*)
       val days = broadcast(spark.table(dT).where(col("dow") === 0).select("day"))
       val seg = table(spark, dir, "customer")
         .where(col("c_mktsegment") === "BUILDING")

@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE session-scoped memo lifecycle: values keyed by (session,
   * String), shared by the transient-frame cache ([[QueryBase.tcache]]),
-  * q75's component labels, the at-rest table sets ([[AtRestTables]]) and
-  * the resolved-relation memo ([[graft.SparkUtil.table]]). Callers keep
+  * q75's component labels, the at-rest table sets ([[AtRestTables]]),
+  * the resolved-relation memo ([[graft.SparkUtil.table]]) and the
+  * conf-isolated child sessions ([[QueryBase.childSession]]). Callers keep
   * only their domain logic (what to unpersist, drop or delete) in the
   * callbacks.
   *
@@ -27,9 +28,10 @@ import org.apache.spark.sql.SparkSession
   *     takes a DIFFERENT key's lock and the prerequisite graph is acyclic,
   *     so nothing deadlocks. A build that throws memoizes nothing; the
   *     next call re-enters it.
-  *   - A FIFO bound of `max` entries reclaims the values of sessions
-  *     minted via newSession() and discarded mid-application; each
-  *     evicted value goes to `onEvict` exactly once.
+  *   - A FIFO bound of `max` entries reclaims the values of sessions a
+  *     caller mints and drops mid-application (tests and streaming
+  *     clones do; engine queries reuse one child session per conf set);
+  *     each evicted value goes to `onEvict` exactly once.
   *   - One listener per context drops that context's entries when it
   *     ends and hands them to `onContextEnd`; other contexts' entries
   *     stay. A stopped context therefore pins no session and no value.

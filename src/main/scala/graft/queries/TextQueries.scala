@@ -69,6 +69,12 @@ object TextQueries {
   private val PostingBuckets = 8
   private val SearchTerms = 3
 
+  /** q148/q261's child-session conf: keep the bucketed read that the
+    * autoBucketedScan heuristic drops when its only benefit is bucket
+    * pruning. */
+  private val BucketPruneConfs =
+    Seq("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
+
   /** The postings derivation — (term, doc_id, tf) from a documents frame.
     * ONE definition: the q148 at-rest build AND the streaming appender
     * ([[graft.streaming.StreamingPostingsAppend]]) both call this, so the
@@ -1039,8 +1045,7 @@ object TextQueries {
       // q142's child-session idiom for confs that default wrong at test
       // shape).
       val (pT, tT, _) = invertedIndexTables(spark0, dir)
-      val spark = spark0.newSession()
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      val spark = childSession(spark0, BucketPruneConfs: _*)
       val qterms = spark.table(tT)
         .orderBy(col("df").asc, col("term").asc).limit(SearchTerms)
         .select("term").collect().map(_.getString(0))
@@ -1071,8 +1076,7 @@ object TextQueries {
     "q261_phrase_search" -> ((spark0, dir) => {
       val posT = positionalIndexTable(spark0, dir)
       val (_, tT, _) = invertedIndexTables(spark0, dir)
-      val spark = spark0.newSession()
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      val spark = childSession(spark0, BucketPruneConfs: _*)
       val ph = spark.table(tT).orderBy(col("df").desc, col("term").asc)
         .limit(2).select("term").collect().map(_.getString(0))
       val p = spark.table(posT)

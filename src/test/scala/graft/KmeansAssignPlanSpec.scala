@@ -37,7 +37,6 @@ class KmeansAssignPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("argmax assignment equals a driver-side nearest-centroid loop") {
-    def pround6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     def cos(a: Seq[Float], b: Seq[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) {
@@ -52,7 +51,7 @@ class KmeansAssignPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cents = vecs.filter(_._1 < 8).toSeq.sortBy(_._1)
     val expected = vecs.map { case (id, e) =>
       // max (rounded cos, -cent_id): ties toward the lowest centroid id
-      val (ccos, nid) = cents.map { case (cid, ce) => (pround6(cos(e, ce)), -cid) }.max
+      val (ccos, nid) = cents.map { case (cid, ce) => (QueryBase.pround(cos(e, ce), 6), -cid) }.max
       id -> ((-nid, ccos))
     }
     val got = VectorQueries.kmeansAssign(spark, dir)

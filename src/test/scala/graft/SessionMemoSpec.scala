@@ -7,12 +7,12 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one session-scoped memo lifecycle ([[SessionMemo]]) and its four
-  * users: [[QueryBase.tcache]], q75's component memo, [[AtRestTables]]
-  * and [[SparkUtil.table]]. A stopped context must leave no entry in any
-  * of them and no at-rest temp dir on disk, another context's entries
-  * must survive it, and the FIFO bound must hand each evicted value to
-  * `onEvict` exactly once. Each test starts and stops its own contexts. */
+/** The one session-scoped memo lifecycle ([[SessionMemo]]) and its five
+  * users: [[QueryBase.tcache]], q75's component memo, [[AtRestTables]],
+  * [[SparkUtil.table]] and [[QueryBase.childSession]]. A stopped context
+  * must leave no entry in any of them and no at-rest temp dir on disk,
+  * another context's entries must survive it, and the FIFO bound must
+  * hand each evicted value to `onEvict` exactly once. Each test starts and stops its own contexts. */
 class SessionMemoSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
@@ -29,18 +29,20 @@ class SessionMemoSpec extends AnyFunSuite {
     "tcache" -> QueryBase.tcacheMemo,
     "componentMemo" -> DedupQueries.componentMemo,
     "AtRestTables" -> AtRestTables.memo,
-    "tableMemo" -> SparkUtil.tableMemo)
+    "tableMemo" -> SparkUtil.tableMemo,
+    "childSession" -> QueryBase.childMemo)
 
   private def sizes(ctx: SparkContext): Map[String, Int] =
     users.map { case (n, m) => n -> m.sizeOf(ctx) }.toMap
 
-  /** Fill all four memos through their public entry points; returns the
+  /** Fill all five memos through their public entry points; returns the
     * at-rest base dirs, including FIFO-evicted ones whose delete is
     * deferred to the context's end. */
   private def fill(spark: SparkSession): Seq[String] = {
     QueryBase.tcache(spark.range(10).toDF("k"), "spec:sessionmemo")
     DedupQueries.defs("q75_neardup_components")(spark, dir)
     SparkUtil.table(spark, dir, "events")
+    QueryBase.childSession(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     // one more path entry than the FIFO bound (48): the first is evicted
     // and its dir must outlive the eviction until the context ends
     val paths = (0 to 48).map { i =>
@@ -60,7 +62,7 @@ class SessionMemoSpec extends AnyFunSuite {
     AtRestTables.memo.get(spark, "specmemotbl|x").get._2 +: paths
   }
 
-  test("a stopped context leaves no entry in any of the four memos and no at-rest dir") {
+  test("a stopped context leaves no entry in any of the five memos and no at-rest dir") {
     val spark = start()
     val ctx = spark.sparkContext
     val dirs = fill(spark)
