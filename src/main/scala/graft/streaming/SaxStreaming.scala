@@ -4,7 +4,7 @@ import graft.sax.SaxFunctions.sax_encode
 import graft.sax.SaxWindow
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured Streaming port of the reference's stateful sliding-window
   * operator (`sts_window`, SURVEY.md §2 ops 7-10): per-key state holds the
@@ -49,28 +49,19 @@ object SaxStreaming {
     * Dataset, emitting the updated word after every append — the streaming
     * equivalent of the batch q02 window query. */
   def encodeStream(events: Dataset[SeriesEvent], n: Int, w: Int, c: Int)
-  : Dataset[WordOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[SaxState, WordOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(encodeUpdate(n, w, c))
-  }
+  : Dataset[WordOut] = keyed(n, w, c).run(events)
 
-  /** The per-key update body, exposed so
-    * [[StreamingStateErasure.saxEncodeForgetting]] wraps the IDENTICAL
-    * algebra (one definition — the forgetting twin cannot drift). */
-  private[streaming] def encodeUpdate(n: Int, w: Int, c: Int)
-      : (Long, Iterator[SeriesEvent], GroupState[SaxState]) => Iterator[WordOut] =
-    (userId: Long, rows: Iterator[SeriesEvent], state: GroupState[SaxState]) => {
-      val win = state.getOption match {
-        case Some(s) => restore(s, n, w, c)
-        case None    => new SaxWindow(n, w, c)
-      }
-      val out = rows.toSeq.sortBy(e => (e.ts, e.eventId)).map { e =>
-        WordOut(userId, e.eventId, win.append(e.value))
-      }
-      state.update(snapshot(win))
-      out.iterator
+  /** The per-key declaration: rows of a batch in (ts, eventId) order, one
+    * append per row. [[StreamingStateErasure.saxEncodeForgetting]] forgets
+    * through the SAME declaration (one body — the twin cannot drift). */
+  private[streaming] def keyed(n: Int, w: Int, c: Int) =
+    KeyedState[Long, SeriesEvent, SaxState, WordOut](_.userId, OutputMode.Append(),
+        Some(Ordering.by[SeriesEvent, Long](_.ts).orElseBy(_.eventId))) {
+      (userId, rows, state) =>
+        val win = state.getOption.fold(new SaxWindow(n, w, c))(restore(_, n, w, c))
+        val out = rows.map(e => WordOut(userId, e.eventId, win.append(e.value))).toList
+        state.update(snapshot(win))
+        out.iterator
     }
 
   /** Streaming numerosity reduction: running count per SAX word

@@ -2,12 +2,12 @@ package graft.streaming
 
 import graft.queries.QueryBase.pround
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming autocorrelation — q289's live twin: the lag-1..7 daily-mean
   * correlogram maintained over a stream of per-(type, day) rows (the same
   * bounded aggregate [[StreamingDrift]] consumes) via
-  * `flatMapGroupsWithState`, emitting the refreshed per-lag r after every
+  * [[KeyedState]], emitting the refreshed per-lag r after every
   * drained day — the periodicity readout a 100 TB pipeline watches live
   * instead of re-running the batch scan.
   *
@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * to the batch q289 report (StreamingAcfSpec replays the real table and
   * asserts exact equality).
   *
-  * Ordering: days sort within each micro-batch; across batches it is
+  * Ordering: days are ordered within each micro-batch; across batches it is
   * arrival order, so a day-ordered feed (days arrive as they close)
   * reproduces the batch semantics exactly — the [[StreamingDrift]] /
   * [[StreamingEwma]] contract. Lags with no completed pair yet emit
@@ -52,37 +52,36 @@ object StreamingAcf {
     else 0.0
   }
 
-  def acfStream(days: Dataset[DayMean]): Dataset[AcfOut] = {
-    import days.sparkSession.implicits._
-    days.groupByKey(_.eventType)
-      .flatMapGroupsWithState[AcfState, AcfOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (et: String, rows: Iterator[DayMean], state: GroupState[AcfState]) =>
-          var st = state.getOption.getOrElse(
-            AcfState(Nil, List.fill(Lags.size)(LagM(0L, 0L, 0L, 0L, 0L, 0L))))
-          val out = rows.toSeq.sortBy(_.day).flatMap { r =>
-            // (updated this day?, refreshed moments) per lag — only lags
-            // the day completed a pair for emit, so the output stream is
-            // exactly one row per (type, lag, closing day), the same rows
-            // the batch inner join materializes
-            val stepped = st.lags.zip(Lags).map { case (m, l) =>
-              st.recent.find(_.day == r.day - l) match {
-                case Some(u) => (true, LagM(m.n + 1, m.sx + u.mq,
-                  m.sy + r.mq, m.sxx + u.mq * u.mq, m.syy + r.mq * r.mq,
-                  m.sxy + u.mq * r.mq))
-                case None => (false, m)
-              }
-            }
-            st = AcfState(
-              (DayVal(r.day, r.mq) :: st.recent)
-                .filter(_.day > r.day - maxLag),
-              stepped.map(_._2))
-            stepped.zip(Lags).collect { case ((true, m), l) =>
-              AcfOut(et, l.toLong, r.day, m.n, rOf(m))
+  def acfStream(days: Dataset[DayMean]): Dataset[AcfOut] = keyed.run(days)
+
+  private val keyed =
+    KeyedState[String, DayMean, AcfState, AcfOut](_.eventType, OutputMode.Append(),
+        Some(Ordering.by[DayMean, Long](_.day))) {
+      (et, rows, state) =>
+        var st = state.getOption.getOrElse(
+          AcfState(Nil, List.fill(Lags.size)(LagM(0L, 0L, 0L, 0L, 0L, 0L))))
+        val out = rows.flatMap { r =>
+          // (updated this day?, refreshed moments) per lag — only lags
+          // the day completed a pair for emit, so the output stream is
+          // exactly one row per (type, lag, closing day), the same rows
+          // the batch inner join materializes
+          val stepped = st.lags.zip(Lags).map { case (m, l) =>
+            st.recent.find(_.day == r.day - l) match {
+              case Some(u) => (true, LagM(m.n + 1, m.sx + u.mq,
+                m.sy + r.mq, m.sxx + u.mq * u.mq, m.syy + r.mq * r.mq,
+                m.sxy + u.mq * r.mq))
+              case None => (false, m)
             }
           }
-          state.update(st)
-          out.iterator
-      }
-  }
+          st = AcfState(
+            (DayVal(r.day, r.mq) :: st.recent)
+              .filter(_.day > r.day - maxLag),
+            stepped.map(_._2))
+          stepped.zip(Lags).collect { case ((true, m), l) =>
+            AcfOut(et, l.toLong, r.day, m.n, rOf(m))
+          }
+        }.toList
+        state.update(st)
+        out.iterator
+    }
 }

@@ -1,20 +1,20 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming debounce — q164's live twin: the telemetry-cleaning gate
   * that drops events arriving within [[graft.queries.RelQueries.DebounceUs]]
   * of the same user's PREVIOUS raw event (kept or not — the same
   * non-chained rule as the batch lag() pass), maintained over an
-  * unbounded stream via `flatMapGroupsWithState` and emitting every
+  * unbounded stream via [[KeyedState]] and emitting every
   * event with its keep/drop decision (a production pipe would filter on
   * `keep`; emitting both keeps every decision replay-checkable).
   *
   * State per user is ONE µs timestamp — the smallest state any stateful
   * operator here carries, checkpointed by the GroupState store. Ordering
   * matches the batch (ts_us, event_id) window order the way
-  * [[StreamingEwma]] does: rows sort within each micro-batch; across
+  * [[StreamingEwma]] does: rows are ordered within each micro-batch; across
   * batches it is arrival order, so a time-ordered feed reproduces the
   * batch decisions exactly (StreamingDebounceSpec replays the real
   * events table and asserts per-event equality).
@@ -33,26 +33,22 @@ object StreamingDebounce {
 
   private val Tau = graft.queries.RelQueries.DebounceUs
 
-  def debounceStream(events: Dataset[DebEvent]): Dataset[DebOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[DebState, DebOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(debounceUpdate)
-  }
+  def debounceStream(events: Dataset[DebEvent]): Dataset[DebOut] = keyed.run(events)
 
-  /** The per-key update body, extracted so
-    * [[StreamingStateErasure.debounceStreamForgetting]] can compose the
+  /** The per-key declaration, shared with
+    * [[StreamingStateErasure.debounceStreamForgetting]], which composes the
     * one-rule erasure semantics AROUND the unchanged debounce rule. */
-  private[streaming] val debounceUpdate
-      : (Long, Iterator[DebEvent], GroupState[DebState]) => Iterator[DebOut] =
-    (userId: Long, rows: Iterator[DebEvent], state: GroupState[DebState]) => {
-      var last = state.getOption.map(_.lastTs).getOrElse(Long.MinValue)
-      val out = rows.toSeq.sortBy(e => (e.ts, e.eventId)).map { e =>
-        val keep = last == Long.MinValue || e.ts - last >= Tau
-        last = e.ts
-        DebOut(userId, e.eventId, e.eventType, e.value, keep)
-      }
-      state.update(DebState(last))
-      out.iterator
+  private[streaming] val keyed =
+    KeyedState[Long, DebEvent, DebState, DebOut](_.userId, OutputMode.Append(),
+        Some(Ordering.by[DebEvent, Long](_.ts).orElseBy(_.eventId))) {
+      (userId, rows, state) =>
+        var last = state.getOption.map(_.lastTs).getOrElse(Long.MinValue)
+        val out = rows.map { e =>
+          val keep = last == Long.MinValue || e.ts - last >= Tau
+          last = e.ts
+          DebOut(userId, e.eventId, e.eventType, e.value, keep)
+        }.toList
+        state.update(DebState(last))
+        out.iterator
     }
 }

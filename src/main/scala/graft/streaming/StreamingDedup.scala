@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming deduplication over a document ingest stream — the online
   * counterpart of the batch dedup family (q30/q56/q62): documents arrive
@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     on the normalized-content hash — Spark's built-in dedup state store
   *     keeps one entry per hash inside the watermark horizon, so state is
   *     bounded by the ingest window, not corpus history.
-  *  2. [[firstSeenStream]]: explicit `flatMapGroupsWithState` keyed by the
+  *  2. [[firstSeenStream]]: a [[KeyedState]] keyed by the
   *     content hash that emits each document annotated with its canonical
   *     (first-seen) doc id — the streaming analogue of q56's survivor
   *     pointers, with the same checkpoint/restore durability as
@@ -56,12 +56,7 @@ object StreamingDedup {
     * with the doc id that first carried its content (itself if novel).
     * State per hash is a single long — O(distinct contents) total, the
     * same asymptotics as the batch canonical-id aggregation. */
-  def firstSeenStream(docs: Dataset[DocEvent]): Dataset[DedupOut] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(d => normHash(d.text))
-      .flatMapGroupsWithState[Long, DedupOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(firstSeenUpdate)
-  }
+  def firstSeenStream(docs: Dataset[DocEvent]): Dataset[DedupOut] = keyed.run(docs)
 
   /** The exact q30/q56 normalized-content md5, as the plain-Scala twin of
     * [[contentHash]] (same normalization, same digest — the streaming
@@ -70,22 +65,20 @@ object StreamingDedup {
     graft.text.TextHash.md5Hex(
       text.toLowerCase.replaceAll("[^a-z0-9 ]", " ").replaceAll(" +", " ").trim)
 
-  /** The per-key update body, extracted so
-    * [[StreamingStateErasure.firstSeenForgetting]] can compose the
+  /** The per-key declaration, shared with
+    * [[StreamingStateErasure.firstSeenForgetting]], which composes the
     * one-rule erasure semantics AROUND the unchanged survivor rule:
     * forgetting a hash's state drops the (possibly erased) canonical
     * pointer, so later identical content elects a FRESH survivor instead
-    * of resurrecting the erased doc's id. */
-  private[streaming] val firstSeenUpdate
-      : (String, Iterator[DocEvent], GroupState[Long]) => Iterator[DedupOut] =
-    (_: String, rows: Iterator[DocEvent], state: GroupState[Long]) => {
-      // arrival order within the batch: lowest doc id wins like q56
-      val sorted = rows.toSeq.sortBy(_.docId)
-      val canonical = state.getOption.getOrElse {
-        val c = sorted.head.docId
-        state.update(c)
-        c
-      }
-      sorted.iterator.map(d => DedupOut(d.docId, canonical, d.docId != canonical))
+    * of resurrecting the erased doc's id. Within a batch the lowest doc id
+    * wins, like q56. */
+  private[streaming] val keyed =
+    KeyedState[String, DocEvent, Long, DedupOut](d => normHash(d.text), OutputMode.Append(),
+        Some(Ordering.by[DocEvent, Long](_.docId))) {
+      (_, rows, state) =>
+        val docs = rows.buffered
+        if (!state.exists) state.update(docs.head.docId)
+        val canonical = state.get
+        docs.map(d => DedupOut(d.docId, canonical, d.docId != canonical))
     }
 }

@@ -2,12 +2,12 @@ package graft.streaming
 
 import graft.queries.QueryBase.pround
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming Page–Hinkley — q280's live twin: the sequential drift
   * detector maintained over a stream of per-(type, day) daily-mean rows
   * (the bounded aggregate the MV layer already lands per day) via
-  * `flatMapGroupsWithState`, emitting the monitor row after every day —
+  * [[KeyedState]], emitting the monitor row after every day —
   * the alarm feed a 100 TB pipeline watches instead of re-running the
   * batch scan.
   *
@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the batch q280 report (StreamingDriftSpec replays the real table and
   * asserts exact equality).
   *
-  * Ordering: days sort within each micro-batch; across batches it is
+  * Ordering: days are ordered within each micro-batch; across batches it is
   * arrival order, so a day-ordered feed (days arrive as they close)
   * reproduces the batch semantics exactly — the
   * [[StreamingEwma]]/[[SaxStreaming]] contract. */
@@ -39,31 +39,30 @@ object StreamingDrift {
   private val DeltaQ = graft.queries.RelQueries.PhDeltaQ
   private val LambdaQ = graft.queries.RelQueries.PhLambdaQ
 
-  def phStream(days: Dataset[DayMean]): Dataset[PhOut] = {
-    import days.sparkSession.implicits._
-    days.groupByKey(_.eventType)
-      .flatMapGroupsWithState[PhState, PhOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (et: String, rows: Iterator[DayMean], state: GroupState[PhState]) =>
-          var st = state.getOption.getOrElse(
-            PhState(0L, 0L, 0L, Long.MaxValue, 0L, -1L))
-          val out = rows.toSeq.sortBy(_.day).map { r =>
-            val n = st.n + 1
-            val cs = st.cs + r.mq
-            val qd = math.floor(r.mq.toDouble - cs.toDouble / n.toDouble
-              + 0.5).toLong - DeltaQ
-            val m = st.m + qd
-            val runmin = math.min(st.runmin, m)
-            val dev = m - runmin
-            val maxDev = math.max(st.maxDev, dev)
-            val alarmDay =
-              if (st.alarmDay >= 0L || dev <= LambdaQ) st.alarmDay else r.day
-            st = PhState(n, cs, m, runmin, maxDev, alarmDay)
-            PhOut(et, r.day, n, pround(dev.toDouble / 1.0e4, 4),
-              pround(maxDev.toDouble / 1.0e4, 4), alarmDay)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+  def phStream(days: Dataset[DayMean]): Dataset[PhOut] = keyed.run(days)
+
+  private val keyed =
+    KeyedState[String, DayMean, PhState, PhOut](_.eventType, OutputMode.Append(),
+        Some(Ordering.by[DayMean, Long](_.day))) {
+      (et, rows, state) =>
+        var st = state.getOption.getOrElse(
+          PhState(0L, 0L, 0L, Long.MaxValue, 0L, -1L))
+        val out = rows.map { r =>
+          val n = st.n + 1
+          val cs = st.cs + r.mq
+          val qd = math.floor(r.mq.toDouble - cs.toDouble / n.toDouble
+            + 0.5).toLong - DeltaQ
+          val m = st.m + qd
+          val runmin = math.min(st.runmin, m)
+          val dev = m - runmin
+          val maxDev = math.max(st.maxDev, dev)
+          val alarmDay =
+            if (st.alarmDay >= 0L || dev <= LambdaQ) st.alarmDay else r.day
+          st = PhState(n, cs, m, runmin, maxDev, alarmDay)
+          PhOut(et, r.day, n, pround(dev.toDouble / 1.0e4, 4),
+            pround(maxDev.toDouble / 1.0e4, 4), alarmDay)
+        }.toList
+        state.update(st)
+        out.iterator
+    }
 }

@@ -2,11 +2,11 @@ package graft.streaming
 
 import graft.queries.QueryBase.pround
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming truncated-EWMA — q192's live twin: the per-key
   * exponentially-weighted moving average maintained over an unbounded
-  * event stream via `flatMapGroupsWithState`, emitting the smoothed value
+  * event stream via [[KeyedState]], emitting the smoothed value
   * after every event (the monitoring-dashboard feed).
   *
   * State per key is the last ≤8 quantized values (one Array[Long] of at
@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * events table and asserts exact equality).
   *
   * Ordering matches the batch (ts, eventId) window order the way
-  * [[SaxStreaming.encodeStream]] does: rows sort within each micro-batch;
+  * [[SaxStreaming.encodeStream]] does: rows are ordered within each micro-batch;
   * across batches it is arrival order, so a time-ordered feed reproduces
   * the batch semantics exactly. At 100 TB the only shuffle is the
   * groupByKey on the series key.
@@ -35,33 +35,29 @@ object StreamingEwma {
   private val W = graft.queries.RelQueries.EwmaWq.toArray
   private val Scale = 10000.0
 
-  def ewmaStream(events: Dataset[EwmaEvent]): Dataset[EwmaOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(ewmaUpdate)
-  }
+  def ewmaStream(events: Dataset[EwmaEvent]): Dataset[EwmaOut] = keyed.run(events)
 
-  /** The per-key update body, extracted so
-    * [[StreamingStateErasure.ewmaStreamForgetting]] can compose the
+  /** The per-key declaration, shared with
+    * [[StreamingStateErasure.ewmaStreamForgetting]], which composes the
     * one-rule erasure semantics AROUND the unchanged weight algebra. */
-  private[streaming] val ewmaUpdate
-      : (Long, Iterator[EwmaEvent], GroupState[EwmaState]) => Iterator[EwmaOut] =
-    (userId: Long, rows: Iterator[EwmaEvent], state: GroupState[EwmaState]) => {
-      var recent = state.getOption.map(_.recent.toVector).getOrElse(Vector.empty)
-      val out = rows.toSeq.sortBy(e => (e.ts, e.eventId)).map { e =>
-        val vq = math.floor(e.value * Scale + 0.5).toLong
-        recent = (vq +: recent).take(W.length)
-        var num = 0L
-        var den = 0L
-        var k = 0
-        while (k < recent.length) {
-          num += W(k) * recent(k); den += W(k); k += 1
-        }
-        EwmaOut(userId, e.eventId, e.eventType,
-          pround(num.toDouble / (den.toDouble * Scale), 6))
-      }
-      state.update(EwmaState(recent.toArray))
-      out.iterator
+  private[streaming] val keyed =
+    KeyedState[Long, EwmaEvent, EwmaState, EwmaOut](_.userId, OutputMode.Append(),
+        Some(Ordering.by[EwmaEvent, Long](_.ts).orElseBy(_.eventId))) {
+      (userId, rows, state) =>
+        var recent = state.getOption.map(_.recent.toVector).getOrElse(Vector.empty)
+        val out = rows.map { e =>
+          val vq = math.floor(e.value * Scale + 0.5).toLong
+          recent = (vq +: recent).take(W.length)
+          var num = 0L
+          var den = 0L
+          var k = 0
+          while (k < recent.length) {
+            num += W(k) * recent(k); den += W(k); k += 1
+          }
+          EwmaOut(userId, e.eventId, e.eventType,
+            pround(num.toDouble / (den.toDouble * Scale), 6))
+        }.toList
+        state.update(EwmaState(recent.toArray))
+        out.iterator
     }
 }

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming event funnel — q156's live twin: the per-user first-touch
   * view → click → purchase stage timestamps maintained over an unbounded
-  * event stream via `flatMapGroupsWithState`, re-emitting a user's stage
+  * event stream via [[KeyedState]], re-emitting a user's stage
   * row whenever an event improves one of their three firsts (the live
   * conversion dashboard feed; the global n_view / n_view_click / n_funnel
   * rollup is one bounded aggregation over these per-user rows).
@@ -14,8 +14,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * purchase; MaxValue = unseen) plus an update revision — O(1) per key
   * regardless of stream length, checkpointed by the GroupState store like
   * [[SaxStreaming]]'s ring. The min-timestamp semantics are
-  * order-INDEPENDENT (min is commutative), so unlike the EWMA twin no
-  * intra-batch sort is needed and any arrival order converges to the
+  * order-INDEPENDENT (min is commutative), so unlike the EWMA twin it
+  * declares no intra-batch order and any arrival order converges to the
   * batch answer; the conversion flags evaluate the same strict
   * t1 < t2 < t3 comparisons as the batch q156.
   *
@@ -38,37 +38,32 @@ object StreamingFunnel {
 
   private val Unseen = Long.MaxValue
 
-  def funnelStream(events: Dataset[FunnelEvent]): Dataset[FunnelOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(funnelUpdate)
-  }
+  def funnelStream(events: Dataset[FunnelEvent]): Dataset[FunnelOut] = keyed.run(events)
 
-  /** The per-key update body, exposed so
-    * [[StreamingStateErasure.funnelStreamForgetting]] wraps the IDENTICAL
-    * algebra (one definition — the forgetting twin cannot drift). */
-  private[streaming] val funnelUpdate
-      : (Long, Iterator[FunnelEvent], GroupState[FunnelState]) => Iterator[FunnelOut] =
-    (userId: Long, rows: Iterator[FunnelEvent], state: GroupState[FunnelState]) => {
-      val s0 = state.getOption.getOrElse(FunnelState(Unseen, Unseen, Unseen, 0L))
-      var t1 = s0.t1; var t2 = s0.t2; var t3 = s0.t3
-      rows.foreach { e =>
-        e.eventType match {
-          case "view"     => if (e.ts < t1) t1 = e.ts
-          case "click"    => if (e.ts < t2) t2 = e.ts
-          case "purchase" => if (e.ts < t3) t3 = e.ts
-          case _          => ()
+  /** The per-key declaration, order-free (min commutes), shared with
+    * [[StreamingStateErasure.funnelStreamForgetting]] (one body — the
+    * forgetting twin cannot drift). */
+  private[streaming] val keyed =
+    KeyedState[Long, FunnelEvent, FunnelState, FunnelOut](_.userId, OutputMode.Update(), None) {
+      (userId, rows, state) =>
+        val s0 = state.getOption.getOrElse(FunnelState(Unseen, Unseen, Unseen, 0L))
+        var t1 = s0.t1; var t2 = s0.t2; var t3 = s0.t3
+        rows.foreach { e =>
+          e.eventType match {
+            case "view"     => if (e.ts < t1) t1 = e.ts
+            case "click"    => if (e.ts < t2) t2 = e.ts
+            case "purchase" => if (e.ts < t3) t3 = e.ts
+            case _          => ()
+          }
         }
-      }
-      if (t1 == s0.t1 && t2 == s0.t2 && t3 == s0.t3 && s0.rev > 0L)
-        Iterator.empty // nothing improved — no re-emission
-      else {
-        val s1 = FunnelState(t1, t2, t3, s0.rev + 1L)
-        state.update(s1)
-        def opt(v: Long): Option[Long] = if (v == Unseen) None else Some(v)
-        Iterator.single(FunnelOut(userId, s1.rev, opt(t1), opt(t2), opt(t3),
-          t1 < t2, t1 < t2 && t2 < t3))
-      }
+        if (t1 == s0.t1 && t2 == s0.t2 && t3 == s0.t3 && s0.rev > 0L)
+          Iterator.empty // nothing improved — no re-emission
+        else {
+          val s1 = FunnelState(t1, t2, t3, s0.rev + 1L)
+          state.update(s1)
+          def opt(v: Long): Option[Long] = if (v == Unseen) None else Some(v)
+          Iterator.single(FunnelOut(userId, s1.rev, opt(t1), opt(t2), opt(t3),
+            t1 < t2, t1 < t2 && t2 < t3))
+        }
     }
 }

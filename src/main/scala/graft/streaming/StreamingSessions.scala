@@ -1,12 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming gap sessionizer — the live producer for q264/q265's
   * interval-analytics family: per-user sessions (split on inactivity
   * gaps > `gapUs`) maintained over an unbounded event stream via
-  * `flatMapGroupsWithState`. Each micro-batch emits (Update mode) the
+  * [[KeyedState]]. Each micro-batch emits (Update mode) the
   * final extent of every session CLOSED inside the batch plus the
   * current extent of the open one; downstream, the per-day peak
   * concurrency / coverage rollup is the SAME day-clip + boundary +
@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * emission revision — O(1) per key regardless of stream length,
   * checkpointed by the GroupState store like [[SaxStreaming]]'s ring.
   * Gap splitting is arrival-ORDER-dependent (like [[StreamingEwma]],
-  * unlike the funnel's commutative mins), so rows are sorted by
+  * unlike the funnel's commutative mins), so the declaration orders rows by
   * (ts, eventId) inside each batch and the feed contract is event-time
   * ordered batches — in production, a watermark + event-time-ordered
   * replay of late data; the replay spec proves ordered replay converges
@@ -39,40 +39,34 @@ object StreamingSessions {
                               rev: Long, closed: Boolean)
 
   def sessionStream(events: Dataset[SpanEvent],
-                    gapUs: Long): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(sessionUpdate(gapUs))
-  }
+                    gapUs: Long): Dataset[SessionOut] = keyed(gapUs).run(events)
 
-  /** The per-key update body, exposed so
-    * [[StreamingStateErasure.sessionStreamForgetting]] wraps the
-    * IDENTICAL algebra (one definition — the forgetting twin cannot
-    * drift). */
-  private[streaming] def sessionUpdate(gapUs: Long)
-      : (Long, Iterator[SpanEvent], GroupState[SessionState]) => Iterator[SessionOut] =
-    (userId: Long, rows: Iterator[SpanEvent], state: GroupState[SessionState]) => {
-      val sorted = rows.toArray.sortBy(e => (e.ts, e.eventId))
-      var st = state.getOption.orNull
-      var rev = if (st == null) 0L else st.rev
-      val out = Seq.newBuilder[SessionOut]
-      sorted.foreach { e =>
-        if (st == null) st = SessionState(e.ts, e.ts, rev)
-        else if (e.ts - st.eUs > gapUs) {
-          // the old session can never extend again — emit its FINAL row
+  /** The per-key declaration, shared with
+    * [[StreamingStateErasure.sessionStreamForgetting]] (one body — the
+    * forgetting twin cannot drift). */
+  private[streaming] def keyed(gapUs: Long) =
+    KeyedState[Long, SpanEvent, SessionState, SessionOut](_.userId, OutputMode.Update(),
+        Some(Ordering.by[SpanEvent, Long](_.ts).orElseBy(_.eventId))) {
+      (userId, rows, state) =>
+        var st = state.getOption.orNull
+        var rev = if (st == null) 0L else st.rev
+        val out = Seq.newBuilder[SessionOut]
+        rows.foreach { e =>
+          if (st == null) st = SessionState(e.ts, e.ts, rev)
+          else if (e.ts - st.eUs > gapUs) {
+            // the old session can never extend again — emit its FINAL row
+            rev += 1
+            out += SessionOut(userId, st.sUs, st.eUs, rev, closed = true)
+            st = SessionState(e.ts, e.ts, rev)
+          } else if (e.ts > st.eUs) st = SessionState(st.sUs, e.ts, st.rev)
+        }
+        if (st != null) {
+          // current open session: re-emit its extent once per batch
           rev += 1
-          out += SessionOut(userId, st.sUs, st.eUs, rev, closed = true)
-          st = SessionState(e.ts, e.ts, rev)
-        } else if (e.ts > st.eUs) st = SessionState(st.sUs, e.ts, st.rev)
-      }
-      if (st != null) {
-        // current open session: re-emit its extent once per batch
-        rev += 1
-        st = SessionState(st.sUs, st.eUs, rev)
-        state.update(st)
-        out += SessionOut(userId, st.sUs, st.eUs, rev, closed = false)
-      }
-      out.result().iterator
+          st = SessionState(st.sUs, st.eUs, rev)
+          state.update(st)
+          out += SessionOut(userId, st.sUs, st.eUs, rev, closed = false)
+        }
+        out.result().iterator
     }
 }

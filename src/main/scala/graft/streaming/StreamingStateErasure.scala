@@ -1,16 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
+import graft.streaming.SaxStreaming.{SeriesEvent, WordOut}
+import graft.streaming.StreamingDebounce.{DebEvent, DebOut}
+import graft.streaming.StreamingDedup.{DedupOut, DocEvent}
+import graft.streaming.StreamingEwma.{EwmaEvent, EwmaOut}
+import graft.streaming.StreamingFunnel.{FunnelEvent, FunnelOut}
+import graft.streaming.StreamingSessions.{SessionOut, SpanEvent}
+import graft.streaming.StreamingSurvival.{SurvEvent, SurvOut}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Erasure for LIVE per-user state — the r17 verdict's #4: every at-rest
   * artifact now forgets, but a user-keyed stateful stream
   * ([[SaxStreaming]]'s ring, [[StreamingFunnel]]'s firsts, the
-  * sessions/survival/drift/acf modules — all the same
-  * `groupByKey(userId).flatMapGroupsWithState` shape) retained an erased
-  * user's GroupState forever. This module wires erasure REQUESTS into
-  * that shape as in-band control records and removes the key's state via
+  * sessions/survival/drift/acf modules — all one [[KeyedState]] shape)
+  * retained an erased user's GroupState forever. Each leg here feeds
+  * erasure REQUESTS into the module's own declaration through
+  * [[KeyedState.forgetting]], which removes the key's state via
   * `GroupState.remove()` — the checkpoint state store then physically
   * drops the key at the batch commit, exactly like a tombstoned at-rest
   * row leaving a compacted generation.
@@ -84,18 +90,20 @@ object StreamingStateErasure {
 
   /** How a stateful streaming module forgets. */
   sealed trait StateCoverage
-  /** `leg` = the forgetting entry point here; `body` = the module's
-    * extracted update function the leg must compose (qualified name, so
-    * the census spec can verify the leg wraps the REAL state algebra,
-    * not a copy). */
-  final case class ForgettingLeg(leg: String, body: String) extends StateCoverage
+  /** `leg` = the forgetting entry point here; `declaration` = the
+    * module's own [[KeyedState]], which the leg forgets through (so the
+    * census spec can verify the leg composes the REAL state algebra, not
+    * a copy). A declaration that takes stream parameters is referenced at
+    * one parameterization: every parameterization shares its body. */
+  final case class ForgettingLeg(leg: String, declaration: KeyedState[_, _, _, _])
+    extends StateCoverage
   /** No per-user data exists in the module's state; the stated reason
     * names where that user's erasure actually happens. */
   final case class ExemptState(reason: String) extends StateCoverage
 
   /** The live-state forgetting census — the q311/EstateCoverage idiom
     * for GroupState: every module in `graft.streaming` that retains
-    * cross-batch state (flatMapGroupsWithState / dropDuplicates*) is
+    * cross-batch state (a [[KeyedState]] declaration / dropDuplicates*) is
     * either wired to a forgetting leg here or exempt with a reason.
     * StateErasureCoverageSpec scans the sources and reddens the suite if
     * a new stateful module lands unclassified.
@@ -107,13 +115,14 @@ object StreamingStateErasure {
     * watermark, and the batch-side q56 survivor pass (already erasure-
     * governed at rest) is the durable record. */
   val stateCoverage: Map[String, StateCoverage] = Map(
-    "SaxStreaming" -> ForgettingLeg("saxEncodeForgetting", "SaxStreaming.encodeUpdate"),
-    "StreamingSessions" -> ForgettingLeg("sessionStreamForgetting", "StreamingSessions.sessionUpdate"),
-    "StreamingFunnel" -> ForgettingLeg("funnelStreamForgetting", "StreamingFunnel.funnelUpdate"),
-    "StreamingSurvival" -> ForgettingLeg("survivalStreamForgetting", "StreamingSurvival.survivalUpdate"),
-    "StreamingDebounce" -> ForgettingLeg("debounceStreamForgetting", "StreamingDebounce.debounceUpdate"),
-    "StreamingEwma" -> ForgettingLeg("ewmaStreamForgetting", "StreamingEwma.ewmaUpdate"),
-    "StreamingDedup" -> ForgettingLeg("firstSeenForgetting", "StreamingDedup.firstSeenUpdate"),
+    "SaxStreaming" -> ForgettingLeg("saxEncodeForgetting", SaxStreaming.keyed(4, 2, 4)),
+    "StreamingSessions" -> ForgettingLeg("sessionStreamForgetting",
+      StreamingSessions.keyed(graft.queries.RelQueries.SweepGapUs)),
+    "StreamingFunnel" -> ForgettingLeg("funnelStreamForgetting", StreamingFunnel.keyed),
+    "StreamingSurvival" -> ForgettingLeg("survivalStreamForgetting", StreamingSurvival.keyed),
+    "StreamingDebounce" -> ForgettingLeg("debounceStreamForgetting", StreamingDebounce.keyed),
+    "StreamingEwma" -> ForgettingLeg("ewmaStreamForgetting", StreamingEwma.keyed),
+    "StreamingDedup" -> ForgettingLeg("firstSeenForgetting", StreamingDedup.keyed),
     "StreamingDrift" -> ExemptState(
       "type-keyed Page–Hinkley moments aggregate daily means across users — " +
         "no cohort key or per-user value in state; user erasure happens at " +
@@ -130,165 +139,68 @@ object StreamingStateErasure {
     * signal handles the state that predates it. `keyCol` names the
     * stream side's key (the typed legs use `userId`), so the gate
     * composes directly upstream of a forgetting leg — a stream-static
-    * join below a flatMapGroupsWithState is a supported plan, proven
+    * join below a [[KeyedState]] is a supported plan, proven
     * live by the composed-wiring test in StreamingStateErasureSpec. */
   def erasureGate(events: DataFrame, erasedUsers: DataFrame,
                   keyCol: String = "user_id"): DataFrame =
     events.join(broadcast(erasedUsers.select(col("user_id"))),
       events(keyCol) === erasedUsers("user_id"), "left_anti")
 
-  /** The forgetting wrapper around any per-key stateful update function:
-    * `inner` is the module's existing (key, rows, state) body, untouched
-    * — forgetting composes AROUND the business logic, so every user-keyed
-    * module adopts it without re-deriving its state algebra. */
-  private def forgetting[K, E, S, O: Encoder](
-      keyed: KeyValueGroupedDataset[K, (Boolean, E)],
-      mode: OutputMode,
-      inner: (K, Iterator[E], GroupState[S]) => Iterator[O])(
-      implicit stateEnc: Encoder[S]): Dataset[O] =
-    keyed.flatMapGroupsWithState[S, O](mode, GroupStateTimeout.NoTimeout()) {
-      (k: K, rows: Iterator[(Boolean, E)], state: GroupState[S]) =>
-        val rs = rows.toSeq
-        if (rs.exists(_._1)) { // the forget wins the batch
-          if (state.exists) state.remove()
-          Iterator.empty
-        } else inner(k, rs.iterator.map(_._2), state)
-    }
+  /** A user-keyed leg's forget keys. */
+  private def users(forgets: Dataset[Forget]): Dataset[Long] =
+    forgets.map(_.userId)(Encoders.scalaLong)
 
-  // ---- SAX sliding-window leg ---------------------------------------------
+  /** [[SaxStreaming.encodeStream]] with the in-band forgetting channel:
+    * same ring/moments algebra, same arrival-order contract. */
+  def saxEncodeForgetting(events: Dataset[SeriesEvent], forgets: Dataset[Forget],
+                          n: Int, w: Int, c: Int): Dataset[WordOut] =
+    SaxStreaming.keyed(n, w, c).forgetting(events, users(forgets))
 
-  import SaxStreaming.{SaxState, SeriesEvent, WordOut}
+  /** [[StreamingSessions.sessionStream]] with the forgetting channel: the
+    * open session (the ONLY retained state) is dropped, so the cohort's
+    * in-flight span is never emitted again — the live sessionizer's GDPR
+    * contract. */
+  def sessionStreamForgetting(events: Dataset[SpanEvent], forgets: Dataset[Forget],
+                              gapUs: Long): Dataset[SessionOut] =
+    StreamingSessions.keyed(gapUs).forgetting(events, users(forgets))
 
-  /** [[SaxStreaming.encodeStream]] with an in-band forgetting channel:
-    * same ring/moments algebra, same arrival-order contract, plus the
-    * one-rule erasure semantics above. */
-  def saxEncodeForgetting(events: Dataset[SeriesEvent],
-                          forgets: Dataset[Forget],
-                          n: Int, w: Int, c: Int): Dataset[WordOut] = {
-    val ss = events.sparkSession; import ss.implicits._
-    val signals = events.map(e => (false, e))
-      .union(forgets.map(f =>
-        (true, SeriesEvent(f.userId, Long.MinValue, Long.MinValue, 0.0))))
-    forgetting[Long, SeriesEvent, SaxState, WordOut](
-      signals.groupByKey(_._2.userId), OutputMode.Append(),
-      SaxStreaming.encodeUpdate(n, w, c))
-  }
-
-  // ---- sessions leg --------------------------------------------------------
-
-  import StreamingSessions.{SessionOut, SessionState, SpanEvent}
-
-  /** [[StreamingSessions.sessionStream]] with the same in-band forgetting
-    * channel: the open session (the ONLY retained state) is dropped, so
-    * the cohort's in-flight span is never emitted again — the live
-    * sessionizer's GDPR contract. */
-  def sessionStreamForgetting(events: Dataset[SpanEvent],
-                              forgets: Dataset[Forget],
-                              gapUs: Long): Dataset[SessionOut] = {
-    val ss = events.sparkSession; import ss.implicits._
-    val signals = events.map(e => (false, e))
-      .union(forgets.map(f =>
-        (true, SpanEvent(f.userId, Long.MinValue, Long.MinValue))))
-    forgetting[Long, SpanEvent, SessionState, SessionOut](
-      signals.groupByKey(_._2.userId), OutputMode.Update(),
-      StreamingSessions.sessionUpdate(gapUs))
-  }
-
-  // ---- funnel leg ----------------------------------------------------------
-
-  import StreamingFunnel.{FunnelEvent, FunnelOut, FunnelState}
-
-  /** [[StreamingFunnel.funnelStream]] with the same in-band forgetting
-    * channel (order-independent min semantics untouched). */
+  /** [[StreamingFunnel.funnelStream]] with the forgetting channel
+    * (order-independent min semantics untouched). */
   def funnelStreamForgetting(events: Dataset[FunnelEvent],
-                             forgets: Dataset[Forget]): Dataset[FunnelOut] = {
-    val ss = events.sparkSession; import ss.implicits._
-    val signals = events.map(e => (false, e))
-      .union(forgets.map(f => (true, FunnelEvent(f.userId, Long.MinValue, ""))))
-    forgetting[Long, FunnelEvent, FunnelState, FunnelOut](
-      signals.groupByKey(_._2.userId), OutputMode.Update(),
-      StreamingFunnel.funnelUpdate)
-  }
+                             forgets: Dataset[Forget]): Dataset[FunnelOut] =
+    StreamingFunnel.keyed.forgetting(events, users(forgets))
 
-  // ---- survival leg ---------------------------------------------------------
-
-  import StreamingSurvival.{SurvEvent, SurvOut, SurvState}
-
-  /** [[StreamingSurvival.survivalStream]] with the same in-band forgetting
-    * channel: the user's last-event timestamp and revision are dropped, so
-    * no further gap closes against the erased history and the cohort's
-    * open (censored) interval is never re-emitted — the live Kaplan–Meier
+  /** [[StreamingSurvival.survivalStream]] with the forgetting channel: the
+    * user's last-event timestamp and revision are dropped, so no further
+    * gap closes against the erased history and the cohort's open
+    * (censored) interval is never re-emitted — the live Kaplan–Meier
     * feed's GDPR contract. */
   def survivalStreamForgetting(events: Dataset[SurvEvent],
-                               forgets: Dataset[Forget]): Dataset[SurvOut] = {
-    val ss = events.sparkSession; import ss.implicits._
-    val signals = events.map(e => (false, e))
-      .union(forgets.map(f =>
-        (true, SurvEvent(f.userId, Long.MinValue, Long.MinValue))))
-    forgetting[Long, SurvEvent, SurvState, SurvOut](
-      signals.groupByKey(_._2.userId), OutputMode.Append(),
-      StreamingSurvival.survivalUpdate)
-  }
+                               forgets: Dataset[Forget]): Dataset[SurvOut] =
+    StreamingSurvival.keyed.forgetting(events, users(forgets))
 
-  // ---- debounce leg ---------------------------------------------------------
-
-  import StreamingDebounce.{DebEvent, DebOut, DebState}
-
-  /** [[StreamingDebounce.debounceStream]] with the same in-band forgetting
-    * channel: the user's last-raw-event timestamp is dropped, so an
-    * ungated post-erasure event is judged as a FIRST event (kept), not
-    * against the erased history. */
+  /** [[StreamingDebounce.debounceStream]] with the forgetting channel: the
+    * user's last-raw-event timestamp is dropped, so an ungated post-erasure
+    * event is judged as a FIRST event (kept), not against the erased
+    * history. */
   def debounceStreamForgetting(events: Dataset[DebEvent],
-                               forgets: Dataset[Forget]): Dataset[DebOut] = {
-    val ss = events.sparkSession; import ss.implicits._
-    val signals = events.map(e => (false, e))
-      .union(forgets.map(f =>
-        (true, DebEvent(f.userId, Long.MinValue, Long.MinValue, "", 0.0))))
-    forgetting[Long, DebEvent, DebState, DebOut](
-      signals.groupByKey(_._2.userId), OutputMode.Append(),
-      StreamingDebounce.debounceUpdate)
-  }
+                               forgets: Dataset[Forget]): Dataset[DebOut] =
+    StreamingDebounce.keyed.forgetting(events, users(forgets))
 
-  // ---- EWMA leg -------------------------------------------------------------
-
-  import StreamingEwma.{EwmaEvent, EwmaOut, EwmaState}
-
-  /** [[StreamingEwma.ewmaStream]] with the same in-band forgetting
-    * channel: the user's recent-values ring is dropped, so a post-erasure
-    * value smooths from scratch rather than against erased history. */
+  /** [[StreamingEwma.ewmaStream]] with the forgetting channel: the user's
+    * recent-values ring is dropped, so a post-erasure value smooths from
+    * scratch rather than against erased history. */
   def ewmaStreamForgetting(events: Dataset[EwmaEvent],
-                           forgets: Dataset[Forget]): Dataset[EwmaOut] = {
-    val ss = events.sparkSession; import ss.implicits._
-    val signals = events.map(e => (false, e))
-      .union(forgets.map(f =>
-        (true, EwmaEvent(f.userId, Long.MinValue, Long.MinValue, "", 0.0))))
-    forgetting[Long, EwmaEvent, EwmaState, EwmaOut](
-      signals.groupByKey(_._2.userId), OutputMode.Append(),
-      StreamingEwma.ewmaUpdate)
-  }
+                           forgets: Dataset[Forget]): Dataset[EwmaOut] =
+    StreamingEwma.keyed.forgetting(events, users(forgets))
 
-  // ---- first-seen dedup leg (content-keyed) --------------------------------
-
-  import StreamingDedup.{DedupOut, DocEvent}
-
-  /** [[StreamingDedup.firstSeenStream]] with the same in-band forgetting
-    * channel, keyed by the normalized-CONTENT hash instead of a user id:
-    * the retained state is the canonical (first-seen) doc id for each
-    * content hash, which for an erased document is precisely a retained
-    * cohort key. Forgetting drops the hash's state, so later identical
-    * content elects a fresh survivor; the forget signal smuggles the
-    * target hash through the sentinel's `text` field (the key function
-    * dispatches on the signal flag, so data rows still hash their text). */
+  /** [[StreamingDedup.firstSeenStream]] with the forgetting channel, keyed
+    * by the normalized-CONTENT hash instead of a user id: the retained
+    * state is the canonical (first-seen) doc id for each content hash,
+    * which for an erased document is precisely a retained cohort key.
+    * Forgetting drops the hash's state, so later identical content elects
+    * a fresh survivor. */
   def firstSeenForgetting(docs: Dataset[DocEvent],
-                          forgets: Dataset[ForgetDoc]): Dataset[DedupOut] = {
-    val ss = docs.sparkSession; import ss.implicits._
-    val signals = docs.map(d => (false, d))
-      .union(forgets.map(f =>
-        (true, DocEvent(Long.MinValue, new java.sql.Timestamp(0L), f.hash))))
-    forgetting[String, DocEvent, Long, DedupOut](
-      signals.groupByKey(t =>
-        if (t._1) t._2.text else StreamingDedup.normHash(t._2.text)),
-      OutputMode.Append(),
-      StreamingDedup.firstSeenUpdate)
-  }
+                          forgets: Dataset[ForgetDoc]): Dataset[DedupOut] =
+    StreamingDedup.keyed.forgetting(docs, forgets.map(_.hash)(Encoders.STRING))
 }

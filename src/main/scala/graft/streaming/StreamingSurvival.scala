@@ -1,12 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming Kaplan–Meier feed — the survival family's live member (the
   * q290 batch report's twin, completing the ACF/drift/sessions pattern):
   * per-user inter-event gaps maintained over an unbounded event stream
-  * via `flatMapGroupsWithState`.
+  * via [[KeyedState]].
   *
   * The estimator needs two ingredient multisets ([[graft.queries
   * .RelQueries.kaplanMeierOf]]'s level frame is the shared surface):
@@ -24,8 +24,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State per user is ONE timestamp plus the emission revision — O(1)
   * per key regardless of stream length, checkpointed by the GroupState
   * store. Gap formation is arrival-order-dependent (the
-  * [[StreamingSessions]] contract): rows sort by (ts, eventId) inside
-  * each batch and the feed contract is event-time-ordered batches; the
+  * [[StreamingSessions]] contract): rows arrive in (ts, eventId) order
+  * inside each batch and the feed contract is event-time-ordered batches; the
   * replay spec proves ordered replay is bit-equal to the batch q290
   * report. At 100 TB the only shuffle is the groupByKey on user_id,
   * state is users-sized, and emissions are events-sized exactly once
@@ -42,39 +42,34 @@ object StreamingSurvival {
     * current last-event µs timestamp (the censoring ingredient). */
   final case class SurvOut(userId: Long, v: Long, rev: Long, closed: Boolean)
 
-  def survivalStream(events: Dataset[SurvEvent]): Dataset[SurvOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[SurvState, SurvOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(survivalUpdate)
-  }
+  def survivalStream(events: Dataset[SurvEvent]): Dataset[SurvOut] = keyed.run(events)
 
-  /** The per-key update body, extracted so
-    * [[StreamingStateErasure.survivalStreamForgetting]] can compose the
+  /** The per-key declaration, shared with
+    * [[StreamingStateErasure.survivalStreamForgetting]], which composes the
     * one-rule erasure semantics AROUND the unchanged gap algebra. */
-  private[streaming] val survivalUpdate
-      : (Long, Iterator[SurvEvent], GroupState[SurvState]) => Iterator[SurvOut] =
-    (userId: Long, rows: Iterator[SurvEvent], state: GroupState[SurvState]) => {
-      val sorted = rows.toArray.sortBy(e => (e.ts, e.eventId))
-      var st = state.getOption.orNull
-      var rev = if (st == null) 0L else st.rev
-      val out = Seq.newBuilder[SurvOut]
-      sorted.foreach { e =>
+  private[streaming] val keyed =
+    KeyedState[Long, SurvEvent, SurvState, SurvOut](_.userId, OutputMode.Append(),
+        Some(Ordering.by[SurvEvent, Long](_.ts).orElseBy(_.eventId))) {
+      (userId, rows, state) =>
+        var st = state.getOption.orNull
+        var rev = if (st == null) 0L else st.rev
+        val out = Seq.newBuilder[SurvOut]
+        rows.foreach { e =>
+          if (st != null) {
+            rev += 1
+            // equal-timestamp events close a 0-second gap, exactly like
+            // the batch lead() over the (ts, event_id) total order
+            out += SurvOut(userId, (e.ts - st.lastTs) / 1000000L, rev,
+              closed = true)
+          }
+          st = SurvState(e.ts, rev)
+        }
         if (st != null) {
           rev += 1
-          // equal-timestamp events close a 0-second gap, exactly like
-          // the batch lead() over the (ts, event_id) total order
-          out += SurvOut(userId, (e.ts - st.lastTs) / 1000000L, rev,
-            closed = true)
+          st = SurvState(st.lastTs, rev)
+          state.update(st)
+          out += SurvOut(userId, st.lastTs, rev, closed = false)
         }
-        st = SurvState(e.ts, rev)
-      }
-      if (st != null) {
-        rev += 1
-        st = SurvState(st.lastTs, rev)
-        state.update(st)
-        out += SurvOut(userId, st.lastTs, rev, closed = false)
-      }
-      out.result().iterator
+        out.result().iterator
     }
 }

@@ -64,7 +64,7 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(second == 0, s"the second run compiled $second classes (the first $first)")
   }
 
-  private val Root = java.nio.file.Paths.get("src/main/scala/graft/queries")
+  private val Root = "src/main/scala/graft/queries"
   private val Home = "QueryBase.scala"
 
   private val Patterns = Seq(
@@ -73,20 +73,12 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** (file, 1-based line, pattern name, text) of every pattern hit on a
     * non-comment line under [[Root]]. */
-  private def hits: Seq[(String, Int, String, String)] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(Root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-      .flatMap { f =>
-        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (l, i) if !Seq("//", "/*", "*").exists(l.trim.startsWith) => (l, i)
-        }.flatMap { case (l, i) =>
-          Patterns.collect { case (name, re) if re.findFirstIn(l).nonEmpty =>
-            (f.getFileName.toString, i + 1, name, l.trim)
-          }
-        }
-      }
-  }
+  private def hits: Seq[(String, Int, String, String)] =
+    for {
+      (f, n, l) <- SourceLines(Root)
+      (name, re) <- Patterns
+      if re.findFirstIn(l).nonEmpty
+    } yield (f, n, name, l.trim)
 
   test("the scan sees newSession() and conf.set( inside QueryBase") {
     val inHome = hits.filter(_._1 == Home).map(_._3).toSet

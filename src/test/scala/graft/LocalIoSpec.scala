@@ -20,7 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[SparkUtil.configure]] must commit micro-batches (offset log, commit
   * log, state store) and write parquet without starting a single OS
   * process, and without dropping any checksum. A JFR recording with only
-  * `jdk.ProcessStart` enabled counts the forks. Stock Hadoop without its
+  * `jdk.ProcessStart` enabled counts the forks, and a failure prints the
+  * top stack frames of each. Stock Hadoop without its
   * native library forks a `chmod` per created file and `.crc`, and the
   * FileContext checkpoint manager forks `readlink` four times per rename:
   * about 40 processes per micro-batch.
@@ -79,16 +80,27 @@ class LocalIoSpec extends AnyFunSuite with BeforeAndAfterAll {
       evs.sortBy(e => (e.ts, e.eventId)).map(e => e.eventId -> win.append(e.value))
     }
 
-  /** The command line of every process the JVM starts while `body` runs. */
-  private def processStarts(body: => Unit): Seq[String] = {
+  /** A process the JVM started: its command line and the top frames of
+    * the stack that started it. */
+  private case class Fork(command: String, frames: Seq[String])
+
+  /** Every process the JVM starts while `body` runs. The stack shows where
+    * a fork came from (checkpoint or parquet I/O, or the cleanup of a
+    * session an earlier suite left to the garbage collector) without a
+    * re-run. */
+  private def processStarts(body: => Unit): Seq[Fork] = {
     val jfr = Files.createTempFile("graft-localio-", ".jfr")
     val rec = new Recording()
     try {
-      rec.enable("jdk.ProcessStart")
+      rec.enable("jdk.ProcessStart").withStackTrace()
       rec.setDestination(jfr)
       rec.start()
       try body finally rec.stop()
-      RecordingFile.readAllEvents(jfr).asScala.toSeq.map(_.getString("command"))
+      RecordingFile.readAllEvents(jfr).asScala.toSeq.map { e =>
+        val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala.take(16))
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}:${f.getLineNumber}")
+        Fork(e.getString("command"), frames)
+      }
     } finally { rec.close(); Files.deleteIfExists(jfr) }
   }
 
@@ -104,7 +116,9 @@ class LocalIoSpec extends AnyFunSuite with BeforeAndAfterAll {
       events(1, 90).toDF().write.parquet(s"$dir/fresh/table")
     }
     assert(forks.size == 0, "process starts by command: " +
-      forks.groupBy(_.takeWhile(_ != ' ')).map { case (k, v) => s"$k x${v.size}" }.mkString(", "))
+      forks.groupBy(_.command.takeWhile(_ != ' ')).map { case (k, v) => s"$k x${v.size}" }
+        .mkString(", ") + "\n" + forks.map(f =>
+          s"${f.command}\n    at ${f.frames.mkString("\n    at ")}").mkString("\n"))
     assert(words("fresh").toMap == replay(events(1, 90)))
 
     val cp = new File(s"$dir/fresh/cp")

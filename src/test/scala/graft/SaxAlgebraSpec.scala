@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * lines are skipped, so a doc may still name them. Needs no SparkSession. */
 class SaxAlgebraSpec extends AnyFunSuite {
 
-  private val Root = java.nio.file.Paths.get("src/main/scala")
+  private val Root = "src/main/scala"
   private val Owners = Seq("graft/sax/", "graft/sql/")
   private val UdfHome = "SaxFunctions.scala"
 
@@ -23,26 +23,11 @@ class SaxAlgebraSpec extends AnyFunSuite {
     "- 'A'" -> """-\s*'A'""".r,
     "udf(" -> """\budf\(""".r)
 
-  /** (path under [[Root]], 1-based line, text) of every non-comment line. */
-  private def lines: Seq[(String, Int, String)] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(Root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-      .flatMap { f =>
-        val rel = Root.relativize(f).toString.replace('\\', '/')
-        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-          .map { case (l, i) => (rel, i + 1, l) }
-      }
-      .filterNot { case (_, _, l) =>
-        val t = l.trim
-        Seq("//", "/*", "*").exists(t.startsWith)
-      }
-  }
-
-  /** (pattern name, path, line, text) of every pattern hit. */
+  /** (pattern name, path under [[Root]], line, text) of every pattern hit
+    * on a non-comment line. */
   private def hits: Seq[(String, String, Int, String)] =
     for {
-      (f, n, l) <- lines
+      (f, n, l) <- SourceLines(Root)
       (name, re) <- Patterns
       if re.findFirstIn(l).nonEmpty
     } yield (name, f, n, l)

@@ -13,22 +13,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * instead of slipping in. Needs no SparkSession. */
 class ServePathSpec extends AnyFunSuite {
 
-  private val Root = java.nio.file.Paths.get("src/main/scala/graft/queries")
+  private val Root = "src/main/scala/graft/queries"
   private val Helper = "QueryBase.scala"
   private val HelperDef = "def probedCodes("
 
   private val CellIn = """col\(\s*"cell"\s*\)\s*\.isin\(""".r
 
-  /** (file name, 1-based line, text) of every line under [[Root]]. */
-  private def lines: Seq[(String, Int, String)] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(Root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-      .flatMap { f =>
-        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-          .map { case (l, i) => (f.getFileName.toString, i + 1, l) }
-      }
-  }
+  /** (file name, 1-based line, text) of every line under [[Root]],
+    * comment lines included. */
+  private def lines: Seq[(String, Int, String)] = SourceLines(Root, skip = Nil)
 
   /** Lines that prune by `cell IN` or anti-join on `cell` (a join whose
     * `"left_anti"` line or the line before it names `"cell"`). */

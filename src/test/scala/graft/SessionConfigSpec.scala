@@ -13,34 +13,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * example may still name a key. Needs no SparkSession. */
 class SessionConfigSpec extends AnyFunSuite {
 
-  private val Owner = java.nio.file.Paths.get("src/main/scala/graft/SparkUtil.scala")
+  private val Owner = "src/main/scala/graft/SparkUtil.scala"
+  private val Skip = SourceLines.Comments :+ "#"
 
   private val Setters = Seq(
     """--conf\s+"?([A-Za-z0-9_.]+)=""".r,
     """\.config\(\s*"([^"]+)"""".r,
     """conf\.set\(\s*"([^"]+)"""".r)
 
-  private def lines(f: java.nio.file.Path): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(f).asScala.toSeq
-  }
-
-  private def isComment(l: String): Boolean = {
-    val t = l.trim
-    Seq("//", "/*", "*", "#").exists(t.startsWith)
-  }
-
   /** The keys [[SparkUtil.configure]] sets. */
-  private def owned: Set[String] = lines(Owner).filterNot(isComment)
-    .flatMap(l => Setters(1).findAllMatchIn(l).map(_.group(1))).toSet
+  private def owned: Set[String] = SourceLines(Owner, skip = Skip)
+    .flatMap(l => Setters(1).findAllMatchIn(l._3).map(_.group(1))).toSet
 
-  private def files: Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
+  /** (path, 1-based line, text) of every non-comment line of every file
+    * under `src/main` and `tools/` but [[Owner]]. */
+  private def lines: Seq[(String, Int, String)] =
     Seq("src/main", "tools").flatMap { root =>
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_)).toSeq.sortBy(_.toString)
-    }.filterNot(_.normalize == Owner.normalize)
-  }
+      SourceLines(root, suffix = "", skip = Skip).map { case (f, n, l) => (s"$root/$f", n, l) }
+    }.filterNot(_._1 == Owner)
 
   test("the scan sees the keys SparkUtil.configure sets") {
     val keys = owned
@@ -53,10 +43,9 @@ class SessionConfigSpec extends AnyFunSuite {
   test("no file outside SparkUtil sets a key that configure sets") {
     val keys = owned
     val hits = for {
-      f <- files
-      (l, i) <- lines(f).zipWithIndex if !isComment(l)
+      (f, n, l) <- lines
       k <- Setters.flatMap(_.findAllMatchIn(l).map(_.group(1))) if keys(k)
-    } yield s"$f:${i + 1}: $k"
+    } yield s"$f:$n: $k"
     assert(hits.isEmpty,
       s"${hits.size} settings copied from SparkUtil.configure — build the " +
         s"session through configure instead:\n${hits.mkString("\n")}")

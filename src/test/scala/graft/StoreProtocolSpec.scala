@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * skipped, so a doc may still name them. Needs no SparkSession. */
 class StoreProtocolSpec extends AnyFunSuite {
 
-  private val Root = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+  private val Root = "src/main/scala/graft/streaming"
   private val Helper = "IdKeyedStore.scala"
 
   private val Internal =
@@ -21,22 +21,8 @@ class StoreProtocolSpec extends AnyFunSuite {
   private val Hook = """\bcompactEvery\s*\.""".r
 
   /** (file name, 1-based line, text) of every non-comment line under
-    * [[Root]]. */
-  private def lines: Seq[(String, Int, String)] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(Root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-      .flatMap { f =>
-        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-          .map { case (l, i) => (f.getFileName.toString, i + 1, l) }
-      }
-      .filterNot { case (_, _, l) =>
-        val t = l.trim
-        Seq("//", "/*", "*").exists(t.startsWith)
-      }
-  }
-
-  private def hits: Seq[(String, Int, String)] = lines.filter { case (_, _, l) =>
+    * [[Root]] that calls an internal or the hook. */
+  private def hits: Seq[(String, Int, String)] = SourceLines(Root).filter { case (_, _, l) =>
     Internal.findFirstIn(l).nonEmpty || Hook.findFirstIn(l).nonEmpty
   }
 
